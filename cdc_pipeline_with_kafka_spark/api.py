@@ -96,11 +96,6 @@ def count_by_category(articles: DataFrame) -> DataFrame:
     )
 
 
-def daily_stats(articles: DataFrame, days: int = 30) -> DataFrame:
-    """A11: per-day counts, newest first."""
-    return relational.daily_counts(articles, "stored_date", days)
-
-
 def trending(hourly_counts: DataFrame, as_of: str, limit: int = 20) -> DataFrame:
     """§3.2 read path as ONE set-oriented query: multi-window counts
     (incl. adjacent-previous windows) → 1h/6h velocities with the

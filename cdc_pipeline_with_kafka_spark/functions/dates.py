@@ -19,11 +19,6 @@ def hour_bucket(ts: Column) -> Column:
     return F.date_trunc("hour", ts)
 
 
-def minute_bucket(ts: Column) -> Column:
-    """F10: minute-grain bucket (replaces '%Y%m%d%H%M' timeline keys)."""
-    return F.date_trunc("minute", ts)
-
-
 def stored_date(ts: Column) -> Column:
     """F10: yyyyMMdd string form (the reference's CHAR(8) stored_date)."""
     return F.date_format(ts, "yyyyMMdd")

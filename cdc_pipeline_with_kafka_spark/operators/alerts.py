@@ -62,16 +62,6 @@ def surge_alerts(
     )
 
 
-def breakout_alerts(metrics: DataFrame) -> DataFrame:
-    """W10 python analyzer form: velocity_1h>10 ∧ z>2, or anomaly>0.8
-    (advanced_trend_analyzer.py:238-267).  Input needs velocity_1h,
-    zscore, anomaly columns (operators.trends)."""
-    breakout = (F.col("velocity_1h") > 10.0) & (F.col("zscore") > 2.0)
-    anomaly = F.col("anomaly") > 0.8
-    alert_type = F.when(breakout, F.lit("breakout")).when(anomaly, F.lit("anomaly"))
-    return metrics.withColumn("alert_type", alert_type).filter(F.col("alert_type").isNotNull())
-
-
 def recent_alerts(alerts: DataFrame, limit: int = 100, ts_col: str = "timestamp") -> DataFrame:
     """O3/O4: newest-N alert log read (Redis LTRIM 0..99 semantics,
     advanced_trend_analyzer.py:280-284)."""

@@ -61,13 +61,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """k-char shingle set of the normalized text (distinct)."""
-    norm = normalized_text(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(norm, 1, 10**9).substr(i, F.lit(k))))
-
-
 def token_ngrams(col: Column, n: int = 3) -> Column:
     """Word n-gram set (distinct) of the normalized text.
 

@@ -421,10 +421,6 @@ def _huff_lut(table: dict) -> tuple[int, list[int]]:
     return maxlen, lut
 
 
-def _extend(v: int, s: int) -> int:
-    return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
-
-
 def _jpeg_decode_pixels(payload: bytes):
     """Full baseline-JPEG (SOF0, Huffman) pixel decode in pure
     numpy/Python: marker parse → canonical Huffman entropy decode →

@@ -40,28 +40,6 @@ def windowed_count(
     )
 
 
-def windowed_collect(
-    df: DataFrame, ts_col: str, key_col: str, duration: str, payload_cols: list[str]
-) -> DataFrame:
-    """A2: tumbling window collect_list of payload structs per key
-    (AlertTopology.java:57-67).
-
-    Scale note: collect_list materializes the window's rows; bounded
-    only by window duration × per-key rate.  The alert path immediately
-    reduces it (A12), so prefer `breaking_word_stats` which fuses the
-    reduction and never materializes the list."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration).alias("w"), F.col(key_col))
-        .agg(F.collect_list(F.struct(*payload_cols)).alias("items"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            F.col(key_col),
-            F.col("items"),
-        )
-    )
-
-
 def session_window_counts(
     df: DataFrame, ts_col: str, key_col: str, gap: str = "30 minutes"
 ) -> DataFrame:
@@ -126,35 +104,6 @@ def sessionize(
         F.sum(new_flag)
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("long"),
-    )
-
-
-def base_minute_aggregate(df: DataFrame, ts_col: str, key_cols: list[str]) -> DataFrame:
-    """A3/A4 foundation: minute-grain counts per key — the single base
-    aggregate all coarser windows roll up from.  At scale, write this
-    partitioned by date(bucket) so rollup reads prune partitions."""
-    return df.groupBy(
-        F.date_trunc("minute", F.col(ts_col)).alias("bucket"),
-        *[F.col(k) for k in key_cols],
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def rollup_window(
-    base: DataFrame, key_cols: list[str], duration: str, bucket_col: str = "bucket"
-) -> DataFrame:
-    """A3: roll a fine-grain aggregate up to a coarser tumbling window
-    by summing counts — shuffles only aggregate rows, not raw events."""
-    return (
-        base.groupBy(
-            F.window(F.col(bucket_col), duration).alias("w"),
-            *[F.col(k) for k in key_cols],
-        )
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            *[F.col(k) for k in key_cols],
-            F.col("cnt"),
-        )
     )
 
 

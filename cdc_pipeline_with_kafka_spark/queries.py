@@ -886,7 +886,7 @@ FROM (
   ),
   sdc AS (
     -- DuckDB's RE2 regex has NO backreferences, so the adjacent-
-    -- repeat collapse is seven per-digit replaces (≡ (\d)\1+ → \1)
+    -- repeat collapse is seven per-digit replaces (≡ (\\d)\1+ → \1)
     SELECT doc_id, u, substr(u, 1, 1) AS first,
            regexp_replace(regexp_replace(regexp_replace(
            regexp_replace(regexp_replace(regexp_replace(
@@ -3257,22 +3257,6 @@ FROM (
 )
 
 
-def w5_trending_ranking(spark, sf_dir):
-    """W5: top-k by compound score (advanced_trend_analyzer.py:288-312)."""
-    return trends.trending_ranking(
-        _w4_metrics(spark, sf_dir), limit=3, key_col="event_type"
-    ).select("event_type", "compound_score")
-
-
-W5_SQL = (
-    _W4_CTE
-    + """
-SELECT event_type, compound_score FROM scored
-ORDER BY compound_score DESC, event_type ASC LIMIT 3
-"""
-)
-
-
 def w6_rank_change(spark, sf_dir):
     """W6: rank-change indicators between consecutive snapshots
     (realtime_keyword_aggregator.py:358-383)."""
@@ -5267,41 +5251,6 @@ FROM documents
 """
 
 
-def dedup_ngram_jaccard(spark, sf_dir):
-    """Near-dup pairs by UNIGRAM token-set Jaccard ≥ 0.8.
-
-    RETIRED from the driver registry: on natural corpora unigram token
-    sets degenerate toward all-pairs candidates, so gating this config
-    would imply a scale path it isn't.  The canonical gate is the
-    trigram variant (dedup_ngram_jaccard3); the production-shaped
-    unigram config requires `max_gram_df` (posting-list cap, bounded in
-    tests/test_dedup_similarity.py::test_jaccard_max_gram_df_caps_hot_grams).
-    Kept as an oracle-checkable micro-gate for pytest parity only."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(docs, threshold=0.8, n=1)
-
-
-DEDUP_JACCARD_SQL = """
-WITH grams AS (
-  SELECT doc_id AS id,
-         unnest(list_distinct(list_filter(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '), x -> x <> ''))) AS gram
-  FROM documents
-),
-sizes AS (SELECT id, count(*) AS set_size FROM grams GROUP BY id),
-shared AS (
-  SELECT a.id AS id_a, b.id AS id_b, count(*) AS shared
-  FROM grams a JOIN grams b ON a.gram = b.gram AND a.id < b.id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       round(CAST(shared AS DOUBLE) / (sa.set_size + sb.set_size - shared), 6) AS jaccard
-FROM shared
-JOIN sizes sa ON sa.id = id_a
-JOIN sizes sb ON sb.id = id_b
-WHERE shared * 1000000 >= 800000 * (sa.set_size + sb.set_size - shared)
-"""
-
-
 def dedup_ngram_jaccard3(spark, sf_dir):
     """Near-dup pairs by word-TRIgram Jaccard ≥ 0.8 — realistic
     selectivity (unigram sets on this synthetic corpus degenerate to
@@ -6550,13 +6499,6 @@ ranked AS (
 )
 SELECT query_id, vec_id, cos_sim, rnk FROM ranked WHERE rnk <= 10
 """
-
-
-def sim_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (exact self-join baseline at
-    test SF; the LSH-blocked variant is the 100 TB path)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_neardup_pairs(emb, threshold=0.75, exact=True)
 
 
 SIM_NEARDUP_SQL = """

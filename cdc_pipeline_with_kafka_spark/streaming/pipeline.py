@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as textfn
 from ..sources import cdc
+from . import store
 
 DEFAULT_WATERMARK = "10 minutes"
 
@@ -212,18 +213,6 @@ def wordcloud_query(keywords: DataFrame, window: str = "30 minutes", top_k: int 
     return win_ops.topk_per_window(flat, top_k, ["window_start"]).drop("rnk")
 
 
-def start_memory_query(df: DataFrame, name: str, trigger_seconds: int = 5, output_mode: str = "update"):
-    """Test/serving helper: memory sink with a processing-time trigger
-    (the reference's 5s stats cadence, main.py:534-549)."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
 def stream_stream_join(
     left: DataFrame,
     right: DataFrame,
@@ -336,55 +325,31 @@ def make_admit_shard_sink(
     as the ingest grain: per batch the corpus-side cost is a scan of
     the KB-per-doc sketch indexes, never the corpus text.
 
-    Crash safety: every output lands in a ``batch_id=N`` subdirectory
-    written with mode("overwrite"), so a checkpoint REPLAY of batch N
-    (after a crash partway through the four writes) overwrites its own
-    partial output instead of appending a second copy.  When loading
-    the indexes, rows from the CURRENT batch_id are excluded — a
-    replayed batch therefore admits against exactly the pre-batch
-    index state and cannot reject its own docs as duplicates of their
-    partially-written first attempt.  Replay is deterministic given
-    the same input batch, so the combination (exclude-own-batch read +
-    per-batch overwrite) gives effective exactly-once per path.
-
-    Index-load failures are NOT a cold start: only path-does-not-exist
-    means "first batch".  Any other read error (storage blip,
-    corrupt footer, permissions) raises and fails the batch so the
-    checkpoint retries it — silently admitting with corpus-level
-    dedup disabled would let duplicates into the corpus permanently.
+    Crash safety is the batch-dir store contract (SCALING.md
+    "Batch-dir store"): every output is a ``batch_id=N`` overwrite
+    dir, and the index reads exclude batch N's own dirs, so a replayed
+    batch admits against exactly the pre-batch index state and cannot
+    reject its own docs as duplicates of their partial first attempt.
+    Index-load failures other than the store's cold-start rule fail
+    the batch — silently admitting with corpus-level dedup disabled
+    would let duplicates into the corpus permanently.
 
     Optional passage tier: pass ``windows_path`` + ``span_k`` and each
     batch also strips corpus-known spans from its admitted docs
     (admit_shard stage 6) and appends the final-text window hashes --
     the streaming form of the incremental span index."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
     from ..operators.curation import admit_shard
 
     def sink(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-
-        def _load(path):
-            try:
-                df = spark.read.option("basePath", path).parquet(path)
-            except AnalysisException as exc:
-                msg = str(exc)
-                if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                    return None  # first batch: no index yet
-                raise
-            if not df.columns:
-                return None
-            if "batch_id" in df.columns:
-                # exclude this batch's own partial writes from a
-                # crashed earlier attempt (replay idempotency)
-                df = df.filter(F.col("batch_id") != batch_id).drop("batch_id")
-            return df
-
         out = admit_shard(
             batch_df,
-            index_sigs=_load(sigs_path),
-            index_hashes=_load(hashes_path),
-            index_windows=_load(windows_path) if windows_path is not None else None,
+            index_sigs=_other_batches(spark, sigs_path, batch_id),
+            index_hashes=_other_batches(spark, hashes_path, batch_id),
+            index_windows=(
+                _other_batches(spark, windows_path, batch_id)
+                if windows_path is not None else None
+            ),
             span_k=span_k,
             text_col=text_col, id_col=id_col, min_quality=min_quality,
             gopher_filter=gopher_filter,
@@ -400,20 +365,25 @@ def make_admit_shard_sink(
         # (read-your-own-writes).  localCheckpoint truncates lineage —
         # the pinned outputs no longer reference the index paths at all.
         pinned = {k: df.localCheckpoint(eager=True) for k, df in out.items()}
-
-        def _write(df, path):
-            # batch_id-scoped subdirectory + overwrite = idempotent replay
-            df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-        _write(pinned["sigs_delta"], sigs_path)
-        _write(pinned["hashes_delta"], hashes_path)
+        store.write(pinned["sigs_delta"], sigs_path, batch_id)
+        store.write(pinned["hashes_delta"], hashes_path, batch_id)
         if "windows_delta" in pinned and windows_path is not None:
-            _write(pinned["windows_delta"], windows_path)
-        _write(pinned["admitted"], corpus_path)
+            store.write(pinned["windows_delta"], windows_path, batch_id)
+        store.write(pinned["admitted"], corpus_path, batch_id)
         if rejected_path is not None:
-            _write(pinned["rejected"], rejected_path)
+            store.write(pinned["rejected"], rejected_path, batch_id)
 
     return sink
+
+
+def _other_batches(spark, path: str, batch_id: int):
+    """An admission index without batch `batch_id`'s own dirs (a
+    replay must not see its partial first attempt); None on a cold
+    start."""
+    df = store.read(spark, path)
+    if df is None:
+        return None
+    return df.filter(F.col("batch_id") != batch_id).drop("batch_id")
 
 
 def make_asof_enrich_sink(
@@ -437,15 +407,12 @@ def make_asof_enrich_sink(
     snapshots are aggregates, orders of magnitude smaller than raw
     history.
 
-    Crash safety matches the admission sink's contract: each batch
-    lands in a ``batch_id=N`` subdirectory with mode("overwrite"), so
-    a checkpoint REPLAY of a crashed batch overwrites its own partial
-    output instead of appending a second copy.  (A caveat the
-    admission sink doesn't have: the snapshot is re-read at replay
-    time, so exactly-once holds when the snapshot is
-    versioned/append-only over snap_ts — the as-of filter then picks
-    the same rows — which is the shape the aggregate tables here
-    have.)
+    Crash replay: the batch-dir store contract (SCALING.md "Batch-dir
+    store").  One caveat the admission sink doesn't have: the snapshot
+    is re-read at replay time, so exactly-once holds when the snapshot
+    is versioned/append-only over snap_ts — the as-of filter then
+    picks the same rows — which is the shape the aggregate tables here
+    have.
     """
     from ..operators.relational import asof_join
 
@@ -454,7 +421,7 @@ def make_asof_enrich_sink(
         enriched = asof_join(
             batch_df, snap, key_cols, stream_ts, snap_ts, value_cols
         )
-        enriched.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+        store.write(enriched, out_path, batch_id)
 
     return sink
 
@@ -477,35 +444,15 @@ def make_admit_assets_sink(
     N+1 admits against everything batch ≤ N admitted, and the corpus
     payload bytes are never re-read.
 
-    Crash safety is the make_admit_shard_sink contract verbatim:
-    batch_id-scoped overwrite subdirectories + exclude-own-batch index
-    reads ⇒ idempotent replay; index-load failures other than
-    path-does-not-exist fail the batch (silently admitting with dedup
-    disabled would poison the corpus permanently)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
+    Crash safety is the make_admit_shard_sink contract verbatim (the
+    batch-dir store, SCALING.md "Batch-dir store", with
+    exclude-own-batch index reads)."""
     from ..operators.multimodal import admit_assets
 
     def sink(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-
-        def _load(path):
-            try:
-                df = spark.read.option("basePath", path).parquet(path)
-            except AnalysisException as exc:
-                msg = str(exc)
-                if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                    return None  # first batch: no index yet
-                raise
-            if not df.columns:
-                return None
-            if "batch_id" in df.columns:
-                df = df.filter(F.col("batch_id") != batch_id).drop("batch_id")
-            return df
-
         out = admit_assets(
             batch_df,
-            index_fps=_load(fps_path),
+            index_fps=_other_batches(batch_df.sparkSession, fps_path, batch_id),
             max_hamming=max_hamming,
             id_col=id_col, type_col=type_col, payload_col=payload_col,
         )
@@ -513,14 +460,10 @@ def make_admit_assets_sink(
         # the first append (read-your-own-writes — see
         # make_admit_shard_sink)
         pinned = {k: df.localCheckpoint(eager=True) for k, df in out.items()}
-
-        def _write(df, path):
-            df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-        _write(pinned["fps_delta"], fps_path)
-        _write(pinned["admitted"], assets_path)
+        store.write(pinned["fps_delta"], fps_path, batch_id)
+        store.write(pinned["admitted"], assets_path, batch_id)
         if rejected_path is not None:
-            _write(pinned["rejected"], rejected_path)
+            store.write(pinned["rejected"], rejected_path, batch_id)
 
     return sink
 
@@ -538,8 +481,8 @@ def make_bm25_index_sink(
     the corpus statistics (df, n_docs, avgdl) are recomputed per query
     from the index, so appending a batch IS the whole index merge (the
     incremental ≡ full equivalence is held in pytest at boundary
-    cutoffs).  batch_id-scoped overwrite ⇒ idempotent crash replay,
-    the same contract as every other admission sink here.
+    cutoffs).  Crash replay: the batch-dir store contract (SCALING.md
+    "Batch-dir store").
 
     This maintains the SEARCH index; content admission (dedup,
     quality) stays make_admit_shard_sink's job — chain them by
@@ -558,9 +501,7 @@ def make_bm25_index_sink(
         postings = build_bm25_index(
             batch_df, text_col=text_col, id_col=id_col, hashed=hashed
         )
-        postings.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{postings_path}/batch_id={batch_id}"
-        )
+        store.write(postings.localCheckpoint(eager=True), postings_path, batch_id)
 
     return sink
 
@@ -577,14 +518,10 @@ def make_kmeans_state_sink(
     (operators/similarity.kmeans_update_distributed): each micro-batch
     is absorbed into a persisted integer cluster state; batch N's
     state is written as a full snapshot under ``batch_id=N``, computed
-    from the latest snapshot with batch_id < N.
-
-    Crash safety differs from the append-delta sinks: the state is a
-    running AGGREGATE, so replaying a batch against its own partial
-    write would double-count it.  Versioned full snapshots make replay
-    idempotent by construction — the replay recomputes batch N's
-    snapshot from batch N−1's and overwrites.  Snapshots are k rows
-    each; compact old batch_id dirs whenever convenient.
+    from the latest snapshot with batch_id < N — a running AGGREGATE
+    kept as versioned full snapshots, so a replay recomputes batch N's
+    snapshot from N−1's and overwrites (SCALING.md "Batch-dir store").
+    Snapshots are k rows each.
 
     Cold start: with no snapshot on disk, the first batch trains the
     initial centroids (`k` required, kmeans_train_distributed with
@@ -595,22 +532,8 @@ def make_kmeans_state_sink(
 
     def sink(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        state = None
-        try:
-            df = spark.read.option("basePath", state_path).parquet(state_path)
-            prior = df.filter(F.col("batch_id") < batch_id)
-            prev = prior.agg(F.max("batch_id")).collect()[0][0]
-            if prev is not None:
-                state = sim.kmeans_state_from_df(
-                    prior.filter(F.col("batch_id") == prev).drop("batch_id")
-                )
-        except AnalysisException as exc:
-            msg = str(exc)
-            if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-                raise  # storage blip ≠ cold start: fail the batch
-        if state is None:
+        prior = store.latest(spark, state_path, batch_id)
+        if prior is None:
             if k is None:
                 raise ValueError(
                     "no persisted state and no k for cold-start training"
@@ -626,16 +549,13 @@ def make_kmeans_state_sink(
             )
         else:
             assigned, state = sim.kmeans_update_distributed(
-                batch_df, state, id_col=id_col, vec_col=vec_col
+                batch_df, sim.kmeans_state_from_df(prior),
+                id_col=id_col, vec_col=vec_col,
             )
         pinned = assigned.localCheckpoint(eager=True)
-        sim.kmeans_state_df(spark, state).write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
+        store.write(sim.kmeans_state_df(spark, state), state_path, batch_id)
         if assignments_path is not None:
-            pinned.write.mode("overwrite").parquet(
-                f"{assignments_path}/batch_id={batch_id}"
-            )
+            store.write(pinned, assignments_path, batch_id)
 
     return sink
 
@@ -705,7 +625,7 @@ def make_components_sink(
     def sink(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if mode == "full":
-            labels = _latest_full_snapshot(spark, labels_path, batch_id)
+            labels = store.latest(spark, labels_path, batch_id)
         else:
             labels = read_component_labels(spark, labels_path, before=batch_id)
         if labels is None:
@@ -721,9 +641,7 @@ def make_components_sink(
                 id_a=id_a, id_b=id_b, algorithm=algorithm,
             )
         pinned = out.localCheckpoint(eager=True)
-        pinned.write.mode("overwrite").parquet(
-            f"{labels_path}/batch_id={batch_id}"
-        )
+        store.write(pinned, labels_path, batch_id)
         if auto_compact:
             _auto_compact_components(
                 spark, labels_path, batch_id,
@@ -768,97 +686,36 @@ def _auto_compact_components(
     os.replace(tmp, marker)
 
 
-def _latest_full_snapshot(spark, labels_path: str, batch_id: int | None):
-    """Latest full snapshot with batch_id < N (N=None ⇒ no bound), or
-    None on cold start.  'Latest' is decided by LISTING the partition
-    directories through the Hadoop FileSystem API (cluster-safe: any
-    Hadoop-visible URI), NOT by reading row values — an EMPTY latest
-    snapshot (a quiet batch: no pending rows, no in-window touches)
-    must be honored as the current state, where a row-value max would
-    silently fall back to a STALE non-empty snapshot (measured: the
-    release sink re-released parked rows).  A missing path is cold
-    start; every other listing failure raises through py4j and fails
-    the batch (storage blip ≠ cold start)."""
-    import re
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(labels_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    best = None
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and re.fullmatch(r"batch_id=\d+", name):
-            k = int(name.split("=")[1])
-            if (batch_id is None or k < batch_id) and (
-                best is None or k > best
-            ):
-                best = k
-    if best is None:
-        return None
-    return spark.read.parquet(f"{labels_path}/batch_id={best}")
-
-
 def read_component_labels(spark, labels_path: str, before: int | None = None):
     """Current (id, cluster_id) view of a delta-mode component table:
     last-writer-wins per node over the batch_id dirs (optionally only
     dirs < `before` — the replay-reconstruction read).  Works on
     full-mode tables too (the latest snapshot rows win per node).
     Returns None when no dirs qualify (cold start)."""
-    from pyspark.sql import Window
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        df = spark.read.option("basePath", labels_path).parquet(labels_path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-            raise
-        return None
-    if before is not None:
+    df = store.read(spark, labels_path)
+    if df is not None and before is not None:
         df = df.filter(F.col("batch_id") < before)
-    if df.limit(1).count() == 0:
+    if df is None or df.limit(1).count() == 0:
         return None
-    w = Window.partitionBy("id").orderBy(F.col("batch_id").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("id", "cluster_id")
-    )
+    return _lww_labels(df)
+
+
+def _lww_labels(rows):
+    return store.last_per_key(rows, ["id"]).select("id", "cluster_id")
 
 
 def compact_component_labels(
     spark, labels_path: str, upto_batch: int
 ) -> int:
     """Collapse all component-label dirs with batch_id ≤ `upto_batch`
-    into one last-writer-wins dir at ``batch_id=<upto_batch>`` and
+    into one last-writer-wins dir (under the highest compacted id) and
     delete the older dirs — bounds the delta-mode reconstruction read
     (and trims full-mode history).  ONLY compact batches the stream
     has committed past (foreachBatch replays at most the newest
     uncommitted batch, so upto_batch ≤ last-committed − 1 is always
     safe).  Local filesystem only (loud ValueError otherwise).
     Returns the compacted row count."""
-    import os
-    import re
-    import shutil
-
-    _assert_local_store(labels_path, "compact_component_labels")
-    dirs = [
-        d for d in os.listdir(labels_path)
-        if re.fullmatch(r"batch_id=\d+", d)
-        and int(d.split("=")[1]) <= upto_batch
-    ]
-    if not dirs:
-        return 0
-    merged = read_component_labels(spark, labels_path, before=upto_batch + 1)
-    tmp = os.path.join(labels_path, "._compact_tmp")
-    merged.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    for d in dirs:
-        shutil.rmtree(os.path.join(labels_path, d))
-    os.rename(tmp, os.path.join(labels_path, f"batch_id={upto_batch}"))
-    return n
+    return store.compact(spark, labels_path, upto_batch, _lww_labels)
 
 
 def make_profile_sink(
@@ -871,18 +728,16 @@ def make_profile_sink(
     sketch.table_profile) appends under ``batch_id=N`` — the streaming
     face of the delivery-validation report, so null bursts and
     cardinality collapses surface per batch instead of at the next
-    full-table audit.  Profile rows are per-batch independent ⇒
-    batch_id-scoped overwrite is idempotent crash replay (the
-    admission-sink contract).  Chain AFTER parse/quarantine and BEFORE
+    full-table audit.  Profile rows are per-batch independent, so
+    crash replay is the batch-dir store contract (SCALING.md
+    "Batch-dir store").  Chain AFTER parse/quarantine and BEFORE
     heavier admission sinks; reading the profile table back gives a
     time series per column."""
     from ..operators.sketch import table_profile
 
     def sink(batch_df, batch_id: int) -> None:
         prof = table_profile(batch_df, cols=cols, approx_distinct=approx_distinct)
-        prof.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{profile_path}/batch_id={batch_id}"
-        )
+        store.write(prof.localCheckpoint(eager=True), profile_path, batch_id)
 
     return sink
 
@@ -905,8 +760,8 @@ def make_cms_sink(
     pre-flight, no key-distinct shuffle ever.
 
     Per-batch write is ≤ depth·width rows regardless of batch size
-    (usually far less).  batch_id-scoped overwrite ⇒ idempotent crash
-    replay (the admission-sink contract).  Width/depth/salt are part
+    (usually far less).  Crash replay: the batch-dir store contract
+    (SCALING.md "Batch-dir store").  Width/depth/salt are part
     of the PATH's layout contract — never mix parameters under one
     path (bucket ids from different widths would sum nonsense);
     `read_cms_sketch` cannot detect the mix, so treat a parameter
@@ -917,9 +772,7 @@ def make_cms_sink(
         part = cms_key_partials(
             batch_df, key_col, width=width, depth=depth, salt=salt
         )
-        part.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{sketch_path}/batch_id={batch_id}"
-        )
+        store.write(part.localCheckpoint(eager=True), sketch_path, batch_id)
 
     return sink
 
@@ -965,10 +818,8 @@ def make_scd2_sink(
     history is the last-writer-wins merge per (key, effective_from)
     over the batch dirs (`read_scd2_history`) — a closed re-emission
     supersedes its open original from an earlier batch.  Crash
-    replay is the components-delta contract: a replayed batch
-    reconstructs the prior view from dirs < N only and OVERWRITES
-    its own dir, so replay is byte-identical and double-application
-    impossible.
+    replay is the batch-dir store contract (SCALING.md "Batch-dir
+    store"): the prior view comes from dirs < N only.
 
     Correctness contract (pinned in tests): with `order_cols`
     nondecreasing per key ACROSS batches (CDC offset monotonicity —
@@ -1012,9 +863,7 @@ def make_scd2_sink(
                 .drop("_close")
             )
             out = closed.unionByName(batch_hist)
-        out.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{history_path}/batch_id={batch_id}"
-        )
+        store.write(out.localCheckpoint(eager=True), history_path, batch_id)
 
     return sink
 
@@ -1030,61 +879,27 @@ def read_scd2_history(
     (optionally only dirs < `before` — the sink's replay-
     reconstruction read).  Returns None when no dirs qualify (cold
     start)."""
-    from pyspark.sql import Window
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        df = spark.read.option("basePath", history_path).parquet(history_path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-            raise  # storage blip ≠ cold start: fail the batch
-        return None
-    if before is not None:
+    df = store.read(spark, history_path)
+    if df is not None and before is not None:
         df = df.filter(F.col("batch_id") < before)
-    if df.limit(1).count() == 0:
+    if df is None or df.limit(1).count() == 0:
         return None
-    w = Window.partitionBy(*key_cols, "effective_from").orderBy(
-        F.col("batch_id").desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "batch_id")
-    )
+    return store.last_per_key(df, [*key_cols, "effective_from"])
 
 
 def compact_scd2_history(
     spark, history_path: str, key_cols: list[str], upto_batch: int
 ) -> int:
     """Collapse all SCD2 history dirs with batch_id ≤ `upto_batch`
-    into one last-writer-wins dir at ``batch_id=<upto_batch>`` and
+    into one last-writer-wins dir (under the highest compacted id) and
     delete the older dirs — bounds the sink's reconstruction read
-    (the components-compaction contract: only compact batches the
-    stream has committed past).  Local filesystem only (loud
-    ValueError otherwise).  Returns the compacted row count."""
-    import os
-    import re
-    import shutil
-
-    _assert_local_store(history_path, "compact_scd2_history")
-    dirs = [
-        d for d in os.listdir(history_path)
-        if re.fullmatch(r"batch_id=\d+", d)
-        and int(d.split("=")[1]) <= upto_batch
-    ]
-    if not dirs:
-        return 0
-    merged = read_scd2_history(
-        spark, history_path, key_cols, before=upto_batch + 1
+    (only compact batches the stream has committed past).  Local
+    filesystem only (loud ValueError otherwise).  Returns the
+    compacted row count."""
+    return store.compact(
+        spark, history_path, upto_batch,
+        lambda rows: store.last_per_key(rows, [*key_cols, "effective_from"]),
     )
-    tmp = os.path.join(history_path, "._compact_tmp")
-    merged.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    for d in dirs:
-        shutil.rmtree(os.path.join(history_path, d))
-    os.rename(tmp, os.path.join(history_path, f"batch_id={upto_batch}"))
-    return n
 
 
 def make_dq_sink(
@@ -1097,8 +912,8 @@ def make_dq_sink(
     """foreachBatch DELIVERY GATE: every micro-batch runs the named
     data-quality contract (`operators.sketch.validate_rules` — one
     single-aggregate scan) and writes the per-rule report under
-    ``batch_id=N`` (idempotent batch-scoped overwrite, the profile-
-    sink contract).  What happens to a failing batch is the policy
+    ``batch_id=N`` (the batch-dir store, SCALING.md "Batch-dir
+    store").  What happens to a failing batch is the policy
     knob every ingestion pipeline needs spelled out:
 
     - ``on_fail='report'``  — record and continue (monitoring only);
@@ -1123,9 +938,7 @@ def make_dq_sink(
 
     def sink(batch_df, batch_id: int) -> None:
         report = validate_rules(batch_df, rules).localCheckpoint(eager=True)
-        report.write.mode("overwrite").parquet(
-            f"{report_path}/batch_id={batch_id}"
-        )
+        store.write(report, report_path, batch_id)
         failed = [r["rule"] for r in report.collect() if not r["passed"]]
         if on_fail == "fail" and failed:
             raise ValueError(
@@ -1136,10 +949,7 @@ def make_dq_sink(
             bad = F.lit(False)
             for expr in rules.values():
                 bad = bad | ~F.coalesce(F.expr(expr), F.lit(False))
-            quarantined = batch_df.filter(bad)
-            quarantined.write.mode("overwrite").parquet(
-                f"{quarantine_path}/batch_id={batch_id}"
-            )
+            store.write(batch_df.filter(bad), quarantine_path, batch_id)
             out = batch_df.filter(~bad)
         if downstream is not None:
             downstream(out, batch_id)
@@ -1269,15 +1079,14 @@ def make_drift_sink(
         batch_counts = {r[0]: int(r[1]) for r in got}
         d_ppm, n_a, n_b, at_v = ks_core(ref_counts, batch_counts)
         breached = d_ppm > threshold_ppm
-        batch_df.sparkSession.createDataFrame(
+        report = batch_df.sparkSession.createDataFrame(
             [(n_a, n_b, d_ppm,
               None if at_v is None else str(at_v),
               threshold_ppm, breached)],
             "n_ref long, n_batch long, d_ppm long, at_value string, "
             "threshold_ppm long, breached boolean",
-        ).write.mode("overwrite").parquet(
-            f"{report_path}/batch_id={batch_id}"
         )
+        store.write(report, report_path, batch_id)
         if breached and on_breach == "fail":
             raise ValueError(
                 f"distribution drift in batch {batch_id}: "
@@ -1354,9 +1163,7 @@ def make_lateness_sink(
             F.col("q_ppm").cast("long").alias("q_ppm"),
             F.col("quantile_value").cast("long").alias("lag_q_us"),
         )
-        base.unionByName(qs).write.mode("overwrite").parquet(
-            f"{report_path}/batch_id={batch_id}"
-        )
+        store.write(base.unionByName(qs), report_path, batch_id)
         if downstream is not None:
             downstream(batch_df, batch_id)
 
@@ -1382,17 +1189,14 @@ def make_comoment_sink(
     Incremental ≡ one-shot is a THEOREM here, not a tolerance: the
     merged sums are bit-identical to the single-pass sums, so the
     fitted doubles are too (pytest-pinned).  Write is O(groups in
-    batch); replay overwrites its own batch_id directory (idempotent,
-    the profile-sink contract).  Compaction: `compact_comoments`
-    folds all batch directories into one, invariant under timing."""
+    batch); crash replay is the batch-dir store contract (SCALING.md
+    "Batch-dir store").  Compaction: `compact_comoments` folds all
+    batch directories into one, invariant under timing."""
     from ..operators.stats import ols_comoments
 
     def sink(batch_df, batch_id: int) -> None:
-        ols_comoments(
-            batch_df, x_col, y_col, group_cols, micro
-        ).write.mode("overwrite").parquet(
-            f"{table_path}/batch_id={batch_id}"
-        )
+        comoments = ols_comoments(batch_df, x_col, y_col, group_cols, micro)
+        store.write(comoments, table_path, batch_id)
 
     return sink
 
@@ -1408,24 +1212,19 @@ def read_comoments(spark, table_path: str, group_cols: list[str]):
     )
 
 
-def compact_comoments(spark, table_path: str, group_cols: list[str]) -> None:
+def compact_comoments(spark, table_path: str, group_cols: list[str]) -> int:
     """Fold all batch directories into a single ``batch_id=-1``
-    segment (exact merge, so compaction NEVER changes any readable
-    number — the components-sink compaction contract).  Local
-    filesystem only (loud ValueError otherwise)."""
-    import shutil
+    segment (exact additive merge, so compaction NEVER changes any
+    readable number).  The merged segment is written before any
+    directory is deleted.  Local filesystem only (loud ValueError
+    otherwise).  Returns the compacted row count."""
+    from ..operators.stats import merge_comoments
 
-    _assert_local_store(table_path, "compact_comoments")
-    merged = read_comoments(spark, table_path, group_cols)
-    rows = merged.collect()
-    import os
-
-    for d in os.listdir(table_path):
-        if d.startswith("batch_id="):
-            shutil.rmtree(os.path.join(table_path, d))
-    spark.createDataFrame(rows, merged.schema).write.mode(
-        "overwrite"
-    ).parquet(f"{table_path}/batch_id=-1")
+    return store.compact(
+        spark, table_path, None,
+        lambda rows: merge_comoments(rows, group_cols),
+        into=-1,
+    )
 
 
 def make_ewma_sink(
@@ -1450,8 +1249,8 @@ def make_ewma_sink(
     from its position; route late data through a watermarked upstream
     if that matters.  Replay: seeding EXCLUDES states with
     batch_id ≥ the replayed id, so re-running the newest batch is
-    byte-identical (batch_id-scoped overwrite, the admission-sink
-    contract).  N-batch incremental ≡ one-shot `trends.ewma` on the
+    byte-identical (the batch-dir store contract, SCALING.md
+    "Batch-dir store").  N-batch incremental ≡ one-shot `trends.ewma` on the
     concatenated stream is pytest-pinned."""
     if not 0 < alpha_ppm <= 1_000_000:
         raise ValueError("alpha_ppm must be in (0, 1e6]")
@@ -1465,9 +1264,7 @@ def make_ewma_sink(
             batch_df, keys, order, value_col, alpha_ppm, state=seed
         )
 
-    return _make_smoother_sink(
-        out_path, keys, order, state_cols, "ewma_batch_id", smooth
-    )
+    return _make_smoother_sink(out_path, keys, order, state_cols, smooth)
 
 
 def _make_smoother_sink(
@@ -1475,58 +1272,32 @@ def _make_smoother_sink(
     keys: list[str],
     order: list[str],
     state_cols: list[str],
-    batch_col: str,
     smooth,
 ):
-    """Shared scaffolding of the ewma/holt maintenance sinks: read
-    the latest per-key state strictly BEFORE this batch_id (replay
+    """Shared scaffolding of the ewma/holt maintenance sinks: seed
+    from each key's latest state strictly BEFORE this batch_id (replay
     safety), hand `smooth(batch_df, seed_or_None)` the batch, write
-    smoothed rows and the per-key last-row states under batch_id
-    dirs (idempotent overwrite)."""
+    the smoothed rows and the per-key last-row states to the
+    ``rows/`` and ``state/`` batch-dir stores.  A state store that
+    fails to read for any reason but the store's cold-start rule
+    fails the batch: seeding cold would silently restart every key."""
+    from pyspark.sql import Window
 
     def sink(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch_df.sparkSession
-        try:
-            states = spark.read.parquet(f"{out_path}/state")
-            seed = (
-                states.filter(F.col(batch_col) < int(batch_id))
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy(*keys).orderBy(
-                            F.col(batch_col).desc()
-                        )
-                    ),
-                )
-                .filter(F.col("_rn") == 1)
-                .select(*keys, *state_cols)
-            )
-        except Exception:
-            seed = None
+        states = store.read(batch_df.sparkSession, f"{out_path}/state")
+        seed = None if states is None else store.last_per_key(
+            states.filter(F.col("batch_id") < batch_id), keys
+        ).select(*keys, *state_cols)
         smoothed = smooth(batch_df, seed).localCheckpoint(eager=True)
-        smoothed.write.mode("overwrite").parquet(
-            f"{out_path}/rows/batch_id={batch_id}"
-        )
+        store.write(smoothed, f"{out_path}/rows", batch_id)
+        last = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order])
         new_state = (
-            smoothed.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy(*keys).orderBy(
-                        *[F.col(c).desc() for c in order]
-                    )
-                ),
-            )
+            smoothed.withColumn("_rn", F.row_number().over(last))
             .filter(F.col("_rn") == 1)
-            .select(
-                *keys, *state_cols,
-                F.lit(int(batch_id)).alias(batch_col),
-            )
+            .select(*keys, *state_cols)
         )
-        new_state.localCheckpoint(eager=True).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/state/batch_id={batch_id}")
+        new_state = new_state.localCheckpoint(eager=True)
+        store.write(new_state, f"{out_path}/state", batch_id)
 
     return sink
 
@@ -1573,8 +1344,7 @@ def make_holt_sink(
         )
 
     return _make_smoother_sink(
-        out_path, keys, order, ["level_micro", "trend_micro"],
-        "holt_batch_id", smooth,
+        out_path, keys, order, ["level_micro", "trend_micro"], smooth
     )
 
 
@@ -1583,54 +1353,22 @@ def compact_smoother_state(
     out_path: str,
     key_cols: list[str],
     upto_batch: int,
-    batch_col: str,
 ) -> int:
     """Collapse a smoother sink's state dirs (make_ewma_sink /
     make_holt_sink) with batch_id ≤ `upto_batch` into ONE dir holding
     each key's latest state — the seeding read scans every state dir,
     so an uncompacted long stream pays O(batches) there (the same
     write-amplification class the components/SCD2 sinks compact
-    away).  `batch_col` is 'ewma_batch_id' or 'holt_batch_id'.  Only
-    compact batches the stream has committed past (replay of batch N
-    must still find state < N: the merged dir keeps batch ids as
-    written, so a replayed batch seeds identically).  Returns the
-    compacted row count (= distinct keys seen).  Local filesystem
-    only (loud ValueError otherwise)."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import Window
-
-    state_path = f"{out_path}/state"
-    _assert_local_store(state_path, "compact_smoother_state")
-    dirs = [
-        d for d in os.listdir(state_path)
-        if re.fullmatch(r"batch_id=\d+", d)
-        and int(d.split("=")[1]) <= upto_batch
-    ]
-    if not dirs:
-        return 0
+    away).  Only compact batches the stream has committed past (the
+    merged dir sits under the highest compacted id, so a replayed
+    batch seeds identically).  Returns the compacted row count (=
+    distinct keys seen).  Local filesystem only (loud ValueError
+    otherwise)."""
     keys = list(key_cols)
-    merged = (
-        spark.read.parquet(*[os.path.join(state_path, d) for d in dirs])
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(*keys).orderBy(F.col(batch_col).desc())
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint(eager=True)
+    return store.compact(
+        spark, f"{out_path}/state", upto_batch,
+        lambda rows: store.last_per_key(rows, keys),
     )
-    tmp = os.path.join(state_path, "._compact_tmp")
-    merged.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    for d in dirs:
-        shutil.rmtree(os.path.join(state_path, d))
-    os.rename(tmp, os.path.join(state_path, f"batch_id={upto_batch}"))
-    return n
 
 
 def make_attribution_sink(
@@ -1675,12 +1413,7 @@ def make_attribution_sink(
         spark = batch_df.sparkSession
         cols = [*keys, id_col, ts_col, type_col]
         batch_slim = batch_df.select(*cols)
-        # cluster-safe latest-touches read (basePath partition filter;
-        # PATH_NOT_FOUND-only cold start — a swallowed storage blip
-        # here would silently drop cross-batch touch credit)
-        prior = _latest_full_snapshot(
-            spark, f"{out_path}/touches", int(batch_id)
-        )
+        prior = store.latest(spark, f"{out_path}/touches", batch_id)
         full = (
             batch_slim if prior is None
             else prior.select(*cols).unionByName(batch_slim)
@@ -1691,9 +1424,7 @@ def make_attribution_sink(
         )
         # conversions are batch-local: prior stores hold TOUCHES only
         rows = attributed.localCheckpoint(eager=True)
-        rows.write.mode("overwrite").parquet(
-            f"{out_path}/rows/batch_id={batch_id}"
-        )
+        store.write(rows, f"{out_path}/rows", batch_id)
         wm = full.agg(
             F.max(F.unix_micros(F.col(ts_col).cast("timestamp")))
             .alias("m")
@@ -1706,9 +1437,8 @@ def make_attribution_sink(
                 >= F.lit(int(floor_us))
             )
         )
-        new_store.localCheckpoint(eager=True).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/touches/batch_id={batch_id}")
+        new_store = new_store.localCheckpoint(eager=True)
+        store.write(new_store, f"{out_path}/touches", batch_id)
 
     return sink
 
@@ -1761,14 +1491,8 @@ def make_coreness_sink(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        prev = _read_batch_dirs(spark, f"{out_path}/edges", before=batch_id)
-        all_edges = (
-            batch_edges if prev is None
-            else prev.unionByName(batch_edges).distinct()
-        )
-        prior = _latest_labels_snapshot(
-            spark, f"{out_path}/labels", before=batch_id
-        )
+        all_edges = _edges_with(spark, out_path, batch_edges, batch_id)
+        prior = store.latest(spark, f"{out_path}/labels", batch_id)
         if prior is None:
             labels = graph_ops.coreness_hindex(
                 all_edges, "src", "dst", max_rounds=max_rounds
@@ -1779,60 +1503,30 @@ def make_coreness_sink(
                 prior=prior, inserted_edges=batch_edges.count(),
                 max_rounds=max_rounds,
             )
-        labels.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{out_path}/labels/batch_id={batch_id}"
-        )
-        batch_edges.write.mode("overwrite").parquet(
-            f"{out_path}/edges/batch_id={batch_id}"
-        )
+        store.write(labels.localCheckpoint(eager=True), f"{out_path}/labels", batch_id)
+        store.write(batch_edges, f"{out_path}/edges", batch_id)
 
     return sink
 
 
-def _read_batch_dirs(spark, path: str, before: int, keep_batch_id=False):
-    """Union the ``batch_id=K`` dirs with K < `before` (replay
-    safety: a replayed batch never sees its own or later dirs);
-    None when nothing qualifies.  Cluster-safe: spark.read with
-    basePath partition discovery (any Hadoop-visible URI) — only
-    PATH_NOT_FOUND is cold start, every other listing failure
-    re-raises and fails the batch (a swallowed storage blip here
-    would silently rebuild state from one batch's edges).  Schema
-    comes from the parquet footers, so node-id types follow the
-    stream's.  With `keep_batch_id` the partition column is kept
-    (cast to long) for last-writer-wins reconstruction."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        df = spark.read.option("basePath", path).parquet(path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        # UNABLE_TO_INFER_SCHEMA is also cold start (r12, advisor
-        # finding): the store dir can EXIST but hold no visible
-        # parquet footers — e.g. an aborted first batch that left only
-        # batch_id=0/_temporary — and replaying that first batch must
-        # cold-start, not fail forever.  Genuine storage blips surface
-        # as other error classes and still re-raise.
-        if (
-            "PATH_NOT_FOUND" not in msg
-            and "Path does not exist" not in msg
-            and "UNABLE_TO_INFER_SCHEMA" not in msg
-        ):
-            raise  # storage blip ≠ cold start: fail the batch
-        return None
-    df = df.filter(F.col("batch_id") < before)
-    if df.limit(1).count() == 0:
-        return None
-    if keep_batch_id:
-        return df.withColumn("batch_id", F.col("batch_id").cast("long"))
-    return df.drop("batch_id")
+def _edges_with(spark, out_path: str, batch_edges, batch_id: int):
+    """The graph sinks' edge set as of batch `batch_id`: the store's
+    dirs < N (a replay never sees its own partial write) merged with
+    the batch's own edges."""
+    prev = store.read(spark, f"{out_path}/edges")
+    tagged = batch_edges.withColumn("batch_id", F.lit(batch_id))
+    if prev is not None:
+        tagged = prev.filter(F.col("batch_id") < batch_id).unionByName(tagged)
+    return _merge_edges(tagged)
 
 
-def _latest_labels_snapshot(spark, path: str, before: int):
-    """The single most recent full label snapshot with batch_id <
-    `before`; None on cold start.  Delegates to the shared
-    cluster-safe Hadoop-FS dir listing (missing-path-only cold
-    start, empty snapshots honored)."""
-    return _latest_full_snapshot(spark, path, before)
+def _merge_edges(rows):
+    """Edge-store merge of rows with batch_id: unweighted stores
+    dedupe; weighted stores (a `w` column) keep the newest batch's
+    weight per (src, dst), ties inside a batch to the larger weight."""
+    if "w" in rows.columns:
+        return store.last_per_key(rows, ["src", "dst"], F.col("w").desc())
+    return rows.drop("batch_id").distinct()
 
 
 def read_coreness_labels(spark, out_path: str):
@@ -1841,27 +1535,10 @@ def read_coreness_labels(spark, out_path: str):
     Cluster-safe basePath read; raises FileNotFoundError on an empty
     or missing store (asking for labels that don't exist is a caller
     error, not a cold start)."""
-    labels = _latest_full_snapshot(spark, f"{out_path}/labels", None)
+    labels = store.latest(spark, f"{out_path}/labels", None)
     if labels is None:
         raise FileNotFoundError(f"no label snapshots under {out_path}/labels")
     return labels
-
-
-def _assert_local_store(path: str, op: str) -> None:
-    """Compaction rewrites dirs with os.rename/shutil.rmtree — local
-    filesystem only.  Reject remote URIs loudly instead of corrupting
-    the store half-way (the sink READ paths are cluster-safe; only
-    compaction has this restriction — run it as a filesystem-side job
-    on remote stores)."""
-    from urllib.parse import urlparse
-
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"{op} uses local-filesystem rename/delete and cannot run "
-            f"against scheme {scheme!r} ({path}); compact remote stores "
-            "with a storage-side job instead"
-        )
 
 
 def compact_coreness_edges(spark, out_path: str, upto_batch: int) -> int:
@@ -1873,44 +1550,7 @@ def compact_coreness_edges(spark, out_path: str, upto_batch: int) -> int:
     matching the sinks' own last-writer-wins reconstruction.  Only
     compact batches the stream has committed past.  Local filesystem
     only (loud ValueError otherwise).  Returns the compacted count."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import Window
-
-    path = f"{out_path}/edges"
-    _assert_local_store(path, "compact_coreness_edges")
-    dirs = [
-        d for d in os.listdir(path)
-        if re.fullmatch(r"batch_id=\d+", d)
-        and int(d.split("=")[1]) <= upto_batch
-    ]
-    if not dirs:
-        return 0
-    raw = spark.read.option("basePath", path).parquet(path).filter(
-        F.col("batch_id") <= upto_batch
-    )
-    if "w" in raw.drop("batch_id").columns:
-        rank = Window.partitionBy("src", "dst").orderBy(
-            F.col("batch_id").desc(), F.col("w").desc()
-        )
-        merged = (
-            raw.withColumn("_rn", F.row_number().over(rank))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "batch_id")
-        )
-    else:
-        merged = raw.drop("batch_id").distinct()
-    merged = merged.localCheckpoint(eager=True)
-    n = merged.count()
-    keep = max(int(d.split("=")[1]) for d in dirs)
-    tmp = f"{path}/.compact_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    for d in dirs:
-        shutil.rmtree(f"{path}/{d}")
-    os.rename(tmp, f"{path}/batch_id={keep}")
-    return n
+    return store.compact(spark, f"{out_path}/edges", upto_batch, _merge_edges)
 
 
 def make_pagerank_sink(
@@ -1955,8 +1595,6 @@ def make_pagerank_sink(
 
     def sink(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        from pyspark.sql import Window
-
         from ..operators import graph as graph_ops
 
         cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
@@ -1968,43 +1606,16 @@ def make_pagerank_sink(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        prev = _read_batch_dirs(
-            spark, f"{out_path}/edges", before=batch_id,
-            keep_batch_id=weight_col is not None,
-        )
-        if weight_col is None:
-            all_edges = (
-                batch_edges if prev is None
-                else prev.unionByName(batch_edges).distinct()
-            )
-        else:
-            tagged = batch_edges.withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            )
-            union = tagged if prev is None else prev.unionByName(tagged)
-            rank = Window.partitionBy("src", "dst").orderBy(
-                F.col("batch_id").desc(), F.col("w").desc()
-            )
-            all_edges = (
-                union.withColumn("_rn", F.row_number().over(rank))
-                .filter(F.col("_rn") == 1)
-                .select("src", "dst", "w")
-            )
-        prior = _latest_labels_snapshot(
-            spark, f"{out_path}/labels", before=batch_id
-        )
+        all_edges = _edges_with(spark, out_path, batch_edges, batch_id)
+        prior = store.latest(spark, f"{out_path}/labels", batch_id)
         scores = graph_ops.pagerank(
             all_edges, iters=iters, damping_ppm=damping_ppm,
             weight_col="w" if weight_col is not None else None,
             tol_micro=tol_micro, init_scores=prior,
             check_every=check_every,
         )
-        scores.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{out_path}/labels/batch_id={batch_id}"
-        )
-        batch_edges.write.mode("overwrite").parquet(
-            f"{out_path}/edges/batch_id={batch_id}"
-        )
+        store.write(scores.localCheckpoint(eager=True), f"{out_path}/labels", batch_id)
+        store.write(batch_edges, f"{out_path}/edges", batch_id)
 
     return sink
 
@@ -2086,9 +1697,7 @@ def make_anonymized_release_sink(
             .groupBy(*qnames, "_sv")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        prior_counts = _latest_full_snapshot(
-            spark, f"{out_path}/counts", batch_id
-        )
+        prior_counts = store.latest(spark, f"{out_path}/counts", batch_id)
         merged = (
             batch_counts if prior_counts is None
             else prior_counts.unionByName(batch_counts)
@@ -2105,9 +1714,7 @@ def make_anonymized_release_sink(
                 if l_distinct is not None else F.lit(True)
             )
         ).select(*qnames)
-        prior_pending = _latest_full_snapshot(
-            spark, f"{out_path}/pending", batch_id
-        )
+        prior_pending = store.latest(spark, f"{out_path}/pending", batch_id)
         candidates = (
             batch_df if prior_pending is None
             else batch_df.unionByName(prior_pending)
@@ -2116,15 +1723,9 @@ def make_anonymized_release_sink(
             .drop(*qnames).localCheckpoint(eager=True)
         pending = candidates.join(passing, qnames, "left_anti") \
             .drop(*qnames).localCheckpoint(eager=True)
-        released.write.mode("overwrite").parquet(
-            f"{out_path}/released/batch_id={batch_id}"
-        )
-        pending.write.mode("overwrite").parquet(
-            f"{out_path}/pending/batch_id={batch_id}"
-        )
-        merged.write.mode("overwrite").parquet(
-            f"{out_path}/counts/batch_id={batch_id}"
-        )
+        store.write(released, f"{out_path}/released", batch_id)
+        store.write(pending, f"{out_path}/pending", batch_id)
+        store.write(merged, f"{out_path}/counts", batch_id)
 
     return sink
 
@@ -2152,21 +1753,7 @@ def expire_anonymized_state(out_path: str, upto_batch: int) -> int:
     ops.  released/ dirs are NEVER touched (they ARE the output).
     Local filesystem only (loud ValueError otherwise).  Returns the
     number of dirs deleted."""
-    import os
-    import re
-    import shutil
-
-    deleted = 0
-    for sub in ("counts", "pending"):
-        path = f"{out_path}/{sub}"
-        _assert_local_store(path, "expire_anonymized_state")
-        try:
-            dirs = os.listdir(path)
-        except FileNotFoundError:
-            continue
-        for d in dirs:
-            if re.fullmatch(r"batch_id=\d+", d) \
-                    and int(d.split("=")[1]) < upto_batch:
-                shutil.rmtree(os.path.join(path, d))
-                deleted += 1
-    return deleted
+    return sum(
+        store.expire(f"{out_path}/{sub}", upto_batch)
+        for sub in ("counts", "pending")
+    )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_pipeline_with_kafka_spark.sources import cdc
-from cdc_pipeline_with_kafka_spark.streaming import pipeline
+from cdc_pipeline_with_kafka_spark.streaming import pipeline, store
 
 from .fixtures import make_articles, make_cdc_events
 
@@ -1090,7 +1090,7 @@ def test_smoother_state_compaction_invariant(spark, tmp_path):
     for i, b in enumerate(batches[:3]):
         sink(spark.createDataFrame(b, "g string, t int, v double"), i)
     n = pipeline.compact_smoother_state(
-        spark, path, ["g"], upto_batch=2, batch_col="ewma_batch_id"
+        spark, path, ["g"], upto_batch=2
     )
     assert n == 3  # a, b, c latest states
     assert os.listdir(f"{path}/state") == ["batch_id=2"]
@@ -1113,7 +1113,7 @@ def test_smoother_state_compaction_invariant(spark, tmp_path):
     for i, b in enumerate(batches[:2]):
         hsink(spark.createDataFrame(b, "g string, t int, v double"), i)
     assert pipeline.compact_smoother_state(
-        spark, hpath, ["g"], upto_batch=1, batch_col="holt_batch_id"
+        spark, hpath, ["g"], upto_batch=1
     ) == 2
 
 
@@ -1375,8 +1375,8 @@ def test_graph_sink_store_reads_cluster_safe(spark, tmp_path):
     from cdc_pipeline_with_kafka_spark.operators import graph as G
 
     missing = str(tmp_path / "nope")
-    assert pipeline._read_batch_dirs(spark, missing, before=5) is None
-    assert pipeline._latest_labels_snapshot(spark, missing, before=5) is None
+    assert store.read(spark, missing) is None
+    assert store.latest(spark, missing, 5) is None
     # r12 (advisor finding): a store dir that EXISTS but holds no
     # visible parquet (an aborted first batch left only
     # batch_id=0/_temporary) is ALSO cold start — spark.read raises
@@ -1384,7 +1384,7 @@ def test_graph_sink_store_reads_cluster_safe(spark, tmp_path):
     # first batch's replay fail forever
     aborted = tmp_path / "aborted"
     (aborted / "batch_id=0" / "_temporary").mkdir(parents=True)
-    assert pipeline._read_batch_dirs(spark, str(aborted), before=5) is None
+    assert store.read(spark, str(aborted)) is None
     path = str(tmp_path / "kc")
     sink = pipeline.make_coreness_sink(path)
     sink(spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long"), 0)
@@ -1402,6 +1402,101 @@ def test_graph_sink_store_reads_cluster_safe(spark, tmp_path):
         pipeline.compact_component_labels(spark, "s3a://bucket/labels", 1)
     with pytest.raises(FileNotFoundError):
         pipeline.read_coreness_labels(spark, missing)
+
+
+def _replay_admit_shard(spark, tmp_path, path):
+    sink = pipeline.make_admit_shard_sink(
+        str(tmp_path / "corpus"), path, str(tmp_path / "hashes")
+    )
+    text = "the quick brown fox jumps over the lazy dog and runs far away"
+    sink(spark.createDataFrame([(1, text)], "doc_id long, text string"), 0)
+
+
+def _replay_admit_assets(spark, tmp_path, path):
+    from .test_admit_assets import ASSET_SCHEMA, _ppm
+
+    sink = pipeline.make_admit_assets_sink(str(tmp_path / "assets"), path)
+    sink(spark.createDataFrame([(1, "image", _ppm("solo"))], ASSET_SCHEMA), 0)
+
+
+def _replay_kmeans(spark, tmp_path, path):
+    sink = pipeline.make_kmeans_state_sink(path, k=2)
+    rows = [(i, [float(i), float(i % 3)]) for i in range(6)]
+    sink(spark.createDataFrame(rows, "vec_id long, embedding array<float>"), 0)
+
+
+def _replay_components(spark, tmp_path, path):
+    sink = pipeline.make_components_sink(path, mode="delta")
+    sink(spark.createDataFrame([(1, 2)], "id_a long, id_b long"), 0)
+
+
+def _replay_scd2(spark, tmp_path, path):
+    sink = pipeline.make_scd2_sink(
+        path, ["k"], ["ts", "off"], ["val"], op_col="op"
+    )
+    sink(_scd2_df(spark, [(1, 10, 0, "c", "a1")]), 0)
+
+
+@pytest.mark.parametrize(
+    "replay",
+    [_replay_admit_shard, _replay_admit_assets, _replay_kmeans,
+     _replay_components, _replay_scd2],
+    ids=["admit_shard", "admit_assets", "kmeans", "components", "scd2"],
+)
+def test_aborted_first_batch_replays_as_cold_start(spark, tmp_path, replay):
+    """An aborted first batch leaves only batch_id=0/_temporary in a
+    state store.  Replaying batch 0 must cold-start and overwrite that
+    dir in every sink that reads the store, not fail forever on
+    UNABLE_TO_INFER_SCHEMA."""
+    path = tmp_path / "state"
+    (path / "batch_id=0" / "_temporary").mkdir(parents=True)
+    replay(spark, tmp_path, str(path))
+    assert store.read(spark, str(path)).filter("batch_id = 0").count() > 0
+
+
+def test_smoother_sink_unreadable_state_fails_the_batch(spark, tmp_path):
+    """A smoother state store that exists but cannot be read is not a
+    cold start: seeding cold would silently restart every key's
+    recursion, so the batch must fail and the checkpoint retry it."""
+    import shutil
+
+    schema = "g string, t int, v double"
+    path = str(tmp_path / "ew")
+    sink = pipeline.make_ewma_sink(path, ["g"], ["t"], "v", 300_000)
+    sink(spark.createDataFrame([("a", 1, 10.0)], schema), 0)
+    state0 = tmp_path / "ew" / "state" / "batch_id=0"
+    shutil.rmtree(state0)
+    state0.mkdir()
+    (state0 / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception):
+        sink(spark.createDataFrame([("a", 2, 14.0)], schema), 1)
+
+
+def test_compact_comoments_failed_write_keeps_state(spark, tmp_path, monkeypatch):
+    """Compaction writes the merged segment before it deletes any
+    batch dir, so a failed merged write leaves every readable sum as
+    it was."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    schema = "g string, x double, y double"
+    tp = str(tmp_path / "com")
+    sink = pipeline.make_comoment_sink(tp, "x", "y", ["g"])
+    for i in range(3):
+        sink(spark.createDataFrame([("g1", float(i), 2.0 * i + 1.0)], schema), i)
+
+    def sums():
+        return sorted(map(tuple, pipeline.read_comoments(spark, tp, ["g"]).collect()))
+
+    before = sums()
+
+    def boom(self, path, *args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    with pytest.raises(OSError, match="disk full"):
+        pipeline.compact_comoments(spark, tp, ["g"])
+    monkeypatch.undo()
+    assert sums() == before
 
 
 def test_anonymized_release_sink_parity_unpark_and_replay(spark, tmp_path):
