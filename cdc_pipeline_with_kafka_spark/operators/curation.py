@@ -420,10 +420,8 @@ def curate_corpus(
     out = dedup_ops.dedup_exact(out, text_col=text_col, id_col=id_col)
     if near_dup_pairs is not None:
         out = dedup_ops.dedup_survivors(
-            out, near_dup_pairs, id_col=id_col, algorithm="auto"
-        ).filter(
-            F.col("is_canonical")
-        ).drop("cluster_id", "is_canonical")
+            out, near_dup_pairs, id_col=id_col
+        ).filter(F.col("is_canonical")).drop("cluster_id", "is_canonical")
     if span_dedup_k is not None:
         from .spans import remove_duplicated_spans
 
@@ -586,10 +584,8 @@ def leakage_safe_split(
         raise ValueError(f"split weights must sum to 100, got {weights}")
     if pairs is not None:
         assigned = dedup_ops.dedup_survivors(
-            docs, pairs, id_col=id_col, algorithm="auto"
-        ).drop(
-            "is_canonical"
-        )
+            docs, pairs, id_col=id_col
+        ).drop("is_canonical")
     else:
         assigned = docs.withColumn("cluster_id", F.col(id_col))
     bucket = hash_bucket(F.col("cluster_id"), salt=salt)
@@ -731,9 +727,7 @@ def admit_shard(
         pairs.join(alive.select(F.col(id_col).alias("id_a")), "id_a", "left_semi")
         .join(alive.select(F.col(id_col).alias("id_b")), "id_b", "left_semi")
     )
-    surv = dedup_ops.dedup_survivors(
-        alive.select(id_col), intra, id_col=id_col, algorithm="auto"
-    )
+    surv = dedup_ops.dedup_survivors(alive.select(id_col), intra, id_col=id_col)
     _reject(surv.filter(~F.col("is_canonical")), "near_dup_shard")
     alive = alive.join(
         surv.filter(F.col("is_canonical")).select(id_col), id_col, "left_semi"

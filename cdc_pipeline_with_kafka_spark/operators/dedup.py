@@ -792,11 +792,17 @@ def verify_pairs_edit_distance(
 # ---------------------------------------------------------------- clustering
 
 
+# min-label rounds before contracting to large-star/small-star: enough
+# for the small dense clusters near-dup graphs normally form
+LABEL_ROUNDS = 4
+# star rounds are O(log n) on any shape; hitting this bound raises
+STAR_ROUNDS = 30
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → (id, cluster_id)
     with cluster_id = the minimum id reachable from each node.
@@ -806,29 +812,47 @@ def connected_components(
     canonical survivor can be chosen per group — without it, A~B and
     B~C dedup to two overlapping pairs instead of one {A,B,C} cluster.
 
-    Spark-first iterative min-label propagation (no graph library):
-    each round every node takes min(own label, neighbors' labels); stop
-    when a round changes nothing.  Rounds needed = graph diameter —
-    near-dup clusters are small and dense, so this converges in a few
-    rounds (the classic large-star/small-star trick drops it to
-    O(log n) for pathological chains; the loop structure is identical).
+    Spark-first, no graph library.  Up to LABEL_ROUNDS rounds of
+    min-label propagation first (each node takes min(own label,
+    neighbors' labels); stop when a round changes nothing): cheapest
+    per round, and the small dense clusters near-dup graphs normally
+    form converge within the budget.  If it has not converged, every
+    node is CONTRACTED to its current label and the contracted graph
+    is finished with large-star / small-star (`_star_components`,
+    O(log n) rounds on any shape), so a 10,000-hop chain of chained
+    near-dups terminates in logarithmic rounds instead of diameter
+    rounds.  The label rounds are not wasted: contraction shrinks
+    every already-collapsed cluster to a single node before star
+    starts.
+
+    Correctness of the handoff: each node's interim label is the min id
+    of SOME reachable subset containing itself, so the set of interim
+    labels within a component always contains the component minimum,
+    and contracting edges through labels preserves connectivity; star's
+    min over contracted nodes is therefore the true component min.
+
     `localCheckpoint` truncates lineage each round so the plan does not
     grow with iterations — the standard Spark iterative-algorithm
     pattern.  Each round is one shuffle of the EDGE list (grouped
-    min-agg), never a cross join.
-    """
-    labels, converged = _propagate_min_labels(*_init_label_graph(pairs, id_a, id_b),
-                                              rounds=max_iter)
-    if not converged:
-        # never return silently-wrong clusters: a component wider than
-        # max_iter hops would leave labels mid-propagation
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "the pair graph has a longer path than expected — raise "
-            "max_iter (rounds needed = component diameter), or use "
-            "algorithm='auto' / connected_components_auto"
-        )
-    return labels
+    min-agg), never a cross join."""
+    edges, labels = _init_label_graph(pairs, id_a, id_b)
+    labels, converged = _propagate_min_labels(edges, labels, LABEL_ROUNDS)
+    if converged:
+        return labels
+    lu = labels.select(F.col("id").alias("src"), F.col("cluster_id").alias("_lu"))
+    lv = labels.select(F.col("id").alias("dst"), F.col("cluster_id").alias("_lv"))
+    contracted = (
+        edges.join(lu, "src")
+        .join(lv, "dst")
+        .filter(F.col("_lu") != F.col("_lv"))
+        .select(F.col("_lu").alias("u"), F.col("_lv").alias("v"))
+    )
+    star = _star_components(contracted).select(
+        F.col("id").alias("cluster_id"), F.col("cluster_id").alias("_final")
+    )
+    return labels.join(star, "cluster_id", "left").select(
+        "id", F.coalesce("_final", "cluster_id").alias("cluster_id")
+    )
 
 
 def _init_label_graph(pairs: DataFrame, id_a: str, id_b: str):
@@ -884,76 +908,20 @@ def _propagate_min_labels(edges: DataFrame, labels: DataFrame, rounds: int):
     return labels, converged
 
 
-def connected_components_auto(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    label_rounds: int = 4,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Adaptive connected components: start with min-label propagation
-    (cheapest per round, converges in diameter rounds — optimal for the
-    small dense clusters near-dup graphs normally form), and if it has
-    not converged after `label_rounds` rounds, CONTRACT every node to
-    its current label and finish the contracted graph with large-star /
-    small-star (O(log n) rounds on any shape).
-
-    A user running dedup blind doesn't know whether their pair graph
-    hides a 10,000-hop chain of chained near-dups; auto makes that case
-    terminate in logarithmic rounds without giving up label
-    propagation's early exit on the common case.  The label rounds are
-    not wasted: contraction shrinks every already-collapsed cluster to
-    a single node before star starts.
-
-    Correctness of the handoff: each node's interim label is the min id
-    of SOME reachable subset containing itself, so the set of interim
-    labels within a component always contains the component minimum,
-    and contracting edges through labels preserves connectivity; star's
-    min over contracted nodes is therefore the true component min."""
-    edges, labels = _init_label_graph(pairs, id_a, id_b)
-    labels, converged = _propagate_min_labels(edges, labels, label_rounds)
-    if converged:
-        return labels
-    lu = labels.select(F.col("id").alias("src"), F.col("cluster_id").alias("_lu"))
-    lv = labels.select(F.col("id").alias("dst"), F.col("cluster_id").alias("_lv"))
-    contracted = (
-        edges.join(lu, "src")
-        .join(lv, "dst")
-        .filter(F.col("_lu") != F.col("_lv"))
-        .select(F.col("_lu").alias("id_a"), F.col("_lv").alias("id_b"))
-    )
-    star = connected_components_star(contracted, max_iter=max_iter).select(
-        F.col("id").alias("cluster_id"), F.col("cluster_id").alias("_final")
-    )
-    return labels.join(star, "cluster_id", "left").select(
-        "id", F.coalesce("_final", "cluster_id").alias("cluster_id")
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., 'Connected Components in MapReduce
-    and Beyond', SoCC 2014): converges in O(log n) ROUNDS regardless
-    of graph shape, vs `connected_components`' min-label propagation
-    which needs diameter rounds — the difference between 4 and 10,000
-    shuffles on a pathological 10,000-node chain of chained near-dups.
+def _star_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of a (u, v) edge list (no self-loops) by alternating
+    large-star / small-star contraction (Kiveris et al., 'Connected
+    Components in MapReduce and Beyond', SoCC 2014): O(log n) ROUNDS
+    regardless of graph shape, vs min-label propagation's diameter
+    rounds.
 
     Per round: large-star hangs every neighbor LARGER than the center
     off the center's minimum; small-star re-hangs the not-larger
     neighbors.  Fixed point = every component is a star around its
-    minimum id.  Same output contract as connected_components
-    ((id, cluster_id), cluster_id = component min; equivalence
-    fuzz-tested), same localCheckpoint-per-round lineage discipline,
-    same loud failure if max_iter is ever hit."""
+    minimum id.  Output (id, cluster_id = component min); raises if
+    STAR_ROUNDS rounds do not reach the fixed point."""
     E = (
-        pairs.selectExpr(f"{id_a} AS u", f"{id_b} AS v")
-        .filter(F.col("u") != F.col("v"))
-        .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
+        pairs.selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -970,8 +938,7 @@ def connected_components_star(
         return (row["n"], row["h"])
 
     prev = _checksum(E)
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(STAR_ROUNDS):
         # large-star: center u over BOTH directions; m = min(Γ(u) ∪ u);
         # every neighbor v > u re-hangs onto m
         bi = E.union(E.selectExpr("v AS u", "u AS v"))
@@ -1002,12 +969,12 @@ def connected_components_star(
         )
         cur = _checksum(E)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if not converged:
+    else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {STAR_ROUNDS} "
+            "star rounds"
         )
     # fixed point: every edge is (component_min, member)
     members = E.selectExpr("v AS id", "u AS cluster_id")
@@ -1022,7 +989,6 @@ def connected_components_incremental(
     labels: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Admit a SHARD of new near-dup pairs against a PERSISTED
     component assignment (id, cluster_id — a prior
@@ -1043,7 +1009,7 @@ def connected_components_incremental(
     CONTRACTED graph — whose size is bounded by the shard's edge
     count, never the corpus graph.  The persisted table updates with
     one join against the (tiny) label-remap."""
-    remap = _contracted_remap(new_pairs, labels, id_a, id_b, algorithm)
+    remap = _contracted_remap(new_pairs, labels, id_a, id_b)
     # old ids: relabel through the remap (labels untouched by the shard
     # pass through); new ids: their contracted label, remapped
     old_rows = labels.join(
@@ -1060,7 +1026,6 @@ def connected_components_delta(
     labels: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "auto",
 ) -> DataFrame:
     """The DELTA of `connected_components_incremental`: only the label
     rows the shard CHANGES — new nodes plus old nodes whose component
@@ -1076,7 +1041,7 @@ def connected_components_delta(
     the output shrinks: relabeled rows come from a broadcast inner
     join against the CHANGED remap entries (_old != _new), never the
     identity remaps."""
-    remap = _contracted_remap(new_pairs, labels, id_a, id_b, algorithm)
+    remap = _contracted_remap(new_pairs, labels, id_a, id_b)
     changed = remap.filter(F.col("_old") != F.col("_new"))
     relabeled = labels.join(
         F.broadcast(changed), labels["cluster_id"] == F.col("_old")
@@ -1090,7 +1055,6 @@ def _contracted_remap(
     labels: DataFrame,
     id_a: str,
     id_b: str,
-    algorithm: str,
 ) -> DataFrame:
     """(_old, _new) label remap shared by the incremental and delta
     forms: map the shard's endpoints through the label table, run
@@ -1111,14 +1075,7 @@ def _contracted_remap(
         )
         .filter(F.col("id_a") != F.col("id_b"))
     )
-    comp_fn = {
-        "label": connected_components,
-        "star": connected_components_star,
-        "auto": connected_components_auto,
-    }.get(algorithm)
-    if comp_fn is None:
-        raise ValueError(f"unknown algorithm {algorithm!r}; use label|star|auto")
-    return comp_fn(contracted, "id_a", "id_b").withColumnRenamed(
+    return connected_components(contracted).withColumnRenamed(
         "id", "_old"
     ).withColumnRenamed("cluster_id", "_new")
 
@@ -1149,7 +1106,6 @@ def dedup_survivors(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "label",
     score_col: str | None = None,
 ) -> DataFrame:
     """Cluster the near-dup pairs and mark one canonical survivor per
@@ -1165,25 +1121,14 @@ def dedup_survivors(
     membership table (max_by aggregate), never a corpus-wide window —
     the corpus pays only the same final left join.
 
-    algorithm='label' (default) = min-label propagation — rounds =
-    component diameter, ideal for the small dense clusters near-dup
-    graphs actually form; 'star' = large-star/small-star contraction —
-    O(log n) rounds on ANY shape; 'auto' = label propagation first,
-    contracting to star iff it hasn't converged after a few rounds —
-    the blind-default choice when the graph shape is unknown
-    (long-chain convergence asserted in tests).
+    Clusters come from `connected_components` (min-label rounds with
+    early exit, then star contraction for long chains), so any pair
+    graph shape converges.
 
     Scale shape: components run over the PAIR graph only (tiny relative
     to the corpus); the final assignment is one left join back to the
     corpus on the doc id."""
-    comp_fn = {
-        "label": connected_components,
-        "star": connected_components_star,
-        "auto": connected_components_auto,
-    }.get(algorithm)
-    if comp_fn is None:
-        raise ValueError(f"unknown algorithm {algorithm!r}; use label|star|auto")
-    comp = comp_fn(pairs, id_a, id_b)
+    comp = connected_components(pairs, id_a, id_b)
     if score_col is None:
         return docs.join(
             comp.withColumnRenamed("id", id_col), id_col, "left"
@@ -1233,7 +1178,6 @@ def overlap_census(
     winnow_w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    algorithm: str = "auto",
     checkpoint_pairs: bool = False,
 ) -> dict:
     """One-call duplication census across the three TEXT pair tiers —
@@ -1293,7 +1237,6 @@ def overlap_census(
         # because eager materialization is a caller decision)
         pairs = pairs.localCheckpoint(eager=True)
     clustered = dedup_survivors(
-        docs, pairs.select("id_a", "id_b").distinct(),
-        id_col=id_col, algorithm=algorithm,
+        docs, pairs.select("id_a", "id_b").distinct(), id_col=id_col
     )
     return {"pairs": pairs, "docs": clustered}

@@ -624,84 +624,6 @@ def sssp_replay(
     return dist
 
 
-def coreness(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_k: int = 64,
-) -> DataFrame:
-    """k-core decomposition: each node's CORENESS — the largest k
-    such that the node survives in a subgraph where everyone keeps
-    degree ≥ k.  The degree-robust density measure behind community
-    seeds and spam-farm detection (a bot clique has high coreness; a
-    star hub has coreness 1 no matter how many followers).
-
-    Spark-shaped peeling (the bfs/sssp frontier discipline): for each
-    k = 1, 2, … the k-core is computed by repeatedly deleting nodes
-    of degree < k (inner loop: one groupBy degree count + one
-    semi-join per round, lineage truncated, early stop when stable);
-    nodes peeled before the k-core stabilizes get coreness k−1.
-    Stops when the core empties; `max_k` bounds the worst case and
-    RAISES if a denser-than-max_k core remains (raise the bound —
-    silently capping coreness would corrupt every downstream
-    ranking).  Undirected, self-loops dropped, multi-edges collapse.
-
-    Cost note: O(k_max · rounds) frontier jobs of shrinking size —
-    fine for the small dense graphs the gate fixtures use, and the
-    simplest correct form to pin the oracle against.  For large
-    graphs, and for INCREMENTAL maintenance under edge churn, use
-    `coreness_hindex` (identical output, pytest-pinned): fixed
-    per-round plan shape, fixpoint early-stop, and prior-label
-    seeding — 25× faster even on the 60-node test fixture (8.7 s vs
-    219 s; the peel pays ~2 driver-barrier counts per (k, round)).
-
-    Output: (node, coreness ≥ 1) for every non-isolated node.
-    """
-    e = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b"))
-    e = e.unionByName(
-        e.select(F.col("_b").alias("_a"), F.col("_a").alias("_b"))
-    ).filter(F.col("_a") != F.col("_b")).distinct() \
-        .localCheckpoint(eager=True)
-    result = None
-    spark = edges.sparkSession
-    for k in range(1, max_k + 1):
-        # peel to the k-core of the current edge set
-        while True:
-            deg = e.groupBy("_a").agg(F.count(F.lit(1)).alias("_d"))
-            keep = deg.filter(F.col("_d") >= k).select("_a") \
-                .localCheckpoint(eager=True)
-            n_before = e.select("_a").distinct().count()
-            e2 = (
-                e.join(keep, "_a")
-                .join(keep.select(F.col("_a").alias("_b")), "_b")
-                .localCheckpoint(eager=True)
-            )
-            n_after = e2.select("_a").distinct().count()
-            e = e2
-            if n_after == n_before:
-                break
-        survivors = e.select(F.col("_a").alias("node")).distinct() \
-            .withColumn("coreness", F.lit(k)).localCheckpoint(eager=True)
-        if survivors.limit(1).count() == 0:
-            break
-        # survivors of the k-core get coreness >= k: overwrite
-        result = (
-            survivors if result is None
-            else result.join(
-                survivors.select("node"), "node", "left_anti"
-            ).unionByName(survivors).localCheckpoint(eager=True)
-        )
-    else:
-        if e.limit(1).count() != 0:
-            raise ValueError(
-                f"coreness: a core denser than max_k={max_k} remains; "
-                "raise max_k"
-            )
-    if result is None:
-        return spark.createDataFrame([], "node long, coreness int")
-    return result
-
-
 def coreness_hindex(
     edges: DataFrame,
     src: str = "src",
@@ -710,14 +632,20 @@ def coreness_hindex(
     inserted_edges: int | None = None,
     max_rounds: int = 200,
 ) -> DataFrame:
-    """EXACT k-core decomposition via the h-index fixpoint (Lü, Zhou,
-    Zhang & Stanley 2016: iterating h(v) ← H-index{h(u) : u ∈ N(v)}
-    from the degree vector converges to coreness) — `coreness`'s
-    scale/incremental sibling.  The peel loop runs O(k_max · rounds)
+    """k-core decomposition: each node's CORENESS — the largest k
+    such that the node survives in a subgraph where everyone keeps
+    degree ≥ k.  The degree-robust density measure behind community
+    seeds and spam-farm detection (a bot clique has high coreness; a
+    star hub has coreness 1 no matter how many followers).
+
+    EXACT, via the h-index fixpoint (Lü, Zhou, Zhang & Stanley 2016:
+    iterating h(v) ← H-index{h(u) : u ∈ N(v)} from the degree vector
+    converges to coreness).  A peel loop would run O(k_max · rounds)
     global shrink jobs; this runs a FIXED per-round shape — one
     edge-grain equi-join + one per-node rank window + one aggregate —
     and stops at the fixpoint, so it is the form that holds at 100 TB
-    and the form that supports ΔK-core maintenance.
+    and the form that supports ΔK-core maintenance.  Pinned against
+    the pure-Python matula-beck peel `coreness_replay`.
 
     Incremental maintenance: pass `prior` (the persisted (node,
     coreness) labels of the PREVIOUS edge set) together with
@@ -737,10 +665,9 @@ def coreness_hindex(
     stable), so convergence-from-above is what makes the answer
     exact.
 
-    Semantics identical to `coreness`: undirected, self-loops
-    dropped, multi-edges collapse, isolated nodes absent, coreness ≥
-    1.  Raises past `max_rounds` rather than returning a
-    half-converged vector."""
+    Undirected, self-loops dropped, multi-edges collapse, isolated
+    nodes absent; output (node, coreness ≥ 1).  Raises past
+    `max_rounds` rather than returning a half-converged vector."""
     if (prior is None) != (inserted_edges is None):
         raise ValueError(
             "prior and inserted_edges come together: the seed bound "
@@ -807,7 +734,7 @@ def coreness_hindex(
 
 def coreness_replay(edges: list, max_k: int = 64) -> dict:
     """Pure-Python k-core replay (matula-beck peeling) for the
-    oracle — must agree with the Spark loop on every node."""
+    oracle — must agree with `coreness_hindex` on every node."""
     adj: dict = {}
     for s, d in edges:
         if s == d:

@@ -1420,7 +1420,6 @@ def resolve_entities(
     max_dist: int = 2,
     q: int = 2,
     match_micro: int | None = None,
-    max_iter: int = 25,
     max_gram_df: int | str | None = "auto",
 ) -> DataFrame:
     """End-to-end entity resolution over ONE record table — the
@@ -1447,11 +1446,12 @@ def resolve_entities(
     run it separately; resolution needs a hard decision).
 
     Scale: candidate generation is fuzzy_join's vocabulary-priced
-    lanes; scoring is per-pair column arithmetic; the hull is the
-    edge-list min-label loop.  The one loud failure mode is a
-    TOO-LOOSE blocker (high max_dist on short names) chaining
-    everything into one mega-entity — components raises past
-    `max_iter` rounds rather than returning a half-propagated hull.
+    lanes; scoring is per-pair column arithmetic; the hull is
+    `connected_components` over the pair edges (min-label rounds, then
+    star contraction), so a long chain of matches still closes in
+    O(log n) rounds.  The failure mode to watch is a TOO-LOOSE blocker
+    (high max_dist on short names) chaining everything into one
+    mega-entity — check the entity_size distribution.
 
     `max_gram_df` passes through to `fuzzy_join`: the default
     ``"auto"`` EAGERLY runs one small gram-document-frequency probe
@@ -1489,9 +1489,7 @@ def resolve_entities(
         scored = record_linkage_score(pairs, field_weights)
         pairs = scored.filter(F.col("score_micro") >= int(match_micro))
     edges = pairs.select("_id_a", "_id_b")
-    labels = connected_components(
-        edges, "_id_a", "_id_b", max_iter=max_iter
-    ).select(
+    labels = connected_components(edges, "_id_a", "_id_b").select(
         F.col("id").alias("_rid"), F.col("cluster_id").alias("_eid")
     )
     out = df.join(

@@ -1599,8 +1599,8 @@ def semantic_dedup(
     score_col: str | None = None,
 ) -> DataFrame:
     """Full SemDeDup: cluster-blocked cosine pairs → connected
-    components (adaptive label/star) → one canonical survivor per
-    semantic-duplicate group (lowest id).
+    components (label rounds, then star contraction) → one canonical
+    survivor per semantic-duplicate group (lowest id).
 
     Output: input rows + (cluster_id, is_canonical); filter
     is_canonical for the deduplicated corpus.  Components run over the
@@ -1614,9 +1614,7 @@ def semantic_dedup(
         df, centroids, threshold=threshold, id_col=id_col, vec_col=vec_col,
         max_cluster_size=max_cluster_size,
     )
-    return dedup_survivors(
-        df, pairs, id_col=id_col, algorithm="auto", score_col=score_col
-    )
+    return dedup_survivors(df, pairs, id_col=id_col, score_col=score_col)
 
 
 # ---------------------------------------------------------------- distributed k-means

@@ -335,10 +335,10 @@ def pj_exists_suite(spark, sf_dir):
     r10 'ent': the packaged `resolve_entities` pipeline end to end
     (blocking ∘ scoring ∘ hull ∘ survivor) — the last
     oracle-expressible operator that lacked gate rows.  r10 'hcore':
-    `coreness_hindex` (the h-index fixpoint / ΔK-core form) against
-    the same matula-beck replay 'core' uses — peel ≡ fixpoint ≡
-    oracle on one graph.  r10 'snb': sorted-neighborhood blocking vs
-    DuckDB's global row_number self-join.  r10 'jw': exact-integer
+    a second row set of the same `coreness_hindex` run 'core' uses,
+    value-checked against the same matula-beck replay.  r10 'snb':
+    sorted-neighborhood blocking vs DuckDB's global row_number
+    self-join.  r10 'jw': exact-integer
     Jaro–Winkler over the 'link' pair fixture vs the shared jw_core
     replay.  r11 'snbm': MULTI-PASS sorted neighborhood (two
     independent keys, unordered-pair union with pass count + closest
@@ -410,10 +410,10 @@ def pj_exists_suite(spark, sf_dir):
         F.col("jw_ppm").cast("string").alias("name"),
     )
     # r9 'core': k-core decomposition of the thresholded trade graph
-    # (undirected peel, graph.coreness) — hosted HERE rather than in
-    # the bench-headline curation_suite because the peel loop's many
-    # tiny frontier jobs are a correctness fixture, not a perf
-    # signal; pinned matula-beck replay in the oracle builder
+    # (graph.coreness_hindex) — hosted HERE rather than in the
+    # bench-headline curation_suite because the fixpoint loop's tiny
+    # per-round jobs are a correctness fixture, not a perf signal;
+    # pinned matula-beck replay in the oracle SQL
     from .operators import graph as graph_ops
 
     li = _t(spark, sf_dir, "lineitem")
@@ -429,34 +429,21 @@ def pj_exists_suite(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    # r13: the 'core' rows ride coreness_hindex, not the O(k·rounds)
-    # peel — identical output (both forms are pinned against the same
-    # coreness_replay oracle on random graphs, tests/test_graph.py),
-    # but the peel's ~2 driver-barrier counts per (k, round) cost
-    # 206 s of BUILD at sf0.01 (the whole pj_exists_suite built in
-    # 218 s; the fixpoint form builds in 2.2 s) — the single largest
-    # eager-seam cost in the registry, paid by the driver's oracle
-    # stage and the parity suite alike.  The peel operator stays
-    # (its own replay-pinned tests keep it honest); 'hcore' now
-    # shares the algorithm, so peel ≡ fixpoint independence lives in
-    # test_graph.py rather than in the gate.
-    core = graph_ops.coreness_hindex(
+    # r13: coreness_hindex, not a peel loop — a peel's ~2 blocking
+    # count jobs per (k, round) cost 206 s of BUILD at sf0.01; the
+    # fixpoint form builds in ~2 s.  'core' and r10's 'hcore' are two
+    # row sets of ONE run, kept so the gate's rows stay as they were;
+    # both are value-checked against the same matula-beck replay
+    kcore = graph_ops.coreness_hindex(
         wedges.filter(F.col("w") >= 150).select("src", "dst")
-    ).select(
-        F.lit("core").alias("branch"),
-        F.col("node").cast("string").alias("key"),
-        F.col("coreness").cast("string").alias("name"),
     )
-    # r10 'hcore': the h-index fixpoint form (graph.coreness_hindex —
-    # the scale/ΔK-core sibling) over the SAME graph, value-checked
-    # against the SAME matula-beck replay — peel ≡ fixpoint ≡ oracle,
-    # three independent computations of one decomposition
-    hcore = graph_ops.coreness_hindex(
-        wedges.filter(F.col("w") >= 150).select("src", "dst")
-    ).select(
-        F.lit("hcore").alias("branch"),
-        F.col("node").cast("string").alias("key"),
-        F.col("coreness").cast("string").alias("name"),
+    core, hcore = (
+        kcore.select(
+            F.lit(branch).alias("branch"),
+            F.col("node").cast("string").alias("key"),
+            F.col("coreness").cast("string").alias("name"),
+        )
+        for branch in ("core", "hcore")
     )
     # r9 'fzj': edit-distance join (relational.fuzzy_join — q-gram
     # count filter + short length-band lane + capped levenshtein
@@ -549,7 +536,7 @@ def pj_exists_suite(spark, sf_dir):
     ent = relational.resolve_entities(
         docs_ent, "rid", "nm",
         field_weights={"lang": (0.9, 0.3)}, match_micro=1,
-        max_dist=2, q=2, max_iter=40,
+        max_dist=2, q=2,
     ).select(
         F.lit("ent").alias("branch"),
         F.col("rid").cast("string").alias("key"),
@@ -5290,8 +5277,8 @@ def dedup_clusters(spark, sf_dir):
     """Near-dup pairs → connected components → canonical survivor per
     cluster (lowest id).  The step that turns pairwise evidence into
     dedup GROUPS: A~B, B~C collapse to one {A,B,C} cluster with one
-    survivor.  Spark side = iterative min-label propagation
-    (operators/dedup.connected_components); oracle = DuckDB recursive
+    survivor.  Spark side = operators/dedup.connected_components
+    (min-label rounds, then star contraction); oracle = DuckDB recursive
     CTE closure over the SAME trigram-Jaccard pairs."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.8, n=3)
@@ -5422,7 +5409,7 @@ def dedup_end_to_end(spark, sf_dir):
     # (the component tier's member of the incremental family)
     old_pairs = pairs.filter((F.col("id_a") + F.col("id_b")) % 2 == 0)
     shard_pairs = pairs.filter((F.col("id_a") + F.col("id_b")) % 2 != 0)
-    labels = dedup.connected_components_auto(old_pairs)
+    labels = dedup.connected_components(old_pairs)
     inc = dedup.connected_components_incremental(
         shard_pairs, labels
     ).withColumnRenamed("id", "doc_id").withColumnRenamed(
@@ -5770,8 +5757,8 @@ def curation_suite(spark, sf_dir):
         F.lit("").alias("v_str"),
         F.col("dist_micro").cast("double").alias("v_num"),
     )
-    # ('core' lives in pj_exists_suite — the peel loop's many tiny
-    # frontier jobs would distort this BENCH headline's timing; the
+    # ('core' lives in pj_exists_suite — the k-core loop's per-round
+    # jobs would distort this BENCH headline's timing; the
     # non-bench suite pays the same correctness gate without skewing
     # the perf signal)
     # 'dq' (r9): the data-quality contract gate — five named

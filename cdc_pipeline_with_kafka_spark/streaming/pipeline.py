@@ -564,7 +564,6 @@ def make_components_sink(
     labels_path: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "auto",
     mode: str = "full",
     auto_compact: bool = False,
     auto_compact_min_rows: int = 65_536,
@@ -607,16 +606,11 @@ def make_components_sink(
     Per-batch compute in BOTH modes: components over the CONTRACTED
     graph (bounded by the batch's edge count) + one broadcast remap —
     the corpus pair graph is never recomputed.  Cold start: batch 0 is
-    a plain connected-components run."""
+    a plain `connected_components` run.  Every batch uses that one
+    components algorithm (min-label rounds, then star contraction if
+    the batch's graph is long), so any pair-graph shape converges."""
     from ..operators import dedup as dedup_ops
 
-    comp_fn = {
-        "label": dedup_ops.connected_components,
-        "star": dedup_ops.connected_components_star,
-        "auto": dedup_ops.connected_components_auto,
-    }.get(algorithm)
-    if comp_fn is None:
-        raise ValueError(f"unknown algorithm {algorithm!r}; use label|star|auto")
     if mode not in ("full", "delta"):
         raise ValueError(f"unknown mode {mode!r}; use full|delta")
     if auto_compact and mode != "delta":
@@ -629,16 +623,16 @@ def make_components_sink(
         else:
             labels = read_component_labels(spark, labels_path, before=batch_id)
         if labels is None:
-            out = comp_fn(batch_df.select(id_a, id_b), id_a, id_b)
+            out = dedup_ops.connected_components(
+                batch_df.select(id_a, id_b), id_a, id_b
+            )
         elif mode == "full":
             out = dedup_ops.connected_components_incremental(
-                batch_df.select(id_a, id_b), labels,
-                id_a=id_a, id_b=id_b, algorithm=algorithm,
+                batch_df.select(id_a, id_b), labels, id_a=id_a, id_b=id_b
             )
         else:
             out = dedup_ops.connected_components_delta(
-                batch_df.select(id_a, id_b), labels,
-                id_a=id_a, id_b=id_b, algorithm=algorithm,
+                batch_df.select(id_a, id_b), labels, id_a=id_a, id_b=id_b
             )
         pinned = out.localCheckpoint(eager=True)
         store.write(pinned, labels_path, batch_id)

@@ -113,35 +113,19 @@ def test_pack_sequential_unstratified_default_avoids_global_sort(spark):
 
 
 def test_connected_components_auto_long_chain(spark):
-    # 31-node path: diameter far beyond the label budget — auto must
+    # 31-node path: diameter far beyond the label budget — components
     # hand off to star contraction and still produce min-id clusters
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
-    # the same budget given to plain label propagation is NOT enough
-    with pytest.raises(RuntimeError):
-        dedup.connected_components(pairs, max_iter=4)
-    comp = dedup.connected_components_auto(pairs, label_rounds=4).collect()
+    comp = dedup.connected_components(pairs).collect()
     assert len(comp) == 31
     assert {r["cluster_id"] for r in comp} == {0}
-    # survivors API: algorithm='auto' end to end
+    # survivors API end to end
     docs = spark.createDataFrame([(i,) for i in range(31)], "doc_id long")
-    surv = dedup.dedup_survivors(docs, pairs, algorithm="auto").collect()
+    surv = dedup.dedup_survivors(docs, pairs).collect()
     assert sum(1 for r in surv if r["is_canonical"]) == 1
     assert all(r["cluster_id"] == 0 for r in surv)
-
-
-def test_connected_components_auto_early_exit_matches_label(spark):
-    # dense small clusters: converges within the label budget, so auto
-    # returns the pure label-propagation result (no star pass)
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11)], "id_a long, id_b long"
-    )
-    auto = {r["id"]: r["cluster_id"]
-            for r in dedup.connected_components_auto(pairs).collect()}
-    label = {r["id"]: r["cluster_id"]
-             for r in dedup.connected_components(pairs).collect()}
-    assert auto == label == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_tfidf_rare_term_outranks_common(spark):
@@ -153,14 +137,16 @@ def test_tfidf_rare_term_outranks_common(spark):
     assert by_id[10] == "rareword"  # tf=2 AND rare beats the shared terms
 
 
-def test_connected_components_raises_when_not_converged(spark):
-    import pytest
-
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    # planted violation: one star round cannot finish a 30-node chain
+    # (it outlives the label budget), so components must raise rather
+    # than return half-contracted labels
+    monkeypatch.setattr(dedup, "STAR_ROUNDS", 1)
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(1, 30)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=2)
+        dedup.connected_components(pairs)
 
 
 def test_curate_corpus_end_to_end(spark):
@@ -399,15 +385,42 @@ def test_chunk_by_sentences_never_splits_a_sentence(spark):
     assert 3 not in by_doc  # empty doc → no chunks
 
 
-def test_connected_components_star_equivalence(spark):
-    """Star contraction == min-label propagation on chains, islands,
-    and a batch of random graphs; long chains converge in O(log n)
-    rounds (well under a diameter-bound iteration count)."""
+def _union_find_components(edges):
+    """Pure-Python oracle: node → minimum id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_star_equivalence(spark, monkeypatch):
+    """connected_components == a union-find oracle on chains, islands,
+    small dense clusters and a batch of random graphs.  The 30-node
+    path outlives the label budget and is finished by the star phase
+    in at most 8 star rounds (≫ log2(30)); the small dense clusters
+    exit during the label rounds and never reach it."""
     import random
 
+    monkeypatch.setattr(dedup, "STAR_ROUNDS", 8)
+    star_runs = []
+    star = dedup._star_components
+    monkeypatch.setattr(
+        dedup, "_star_components", lambda e: star_runs.append(1) or star(e)
+    )
+    path = [(i, i + 1) for i in range(1, 30)]               # 30-node path
+    dense = [(1, 2), (2, 3), (1, 3), (10, 11)]              # early exit
     cases = [
         [(1, 2), (2, 3), (10, 11)],
-        [(i, i + 1) for i in range(1, 30)],           # 30-node path
+        path,
+        dense,
         [(1, 2), (2, 1), (3, 3), (4, 5), (5, 6), (6, 4)],  # dups/self/cycle
     ]
     rng = random.Random(7)
@@ -417,23 +430,19 @@ def test_connected_components_star_equivalence(spark):
             [(rng.randint(1, n), rng.randint(1, n)) for _ in range(rng.randint(1, 60))]
         )
     for edges in cases:
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long").filter(
-            F.col("id_a") != F.col("id_b")
-        )
-        if pairs.count() == 0:
+        edges = [(a, b) for a, b in edges if a != b]
+        if not edges:
             continue
-        star = {r["id"]: r["cluster_id"]
-                for r in dedup.connected_components_star(pairs).collect()}
-        label = {r["id"]: r["cluster_id"]
-                 for r in dedup.connected_components(pairs, max_iter=60).collect()}
-        assert star == label, edges
-    # a 30-node path needs ~diameter rounds for label propagation but
-    # must finish in few star rounds — max_iter=8 ≫ log2(30)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 30)], "id_a long, id_b long"
-    )
-    out = dedup.connected_components_star(chain, max_iter=8).collect()
-    assert {r["cluster_id"] for r in out} == {1} and len(out) == 30
+        star_runs.clear()
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {r["id"]: r["cluster_id"]
+               for r in dedup.connected_components(pairs).collect()}
+        assert got == _union_find_components(edges), edges
+        if edges == path:
+            assert star_runs and set(got.values()) == {1}
+        if edges == dense:
+            assert not star_runs
+            assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_source_stats_and_filter_by_source(spark):

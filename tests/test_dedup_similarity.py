@@ -532,7 +532,7 @@ def test_dedup_survivors_quality_singleton_and_star(spark):
     out = {
         r.doc_id: r
         for r in dedup.dedup_survivors(
-            docs, pairs, score_col="quality", algorithm="star"
+            docs, pairs, score_col="quality"
         ).collect()
     }
     assert out[7].is_canonical and out[8].is_canonical  # all singletons

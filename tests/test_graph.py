@@ -215,7 +215,7 @@ def test_connected_components_incremental_equals_full(spark):
         df = spark.createDataFrame(pair_list, "id_a long, id_b long")
         return {
             r["id"]: r["cluster_id"]
-            for r in dedup.connected_components_auto(df).collect()
+            for r in dedup.connected_components(df).collect()
         }
 
     full = comp_of(pairs)
@@ -266,7 +266,7 @@ def test_components_sink_batches_and_replay(spark, tmp_path):
 
     full = {
         r["id"]: r["cluster_id"]
-        for r in dedup.connected_components_auto(
+        for r in dedup.connected_components(
             spark.createDataFrame(pairs, "id_a long, id_b long")
         ).collect()
     }
@@ -301,7 +301,7 @@ def test_components_sink_delta_mode_bounded_writes(spark, tmp_path):
 
     full = {
         r["id"]: r["cluster_id"]
-        for r in dedup.connected_components_auto(
+        for r in dedup.connected_components(
             spark.createDataFrame(pairs, "id_a long, id_b long")
         ).collect()
     }
@@ -341,7 +341,7 @@ def test_components_delta_equals_incremental_under_lww(spark):
     rng = np.random.default_rng(53)
     pairs = sorted({(int(a), int(b)) for a, b in rng.integers(0, 40, (60, 2)) if a != b})
     old, shard = pairs[: len(pairs) // 2], pairs[len(pairs) // 2:]
-    labels = dedup.connected_components_auto(
+    labels = dedup.connected_components(
         spark.createDataFrame(old, "id_a long, id_b long")
     ).localCheckpoint()
     shard_df = spark.createDataFrame(shard, "id_a long, id_b long")
@@ -561,32 +561,23 @@ def test_sssp_positive_weight_contract_and_max_iter(spark):
                directed=True, max_iter=3)
 
 
-def test_coreness_k4_with_pendant(spark):
-    from cdc_pipeline_with_kafka_spark.operators import graph as G
+def test_coreness_hindex_max_rounds_guard(spark):
+    """Planted violation: K4 + pendant needs two h-index rounds (the
+    hub's degree 4 drops to 3, then the fixpoint check), so
+    max_rounds=1 must raise rather than return the half-converged
+    vector, and max_rounds=2 is exact.  (A clique would not do: its
+    degree vector is already the fixpoint.)"""
+    import pytest as _pt
+
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     e = spark.createDataFrame(k4 + [(0, 9)], "src long, dst long")
-    out = {r["node"]: r["coreness"] for r in G.coreness(e).collect()}
+    with _pt.raises(ValueError, match="max_rounds=1"):
+        G.coreness_hindex(e, max_rounds=1)
+    out = {
+        r["node"]: r["coreness"]
+        for r in G.coreness_hindex(e, max_rounds=2).collect()
+    }
     assert out == {0: 3, 1: 3, 2: 3, 3: 3, 9: 1}
-
-
-def test_coreness_random_matches_replay(spark):
-    import random
-    from cdc_pipeline_with_kafka_spark.operators import graph as G
-    rng = random.Random(5)
-    edges = list({(rng.randint(0, 12), rng.randint(0, 12))
-                  for _ in range(40)})
-    e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["coreness"] for r in G.coreness(e).collect()}
-    assert got == G.coreness_replay(edges)
-
-
-def test_coreness_max_k_guard(spark):
-    import pytest as _pt
-    from cdc_pipeline_with_kafka_spark.operators import graph as G
-    k5 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    e = spark.createDataFrame(k5, "src long, dst long")
-    with _pt.raises(ValueError, match="max_k"):
-        G.coreness(e, max_k=2)
 
 
 def test_label_propagation_matches_pure_python_replay(spark):
@@ -629,19 +620,25 @@ def test_label_propagation_matches_pure_python_replay(spark):
 def test_coreness_hindex_equals_replay(spark):
     """The h-index fixpoint returns EXACTLY the matula-beck peel's
     coreness (pure-Python replay — the same oracle the 'core' gate
-    pins the Spark peel against) on a randomized graph with a planted
-    dense clique riding over a sparse background."""
+    pins coreness_hindex against) on a K4 with a pendant and on a
+    randomized graph with a planted dense clique riding over a sparse
+    background."""
     import random
 
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    k4_pendant = k4 + [(0, 9)]
+    assert G.coreness_replay(k4_pendant) == {0: 3, 1: 3, 2: 3, 3: 3, 9: 1}
     rng = random.Random(11)
     edges = {(rng.randrange(60), rng.randrange(60)) for _ in range(150)}
     edges |= {(i, j) for i in range(50, 56) for j in range(50, 56) if i < j}
     edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    hind = {
-        r["node"]: r["coreness"] for r in G.coreness_hindex(df).collect()
-    }
-    assert hind == G.coreness_replay(edges)
+    for case in (k4_pendant, edges):
+        df = spark.createDataFrame(case, "src long, dst long")
+        hind = {
+            r["node"]: r["coreness"]
+            for r in G.coreness_hindex(df).collect()
+        }
+        assert hind == G.coreness_replay(case)
 
 
 def test_coreness_hindex_incremental_equals_full(spark):
