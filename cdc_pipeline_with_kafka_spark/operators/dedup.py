@@ -1178,7 +1178,6 @@ def overlap_census(
     winnow_w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_pairs: bool = False,
 ) -> dict:
     """One-call duplication census across the three TEXT pair tiers —
     the text analog of multimodal's overlap_report:
@@ -1196,7 +1195,9 @@ def overlap_census(
              'docs': docs + (cluster_id, is_canonical)} — clusters run
     over the UNION graph, so a doc exact-dup'd to one doc and
     passage-linked to another lands in ONE cluster.  Each tier is the
-    already-gated operator; this function only pins the composition."""
+    already-gated operator; this function only pins the composition.
+    The pair union is materialized once at call time (one eager
+    localCheckpoint job) because both outputs read it."""
     from . import spans as spans_ops
 
     hashed = docs.select(
@@ -1228,14 +1229,12 @@ def overlap_census(
         "id_a", "id_b", F.lit("substr").alias("tier"),
         F.col("shared_fps").cast("double").alias("strength"),
     )
-    pairs = exact_pairs.unionByName(near).unionByName(substr)
-    if checkpoint_pairs:
-        # both outputs reference the pair union (the report AND the
-        # clustering) — Spark re-evaluates a union subtree once per
-        # reference, so consumers reading both should pin it (the
-        # semdedup gate's localCheckpoint seam, made optional here
-        # because eager materialization is a caller decision)
-        pairs = pairs.localCheckpoint(eager=True)
+    # both outputs reference the pair union (the report AND the
+    # clustering) — Spark re-evaluates a union subtree once per
+    # reference, so pin it (the semdedup gate's localCheckpoint seam)
+    pairs = (
+        exact_pairs.unionByName(near).unionByName(substr).localCheckpoint(eager=True)
+    )
     clustered = dedup_survivors(
         docs, pairs.select("id_a", "id_b").distinct(), id_col=id_col
     )

@@ -25,10 +25,10 @@ _FUZZY_AUTO_MIN_DF = 256
 
 
 def _fuzzy_auto_cap(mx, p99) -> int | None:
-    """fuzzy_join's auto max_gram_df decision rule, pure so tests pin
-    it: engage only when the hottest gram's df exceeds BOTH 4×p99(df)
-    (it is a skew outlier, not the shape of the vocabulary) and the
-    absolute floor; the cap is that threshold, so only the outlier
+    """fuzzy_join's hot-gram cap rule, pure so tests pin it: engage
+    only when the hottest gram's df exceeds BOTH 4×p99(df) (it is a
+    skew outlier, not the shape of the vocabulary) and the absolute
+    floor; the cap is that threshold, so only the outlier
     tail prunes and few strings reroute to the length-band lane."""
     if mx is None:
         return None
@@ -908,7 +908,6 @@ def fuzzy_join(
     right_col: str,
     max_dist: int = 2,
     q: int = 2,
-    max_gram_df: int | None | str = "auto",
 ) -> DataFrame:
     """Edit-distance (Levenshtein) join without the cross product —
     the fuzzy field matcher `record_linkage_score` composes with for
@@ -933,30 +932,28 @@ def fuzzy_join(
     and matching pairs join back to the row tables at the end — 100
     TB row counts pay two hash joins, never the pairing itself.
 
-    `max_gram_df` prunes hot-gram postings (grams shared by more
-    than that many distinct strings, both sides pooled) — the
+    Hot-gram cap: a cap prunes hot-gram postings (grams shared by
+    more than `cap` distinct strings, both sides pooled) — the
     Σ|posting|² skew killer — WITHOUT losing exactness, unlike
     ngram_jaccard_pairs' recall-trading cap: the count threshold
     relaxes by the pair's smaller hot-gram count (a true pair hides
     at most min(h_a, h_b) shared grams in the dropped set), and
     strings whose kept-gram count ≤ max_dist·q reroute to the
-    length-band lane.  The hot set is ≤ Σ|grams| / max_gram_df
-    entries and broadcasts.  Results are IDENTICAL with or without
-    the cap (pinned by the parity test); only the plan changes.
+    length-band lane.  The hot set is ≤ Σ|grams| / cap entries and
+    broadcasts.  Results are IDENTICAL with or without the cap
+    (pinned by the parity test); only the plan changes.
 
-    The DEFAULT ``max_gram_df="auto"`` picks the cap from the gram
-    document-frequency profile the posting join implicitly depends
-    on anyway (one extra vocabulary-sized aggregate, never
-    row-grain): the cap engages only when the hottest gram's df
-    exceeds both ``4 × p99(df)`` and an absolute floor of 256 — an
-    adversarial / stop-gram-heavy vocabulary — and is then set to
-    that threshold, so ≲1% of grams prune and few strings reroute
-    to the length-band lane (which is only length-bounded for
-    naturally short strings; an aggressive cap there would trade one
-    skew for another).  Wholesome vocabularies pay the profile probe
-    and keep the uncapped plan.  ``None`` disables the probe and the
-    cap; an int pins the cap manually.  All three produce identical
-    rows (parity-pinned).
+    The cap comes from the gram document-frequency profile the
+    posting join implicitly depends on anyway (one vocabulary-sized
+    aggregate, never row-grain, collected EAGERLY as one row at call
+    time): it engages only when the hottest gram's df exceeds both
+    ``4 × p99(df)`` and an absolute floor of 256 — an adversarial /
+    stop-gram-heavy vocabulary — and is then set to that threshold
+    (`_fuzzy_auto_cap`), so ≲1% of grams prune and few strings
+    reroute to the length-band lane (which is only length-bounded
+    for naturally short strings; an aggressive cap there would trade
+    one skew for another).  Wholesome vocabularies pay the profile
+    probe and keep the uncapped plan.
 
     Output: left rows × right rows for matching pairs + (dist).
     NULL keys never match.
@@ -992,43 +989,31 @@ def fuzzy_join(
     ).withColumn("_lenb", F.length("_b")).localCheckpoint(eager=False)
 
     floor_g = max_dist * q
-    if isinstance(max_gram_df, str):
-        if max_gram_df != "auto":
-            raise ValueError(
-                "max_gram_df must be an int, None, or 'auto'"
-            )
-        gram_df = (
-            A.select(F.explode("_ga").alias("_g"))
-            .unionByName(B.select(F.explode("_gb").alias("_g")))
-            .groupBy("_g")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .localCheckpoint(eager=False)
-        )
-        prof = gram_df.agg(
-            F.max("_df").alias("mx"),
-            F.expr("approx_percentile(_df, 0.99)").alias("p99"),
-        ).collect()[0]
-        max_gram_df = _fuzzy_auto_cap(prof["mx"], prof["p99"])
-    if max_gram_df is not None:
+    gram_df = (
+        A.select(F.explode("_ga").alias("_g"))
+        .unionByName(B.select(F.explode("_gb").alias("_g")))
+        .groupBy("_g")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .localCheckpoint(eager=False)
+    )
+    prof = gram_df.agg(
+        F.max("_df").alias("mx"),
+        F.expr("approx_percentile(_df, 0.99)").alias("p99"),
+    ).collect()[0]
+    cap = _fuzzy_auto_cap(prof["mx"], prof["p99"])
+    if cap is not None:
         # SOUND hot-gram pruning: drop postings of grams shared by
-        # more than `max_gram_df` distinct strings (both sides
-        # pooled).  Unlike ngram_jaccard_pairs' recall-trading cap,
-        # exactness is PRESERVED: with h_s = s's hot-gram count, a
-        # true pair still shares ≥ max(ca, cb) − d·q − min(ha, hb)
-        # KEPT grams (each side can hide at most its own hot grams),
-        # so the count filter relaxes by least(ha, hb); strings whose
-        # KEPT count ≤ d·q (where that bound stops guaranteeing a
-        # shared kept posting) reroute to the length-band lane.
-        hot = (
-            A.select(F.explode("_ga").alias("_g"))
-            .unionByName(B.select(F.explode("_gb").alias("_g")))
-            .groupBy("_g")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > int(max_gram_df))
-            .select("_g")
-            .localCheckpoint(eager=False)
+        # more than `cap` distinct strings (both sides pooled).
+        # Unlike ngram_jaccard_pairs' recall-trading cap, exactness
+        # is PRESERVED: with h_s = s's hot-gram count, a true pair
+        # still shares ≥ max(ca, cb) − d·q − min(ha, hb) KEPT grams
+        # (each side can hide at most its own hot grams), so the
+        # count filter relaxes by least(ha, hb); strings whose KEPT
+        # count ≤ d·q (where that bound stops guaranteeing a shared
+        # kept posting) reroute to the length-band lane.
+        hot_set = gram_df.filter(F.col("_df") > cap).agg(
+            F.collect_set("_g").alias("hs")
         )
-        hot_set = hot.agg(F.collect_set("_g").alias("hs"))
         A = A.crossJoin(F.broadcast(hot_set)).withColumn(
             "_ka", F.array_except("_ga", F.col("hs"))
         ).withColumn("_ha", F.col("_ca") - F.size("_ka")).drop("hs")
@@ -1420,7 +1405,6 @@ def resolve_entities(
     max_dist: int = 2,
     q: int = 2,
     match_micro: int | None = None,
-    max_gram_df: int | str | None = "auto",
 ) -> DataFrame:
     """End-to-end entity resolution over ONE record table — the
     composition the engine's parts exist for, packaged: `fuzzy_join`
@@ -1451,13 +1435,9 @@ def resolve_entities(
     star contraction), so a long chain of matches still closes in
     O(log n) rounds.  The failure mode to watch is a TOO-LOOSE blocker
     (high max_dist on short names) chaining everything into one
-    mega-entity — check the entity_size distribution.
-
-    `max_gram_df` passes through to `fuzzy_join`: the default
-    ``"auto"`` EAGERLY runs one small gram-document-frequency probe
-    job at call time (a 1-row collect) to decide whether to cap hot
-    grams — on tiny or per-batch frames pass ``None`` to keep plan
-    building fully lazy, or an int to pin the cap."""
+    mega-entity — check the entity_size distribution.  fuzzy_join's
+    hot-gram probe runs one small eager job (a 1-row collect) at call
+    time."""
     if (field_weights is None) != (match_micro is None):
         raise ValueError(
             "field_weights and match_micro come together: weights "
@@ -1482,8 +1462,7 @@ def resolve_entities(
         *[F.col(f).alias(f"{f}_b") for f in fields],
     )
     pairs = fuzzy_join(
-        a, b, "_nm_a", "_nm_b", max_dist=max_dist, q=q,
-        max_gram_df=max_gram_df,
+        a, b, "_nm_a", "_nm_b", max_dist=max_dist, q=q
     ).filter(F.col("_id_a") < F.col("_id_b"))
     if field_weights:
         scored = record_linkage_score(pairs, field_weights)

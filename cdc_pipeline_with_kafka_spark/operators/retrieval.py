@@ -79,25 +79,20 @@ def build_bm25_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 1,
-    hashed: bool = True,
-    keep_term: bool = False,
 ) -> DataFrame:
     """Inverted postings index: one row per (doc, term) with the
     in-doc term frequency and the doc length in tokens.
 
-    DEFAULT LAYOUT IS HASHED (``hashed=True``): the join/shuffle key
-    is ``term_hash`` = xxhash64(term) computed BEFORE the tf groupBy,
-    so the aggregation shuffle and the persisted index carry an 8-byte
-    long instead of the term string (strings roughly double index
-    bytes and shuffle width at corpus vocab scale — SCALING.md §14).
-    ``keep_term=True`` keeps the string column alongside for
-    debugging/inspection.  ``hashed=False`` is the legacy string-keyed
-    layout; bm25_topk consumes either (it detects ``term_hash``).
-    Collision math: xxhash64 is a 2⁶⁴ space, so expected colliding
-    term pairs ≈ V²/2⁶⁵ — at V = 10⁹ distinct terms (large web corpus
-    incl. bigrams) that is ~0.03 expected collisions corpus-wide, and
-    a collision only merges two terms' postings (bounded local score
-    perturbation), it cannot corrupt other terms.
+    Postings are keyed by ``term_hash`` = xxhash64(term), computed
+    BEFORE the tf groupBy, so the aggregation shuffle and the
+    persisted index carry an 8-byte long instead of the term string
+    (strings roughly double index bytes and shuffle width at corpus
+    vocab scale — SCALING.md §14).  Collision math: xxhash64 is a 2⁶⁴
+    space, so expected colliding term pairs ≈ V²/2⁶⁵ — at V = 10⁹
+    distinct terms (large web corpus incl. bigrams) that is ~0.03
+    expected collisions corpus-wide, and a collision only merges two
+    terms' postings (bounded local score perturbation), it cannot
+    corrupt other terms.
 
     One scan → explode → hash → groupBy(doc, term_hash); the doc
     length rides on every posting row via a window over the doc id
@@ -109,18 +104,13 @@ def build_bm25_index(
     tokens = docs.select(
         F.col(id_col), F.explode(_terms(F.col(text_col), ngram)).alias("term")
     )
-    keys = _posting_keys(id_col, hashed, keep_term)
-    if hashed:
-        tokens = tokens.withColumn("term_hash", F.xxhash64("term"))
-    tf = tokens.groupBy(*keys).agg(F.count(F.lit(1)).alias("tf"))
+    tf = (
+        tokens.withColumn("term_hash", F.xxhash64("term"))
+        .groupBy(id_col, "term_hash")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
     w_doc = Window.partitionBy(id_col)
     return tf.withColumn("dl", F.sum("tf").over(w_doc))
-
-
-def _posting_keys(id_col: str, hashed: bool, keep_term: bool) -> list[str]:
-    if not hashed:
-        return [id_col, "term"]
-    return [id_col, "term_hash"] + (["term"] if keep_term else [])
 
 
 def build_bm25f_index(
@@ -129,8 +119,6 @@ def build_bm25f_index(
     *,
     id_col: str = "doc_id",
     ngram: int = 1,
-    hashed: bool = True,
-    keep_term: bool = False,
 ) -> DataFrame:
     """Field-weighted postings (BM25F with INTEGER field boosts — the
     reference's title-weighting idea, keyword-extraction parity F3,
@@ -142,10 +130,9 @@ def build_bm25f_index(
     field by w is identical to repeating its text w times, which the
     equivalence test pins against plain bm25_topk on the repeated
     concatenation (bag-of-terms statistics don't see token order).
-    The output schema matches build_bm25_index (same
-    ``hashed``/``keep_term`` layout options), so bm25_topk consumes
-    it unchanged (weigh QUERY text normally — boosts are a
-    document-side notion).
+    The output schema matches build_bm25_index (``term_hash``
+    postings), so bm25_topk consumes it unchanged (weigh QUERY text
+    normally — boosts are a document-side notion).
 
     ONE corpus scan: the fields stack as an array of (weight, tokens)
     structs exploded in place — not one scan per field (fields are
@@ -173,10 +160,11 @@ def build_bm25f_index(
         F.col("fw.w").alias("w"),
         F.explode("fw.toks").alias("term"),
     )
-    keys = _posting_keys(id_col, hashed, keep_term)
-    if hashed:
-        stacked = stacked.withColumn("term_hash", F.xxhash64("term"))
-    merged = stacked.groupBy(*keys).agg(F.sum("w").alias("tf"))
+    merged = (
+        stacked.withColumn("term_hash", F.xxhash64("term"))
+        .groupBy(id_col, "term_hash")
+        .agg(F.sum("w").alias("tf"))
+    )
     return merged.withColumn("dl", F.sum("tf").over(Window.partitionBy(id_col)))
 
 
@@ -246,29 +234,20 @@ def bm25_topk(
             [], "query_id long, doc_id long, score_micro long, rnk int"
         )
     vocab_df = spark.createDataFrame([(t,) for t in vocab], "term string")
-    # layout detection: hashed postings join on term_hash (8-byte
-    # long), legacy string postings on term; query terms hash through
-    # the SAME JVM xxhash64 the index build used, so the two sides
-    # cannot disagree (one bounded collect — query vocab only)
-    hashed = "term_hash" in index.columns
-    key = "term_hash" if hashed else "term"
-    if hashed:
-        qhash = {
-            r["term"]: int(r["term_hash"])
-            for r in vocab_df.withColumn(
-                "term_hash", F.xxhash64("term")
-            ).collect()
-        }
-        probe = spark.createDataFrame(
-            [(h,) for h in sorted(set(qhash.values()))], "term_hash long"
-        )
-    else:
-        qhash = {t: t for t in vocab}
-        probe = vocab_df
+    # query terms hash through the SAME JVM xxhash64 the index build
+    # used, so the two sides cannot disagree (one bounded collect —
+    # query vocab only)
+    qhash = {
+        r["term"]: int(r["term_hash"])
+        for r in vocab_df.withColumn("term_hash", F.xxhash64("term")).collect()
+    }
+    probe = spark.createDataFrame(
+        [(h,) for h in sorted(set(qhash.values()))], "term_hash long"
+    )
     dfs = {
-        r[key]: int(r["df"])
-        for r in index.join(F.broadcast(probe), key)
-        .groupBy(key)
+        r["term_hash"]: int(r["df"])
+        for r in index.join(F.broadcast(probe), "term_hash")
+        .groupBy("term_hash")
         .agg(F.count(F.lit(1)).alias("df"))
         .collect()
     }
@@ -287,9 +266,7 @@ def bm25_topk(
             [], "query_id long, doc_id long, score_micro long, rnk int"
         )
     w_df = spark.createDataFrame(
-        weights,
-        f"query_id long, {key} {'long' if hashed else 'string'}, "
-        "qtf long, idf_micro long",
+        weights, "query_id long, term_hash long, qtf long, idf_micro long"
     )
 
     # contribution — the exact double expression the Python twin
@@ -304,7 +281,7 @@ def bm25_topk(
     contrib = F.round(num / den, 0).cast("long")
 
     scores = (
-        index.join(F.broadcast(w_df), key)
+        index.join(F.broadcast(w_df), "term_hash")
         .select("query_id", F.col(id_col).alias("doc_id"), contrib.alias("c"))
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").alias("score_micro"))

@@ -1383,16 +1383,6 @@ def semantic_dedup_pairs(
     )
 
 
-# embed_hashed_ngrams' Arrow path wins at EVERY dim (PLANS.md table:
-# 3-6× at dim 32-64, 96× at dim 1024 — the JVM fold is O(dim·grams)
-# interpreted lambda steps per doc and evaluates md5 twice per gram,
-# the Arrow pass is O(grams) hashing + an O(dim) bincount), so 'auto'
-# always picks arrow; 'jvm' stays available for Python-worker-free
-# deployments and as the pure-plan form.  The two paths produce
-# IDENTICAL float32 vectors (test_embed_hashed_paths_identical).
-EMBED_ARROW_DIM = 0
-
-
 def embed_hashed_ngrams(
     docs: DataFrame,
     *,
@@ -1401,7 +1391,6 @@ def embed_hashed_ngrams(
     text_col: str = "text",
     id_col: str = "doc_id",
     normalize: bool = True,
-    path: str = "auto",
 ) -> DataFrame:
     """Deterministic text embeddings by the hashing trick (Weinberger
     et al. 2009): each word n-gram hashes to a bucket with a ±1 sign,
@@ -1412,99 +1401,22 @@ def embed_hashed_ngrams(
     so raw text flows end-to-end through hybrid search with zero
     dependencies.
 
-    Spark shape, ``path='jvm'``: everything runs IN-ROW (md5-bucket
-    transform over the n-gram array, then a signed-count fold per
-    bucket — O(dim·grams) JVM lambda steps per doc).  ``path='arrow'``:
-    one mapInPandas pass — O(grams) md5 calls + an O(dim) bincount per
-    doc, so per-doc cost is independent of dim.  ``'auto'`` (default)
-    picks arrow at every dim (measured faster throughout — PLANS.md);
-    pass 'jvm' explicitly for Python-worker-free deployments.  The
-    paths emit IDENTICAL
-    vectors: bucket counts are exact integers, the squared-norm sum
-    of exact integers is exact in float64 in ANY order, and the one
-    divide-then-cast-to-float32 is the same IEEE op both sides
-    (parity-tested; tokenization twins assume the corpus convention —
-    whitespace tokens, ASCII-ish text — exotic Unicode case-folding
-    could diverge between JVM and Python lower()).  Counts are exact
-    integers before the one normalize division.  No explode, no
+    Spark shape: one mapInPandas pass — one md5 per gram (bucket from
+    the first 8 hex digits, sign from the 9th) + one signed bincount
+    per doc, so per-doc cost is O(grams) and independent of dim.  An
+    in-row JVM fold (md5-bucket transform, then a signed-count fold
+    per bucket) computes the same vectors but costs O(dim·grams)
+    lambda steps per doc — 3-6× slower at dim 32-64 and 96× at dim
+    1024 (PLANS.md); tests keep it as the independent reference.
+    Bucket counts are exact integers, the squared-norm sum of exact
+    integers is exact in float64 in ANY order, and the one
+    divide-then-cast-to-float32 is a single IEEE op, so the vectors
+    are bit-reproducible (tokenization twins assume the corpus
+    convention — whitespace tokens, ASCII-ish text).  No explode, no
     shuffle.  Same ids in, one (id, embedding array<float>) row out —
     schema-compatible with embeddings.parquet."""
     if dim < 2:
         raise ValueError("dim must be ≥ 2")
-    if path not in ("jvm", "arrow", "auto"):
-        raise ValueError("path must be jvm|arrow|auto")
-    if path == "auto":
-        path = "arrow" if dim > EMBED_ARROW_DIM else "jvm"
-    if path == "arrow":
-        return _embed_hashed_arrow(
-            docs, dim=dim, ngram=ngram, text_col=text_col,
-            id_col=id_col, normalize=normalize,
-        )
-    from .textstats import _tokens, _word_ngrams
-
-    grams = _word_ngrams(_tokens(F.col(text_col)), ngram)
-    # bucket in [0, dim), sign from the next md5 nibble — one hash per gram
-    h = F.transform(
-        grams,
-        lambda g: F.struct(
-            (F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("bigint") % dim)
-            .cast("int").alias("b"),
-            F.when(
-                F.conv(F.substring(F.md5(g), 9, 1), 16, 10).cast("int") % 2 == 0,
-                F.lit(1),
-            ).otherwise(F.lit(-1)).alias("s"),
-        ),
-    )
-    # pin ONE evaluation of the hashed array (winnow's barrier rationale)
-    base = spread(docs, id_col).select(
-        F.col(id_col), F.explode(F.array(h)).alias("_h")
-    )
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: F.aggregate(
-            F.col("_h"),
-            F.lit(0),
-            lambda acc, x: acc + F.when(x["b"] == j, x["s"]).otherwise(F.lit(0)),
-        ),
-    )
-    if not normalize:
-        return base.select(
-            id_col,
-            F.transform(counts, lambda v: v.cast("float")).alias("embedding"),
-        )
-    cnt_col = F.col("_cnt")
-    norm = F.sqrt(
-        F.aggregate(
-            cnt_col, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v
-        )
-    )
-    return (
-        base.select(id_col, F.explode(F.array(counts)).alias("_cnt"))
-        .select(
-            id_col,
-            F.when(
-                norm > 0,
-                F.transform(cnt_col, lambda v: (v.cast("double") / norm).cast("float")),
-            )
-            .otherwise(F.transform(cnt_col, lambda v: v.cast("float")))
-            .alias("embedding"),
-        )
-    )
-
-
-def _embed_hashed_arrow(
-    docs: DataFrame,
-    *,
-    dim: int,
-    ngram: int,
-    text_col: str,
-    id_col: str,
-    normalize: bool,
-) -> DataFrame:
-    """Arrow batch path of embed_hashed_ngrams — one md5 per gram
-    (the JVM transform evaluates F.md5 twice per gram: higher-order
-    lambdas defeat CSE) + one signed bincount per doc; per-doc cost is
-    independent of dim.  Emits vectors identical to the JVM fold."""
     import hashlib
     import math
 
@@ -1531,8 +1443,7 @@ def _embed_hashed_arrow(
                     v[b] += 1 if int(hx[8], 16) % 2 == 0 else -1
                 if normalize:
                     # Σv² over exact int64 is exact in float64 in any
-                    # order (every partial sum is an integer < 2⁵³),
-                    # so numpy's pairwise sum == the JVM's left fold
+                    # order (every partial sum is an integer < 2⁵³)
                     norm = math.sqrt(float(np.sum(v.astype(np.float64) ** 2)))
                     out = (
                         (v / norm).astype(np.float32)
@@ -1651,13 +1562,18 @@ def semantic_dedup(
 KMEANS_ARROW_LITERALS = 192
 
 
+def _kmeans_use_arrow(cm: list[list[float]]) -> bool:
+    """The one assignment-path rule: Arrow when the centroid matrix
+    would put more than KMEANS_ARROW_LITERALS literals in the plan."""
+    return len(cm) * len(cm[0]) > KMEANS_ARROW_LITERALS
+
+
 def kmeans_train_distributed(
     corpus: DataFrame,
     k: int,
     iters: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_path: str = "auto",
 ):
     """Distributed Lloyd k-means over the FULL corpus (squared-L2).
 
@@ -1669,14 +1585,14 @@ def kmeans_train_distributed(
     / semantic_dedup (note: those assign by cosine; Lloyd's euclidean
     assignment coincides on L2-normalized inputs).
 
-    ``assign_path``: 'codegen' embeds k×d centroid literals in a
+    Assignment path, picked from k·d (``_kmeans_use_arrow``): up to
+    KMEANS_ARROW_LITERALS it embeds the k×d centroid literals in a
     whole-stage-codegen fold — unbeatable at small k·d, but the plan
-    recompiles per iteration and explodes at SemDeDup-scale k;
-    'arrow' streams Arrow batches through a numpy pass whose
-    per-element float64 op order REPLAYS the codegen fold exactly
-    (see _kmeans_iter_stats_arrow — assignments and integer update
-    cells are bit-identical, parity-tested); 'auto' (default) picks
-    arrow when k·d > KMEANS_ARROW_LITERALS.
+    recompiles per iteration and explodes at SemDeDup-scale k; above
+    it, Arrow batches stream through a numpy pass whose per-element
+    float64 op order REPLAYS the codegen fold exactly (see
+    _kmeans_iter_stats_arrow — assignments and integer update cells
+    are bit-identical, parity-tested).
 
     Driver traffic per iteration is k×(d+1) longs — independent of
     corpus size, so the loop holds at 100 TB where the capped trainer
@@ -1689,9 +1605,7 @@ def kmeans_train_distributed(
     cm = [[float(v) for v in r[vec_col]] for r in init_rows]
     d = len(cm[0])
     for _ in range(iters):
-        stats = _kmeans_iter_stats(
-            corpus, cm, vec_col, assign_path=assign_path
-        ).collect()
+        stats = _kmeans_iter_stats(corpus, cm, vec_col).collect()
         by_cid = {r["cid"]: r for r in stats}
         cm = [
             _kmeans_centroid_update(by_cid.get(c), cm[c], d) for c in range(k)
@@ -1703,20 +1617,13 @@ def _kmeans_iter_stats(
     corpus: DataFrame,
     cm: list[list[float]],
     vec_col: str,
-    assign_path: str = "codegen",
 ) -> DataFrame:
     """One Lloyd iteration's update aggregate as a DataFrame (the
     trainer collects its ≤k rows): assignment map → groupBy(cid) with
     integer partial-agg cells.  Factored out so test_plans can pin the
     shape — partial aggregation (map-side combine), no Window, no
     join."""
-    if assign_path not in ("codegen", "arrow", "auto"):
-        raise ValueError("assign_path must be codegen|arrow|auto")
-    if assign_path == "auto":
-        assign_path = (
-            "arrow" if len(cm) * len(cm[0]) > KMEANS_ARROW_LITERALS else "codegen"
-        )
-    if assign_path == "arrow":
+    if _kmeans_use_arrow(cm):
         return _kmeans_iter_stats_arrow(corpus, cm, vec_col)
     d = len(cm[0])
     vec = F.col(vec_col).cast("array<double>")
@@ -1837,19 +1744,12 @@ def kmeans_assign_df(
     cm: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_path: str = "auto",
 ) -> DataFrame:
     """(id, cid) assignment of a corpus against fixed centroids, with
     the same codegen/arrow dispatch as the trainer — both paths
     bit-identical (see _kmeans_assign_np)."""
-    if assign_path not in ("codegen", "arrow", "auto"):
-        raise ValueError("assign_path must be codegen|arrow|auto")
-    if assign_path == "auto":
-        assign_path = (
-            "arrow" if len(cm) * len(cm[0]) > KMEANS_ARROW_LITERALS else "codegen"
-        )
     vec = F.col(vec_col).cast("array<double>")
-    if assign_path == "codegen":
+    if not _kmeans_use_arrow(cm):
         return df.select(F.col(id_col), _kmeans_assign_col(vec, cm).alias("cid"))
     from pyspark.sql import types as T
 
@@ -1973,7 +1873,6 @@ def kmeans_update_distributed(
     state,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_path: str = "auto",
 ):
     """Online k-means for rolling admission: assign a NEW shard to the
     CURRENT centroids (one codegen map + one k×(d+1)-integer-cell
@@ -1992,12 +1891,8 @@ def kmeans_update_distributed(
     centroids."""
     cm, cnts, qsums = state
     d = len(cm[0])
-    assigned = kmeans_assign_df(
-        shard, cm, id_col=id_col, vec_col=vec_col, assign_path=assign_path
-    )
-    stats = _kmeans_iter_stats(
-        shard, cm, vec_col, assign_path=assign_path
-    ).collect()
+    assigned = kmeans_assign_df(shard, cm, id_col=id_col, vec_col=vec_col)
+    stats = _kmeans_iter_stats(shard, cm, vec_col).collect()
     new_cnts = list(cnts)
     new_qsums = [list(q) for q in qsums]
     for r in stats:

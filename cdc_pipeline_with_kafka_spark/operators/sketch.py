@@ -30,7 +30,6 @@ Three operators:
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
@@ -1175,12 +1174,9 @@ def winsorize(
 # reference-size pivot for quantile_normalize's rank form: below this
 # optimizer estimate the single-window rank is cheaper (no extra
 # exchanges); above it the range-partitioned rank keeps the reference
-# off a single task.  Parameterised (scale-dependent settings must not
-# hard-code local numbers); 8 MiB keeps the driver's sf0.1 bench on
-# the small form while sf1+ (~20 MiB of events parquet) flips.
-QN_RANGE_RANK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_QN_RANGE_BYTES", str(8 << 20))
-)
+# off a single task.  8 MiB keeps sf0.1 events on the small form while
+# sf1+ (~20 MiB of events parquet) flips.
+QN_RANGE_RANK_BYTES = 8 << 20
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -1201,7 +1197,6 @@ def quantile_normalize(
     group_cols: list[str],
     reference: DataFrame | None = None,
     n_cuts: int = 1000,
-    scalable_rank: bool | None = None,
 ) -> DataFrame:
     """Map every value onto the REFERENCE distribution by rank —
     batch-effect removal: after this, every group's `value_col` has
@@ -1227,16 +1222,13 @@ def quantile_normalize(
 
     Output: input columns + (value_qn).
 
-    `scalable_rank` picks how the reference is ranked: False = one
-    global row_number window (fastest below a few hundred MB — no
-    extra shuffles), True = range-partition + per-partition rank +
-    in-plan offsets (the 100 TB form: the reference never serializes
-    through one task), None (default) = decide from the reference's
-    optimizer size estimate against `QN_RANGE_RANK_BYTES`
-    ($SPARK_GRAFT_QN_RANGE_BYTES, default 8 MiB — sized so the
-    driver's sf0.1 bench keeps the small form and sf1+ flips).  Both
-    forms produce the identical cut table: any rank assignment
-    consistent with the value order maps rank→value identically.
+    The reference's optimizer size estimate picks how it is ranked:
+    at most `QN_RANGE_RANK_BYTES` (8 MiB) it takes one global
+    row_number window (no extra shuffles); above it, range-partition
+    + per-partition rank + in-plan offsets (the 100 TB form: the
+    reference never serializes through one task).  Both forms
+    produce the identical cut table: any rank assignment consistent
+    with the value order maps rank→value identically.
     """
     if n_cuts < 1 or 1_000_000 % n_cuts != 0:
         raise ValueError("n_cuts must divide 1e6 (e.g. 100, 1000)")
@@ -1245,12 +1237,10 @@ def quantile_normalize(
     # cut table built RELATIONALLY (range ⋈ ranked reference), not as
     # a group_quantiles literal cuts array: n_cuts=1000 literal
     # structs blow the 64 KB whole-stage-codegen method limit and
-    # drop the plan to interpreted mode (caught by bench.py noise)
+    # drop the plan to interpreted mode (caught by bench noise)
     spark = df.sparkSession
     rv = F.col(value_col)
-    if scalable_rank is None:
-        scalable_rank = _estimated_bytes(ref) > QN_RANGE_RANK_BYTES
-    if scalable_rank:
+    if _estimated_bytes(ref) > QN_RANGE_RANK_BYTES:
         # r13 (guide §2.5, VERDICT r12 #5): above bench scale the
         # single-partition row_number over the WHOLE reference (plus
         # the global count window) serializes the reference through
@@ -1259,8 +1249,8 @@ def quantile_normalize(
         # count frame joined broadcast) — any rank assignment
         # consistent with the value order maps rank→value
         # identically (ties carry equal values), so the cut table is
-        # hash-identical (pinned by
-        # tests/test_sketch.py::test_quantile_normalize_scalable_rank).
+        # hash-identical (pinned by the rank-form parity test in
+        # tests/test_sketch.py).
         pid = F.spark_partition_id()
         local = (
             ref.select(rv.alias("_rv"))

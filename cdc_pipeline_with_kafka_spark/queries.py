@@ -5273,21 +5273,9 @@ WHERE shared * 1000000 >= 800000 * (sa.set_size + sb.set_size - shared)
 """
 
 
-def dedup_clusters(spark, sf_dir):
-    """Near-dup pairs → connected components → canonical survivor per
-    cluster (lowest id).  The step that turns pairwise evidence into
-    dedup GROUPS: A~B, B~C collapse to one {A,B,C} cluster with one
-    survivor.  Spark side = operators/dedup.connected_components
-    (min-label rounds, then star contraction); oracle = DuckDB recursive
-    CTE closure over the SAME trigram-Jaccard pairs."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.8, n=3)
-    return dedup.dedup_survivors(docs.select("doc_id"), pairs).select(
-        "doc_id", "cluster_id", "is_canonical"
-    )
-
-
-DEDUP_CLUSTERS_SQL = """
+# component-closure oracle over a pair query spliced in at __PAIRS__
+# (plain string assembly keeps each pair query single-sourced)
+_DEDUP_CLUSTERS_TEMPLATE = """
 WITH RECURSIVE pr AS (__PAIRS__),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pr
@@ -5372,20 +5360,14 @@ WHERE ({band_pred})
 """
 
 
-# splice the jaccard3 pair query into the cluster oracle (plain string
-# assembly keeps DEDUP_JACCARD3_SQL single-sourced)
-_DEDUP_CLUSTERS_TEMPLATE = DEDUP_CLUSTERS_SQL
-DEDUP_CLUSTERS_SQL = DEDUP_CLUSTERS_SQL.replace("__PAIRS__", DEDUP_JACCARD3_SQL)
-
-
 def dedup_end_to_end(spark, sf_dir):
     """The COMPLETE corpus-dedup pipeline a training-data user runs, in
     one gate: raw documents → MinHash+LSH candidate pairs (trigram
     shingles, the linear-candidate 100 TB path) → connected components
-    → survivor table with per-cluster sizes.  Supersedes the former
-    dedup_clusters gate (same clustering machinery, now fed by the
-    production MinHash path instead of the O(n²)-oracle Jaccard pairs,
-    plus the cluster-size rollup a dedup report needs).
+    → survivor table with per-cluster sizes.  Supersedes the r2
+    trigram-Jaccard cluster gate (same clustering machinery, now fed
+    by the production MinHash path instead of the O(n²)-oracle Jaccard
+    pairs, plus the cluster-size rollup a dedup report needs).
 
     Scale shape: pairs are LSH-banded (no self-join), components
     iterate over the pair graph only (tiny vs corpus), sizes are one
@@ -7805,8 +7787,8 @@ def _klad_release(cust):
     r12's localCheckpoint pins the winner there), so that work lands
     in the bench's build_s, not the per-query steady timing — which
     measures reading the pinned winner plus the suite's other
-    branches.  Same class as resolve_entities' max_gram_df='auto'
-    probe in the 'ent' gate; deliberate: the walk is driver-paced by
+    branches.  Same class as fuzzy_join's hot-gram probe in the
+    'ent' gate; deliberate: the walk is driver-paced by
     design and pii_scrub is a correctness gate, not a bench query."""
     released, rung, _stats = textstats.anonymize_with_ladder(
         cust, ["c_mktsegment", "c_nationkey"], k=10,
@@ -9922,7 +9904,6 @@ def span_dedup(spark, sf_dir):
         winnow_min_shared=2,
         winnow_k=_WINNOW_K,
         winnow_w=_WINNOW_W,
-        checkpoint_pairs=True,
     )
     cens_rows = _suite_rows(
         census["pairs"], "cens",
@@ -10978,7 +10959,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "text_profile": (text_profile, _text_profile_sql),
     "dedup_exact_summary": (dedup_exact_summary, DEDUP_EXACT_SQL),
     "dedup_ngram_jaccard3": (dedup_ngram_jaccard3, DEDUP_JACCARD3_SQL),
-    # r3: supersedes dedup_clusters — same clustering machinery, now the
+    # r3: supersedes the r2 cluster gate — same clustering machinery, now the
     # full docs → MinHash pairs → components → survivors+sizes pipeline
     "dedup_end_to_end": (dedup_end_to_end, DEDUP_E2E_SQL),
     "curation_suite": (curation_suite, _curation_suite_sql),
@@ -11011,10 +10992,11 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "corpus_release_suite": (corpus_release_suite, _corpus_release_suite_sql),
 }
 
-# Headline queries for bench.py — chosen to stress distinct physical
-# plans: codegen agg, broadcast join, shuffle agg + window fns, session
-# windows, CDC parse, JSON decode, text explode, inverted-index join,
-# LSH, vector math.  Mapped to functions directly (NOT through
+# Headline queries (perfbench's query_mix runs 13 of them;
+# .bench/dump_plans_r13.py dumps all their plans) — chosen to stress
+# distinct physical plans: codegen agg, broadcast join, shuffle agg +
+# window fns, session windows, CDC parse, JSON decode, text explode,
+# inverted-index join, LSH, vector math.  Mapped to functions directly (NOT through
 # REGISTRY) so bench names stay stable across rounds even when gate
 # entries are merged/renamed: multimodal_features here is the same
 # measured plan as rounds 1's entry of that name.

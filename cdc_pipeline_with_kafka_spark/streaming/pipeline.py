@@ -472,11 +472,10 @@ def make_bm25_index_sink(
     postings_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = True,
 ):
     """foreachBatch sink maintaining a rolling BM25 postings index
     (operators/retrieval.build_bm25_index): each micro-batch's
-    documents are tokenized into (id, term, tf, dl) postings written
+    documents are tokenized into (id, term_hash, tf, dl) postings written
     under ``batch_id=N`` — postings rows are PER-DOC independent and
     the corpus statistics (df, n_docs, avgdl) are recomputed per query
     from the index, so appending a batch IS the whole index merge (the
@@ -486,21 +485,13 @@ def make_bm25_index_sink(
 
     This maintains the SEARCH index; content admission (dedup,
     quality) stays make_admit_shard_sink's job — chain them by
-    streaming the admitted lake into this sink.
-
-    LAYOUT MIGRATION HAZARD: `hashed` (default True since r7) fixes
-    the postings layout for the WHOLE index path — never mix hashed
-    and legacy string batches under one path: the merged read schema
-    would carry NULLs in whichever key column the old batches lack,
-    and bm25_topk's layout detection would silently drop their
-    postings.  To migrate an existing string-layout index, rebuild it
-    (or keep `hashed=False` on that path)."""
+    streaming the admitted lake into this sink.  An index path
+    written with string-keyed (``term``) postings by an older build
+    must be rebuilt: bm25_topk joins on ``term_hash`` only."""
     from ..operators.retrieval import build_bm25_index
 
     def sink(batch_df, batch_id: int) -> None:
-        postings = build_bm25_index(
-            batch_df, text_col=text_col, id_col=id_col, hashed=hashed
-        )
+        postings = build_bm25_index(batch_df, text_col=text_col, id_col=id_col)
         store.write(postings.localCheckpoint(eager=True), postings_path, batch_id)
 
     return sink

@@ -704,12 +704,73 @@ def test_text_to_semantic_dedup_closed_loop(spark):
     assert sorted(canon) == [0, 2, 4]
 
 
+def _embed_hashed_jvm(docs, *, dim, ngram=2, text_col="text",
+                      id_col="doc_id", normalize=True):
+    """In-row JVM reference for embed_hashed_ngrams: md5-bucket
+    transform over the n-gram array, then a signed-count fold per
+    bucket (O(dim·grams) lambda steps per doc, no Python worker)."""
+    from cdc_pipeline_with_kafka_spark.operators.textstats import (
+        _tokens,
+        _word_ngrams,
+    )
+    from cdc_pipeline_with_kafka_spark.util import spread
+
+    grams = _word_ngrams(_tokens(F.col(text_col)), ngram)
+    # bucket in [0, dim), sign from the next md5 nibble — one hash per gram
+    h = F.transform(
+        grams,
+        lambda g: F.struct(
+            (F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("bigint") % dim)
+            .cast("int").alias("b"),
+            F.when(
+                F.conv(F.substring(F.md5(g), 9, 1), 16, 10).cast("int") % 2 == 0,
+                F.lit(1),
+            ).otherwise(F.lit(-1)).alias("s"),
+        ),
+    )
+    # pin ONE evaluation of the hashed array (winnow's barrier rationale)
+    base = spread(docs, id_col).select(
+        F.col(id_col), F.explode(F.array(h)).alias("_h")
+    )
+    counts = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda j: F.aggregate(
+            F.col("_h"),
+            F.lit(0),
+            lambda acc, x: acc + F.when(x["b"] == j, x["s"]).otherwise(F.lit(0)),
+        ),
+    )
+    if not normalize:
+        return base.select(
+            id_col,
+            F.transform(counts, lambda v: v.cast("float")).alias("embedding"),
+        )
+    cnt_col = F.col("_cnt")
+    norm = F.sqrt(
+        F.aggregate(
+            cnt_col, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v
+        )
+    )
+    return (
+        base.select(id_col, F.explode(F.array(counts)).alias("_cnt"))
+        .select(
+            id_col,
+            F.when(
+                norm > 0,
+                F.transform(cnt_col, lambda v: (v.cast("double") / norm).cast("float")),
+            )
+            .otherwise(F.transform(cnt_col, lambda v: v.cast("float")))
+            .alias("embedding"),
+        )
+    )
+
+
 def test_embed_hashed_paths_identical(spark):
     """The Arrow batch path emits float32 vectors IDENTICAL to the
-    in-row JVM fold — same md5 buckets/signs, exact integer counts,
-    exact-in-any-order squared-norm sum, same divide-then-cast — for
-    normalized and raw forms, several dims, and edge docs (empty,
-    single-token-below-ngram)."""
+    in-row JVM fold reference — same md5 buckets/signs, exact integer
+    counts, exact-in-any-order squared-norm sum, same divide-then-cast
+    — for normalized and raw forms, several dims, and edge docs
+    (empty, single-token-below-ngram)."""
     from cdc_pipeline_with_kafka_spark.operators import similarity as S
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(200)
@@ -722,14 +783,14 @@ def test_embed_hashed_paths_identical(spark):
         for normalize in (True, False):
             jvm = {
                 r["doc_id"]: r["embedding"]
-                for r in S.embed_hashed_ngrams(
-                    docs, dim=dim, normalize=normalize, path="jvm"
+                for r in _embed_hashed_jvm(
+                    docs, dim=dim, normalize=normalize
                 ).collect()
             }
             arrow = {
                 r["doc_id"]: r["embedding"]
                 for r in S.embed_hashed_ngrams(
-                    docs, dim=dim, normalize=normalize, path="arrow"
+                    docs, dim=dim, normalize=normalize
                 ).collect()
             }
             assert jvm.keys() == arrow.keys()
@@ -741,12 +802,9 @@ def test_embed_hashed_auto_dispatch(spark):
     from cdc_pipeline_with_kafka_spark.operators import similarity as S
 
     docs = spark.createDataFrame([(1, "alpha beta gamma")], "doc_id long, text string")
-    # auto = arrow at every dim (measured faster throughout)
+    # arrow at every dim (measured faster throughout)
     auto = S.embed_hashed_ngrams(docs, dim=8)
     assert "MapInPandas" in auto._jdf.queryExecution().executedPlan().toString()
-    # jvm stays available as the Python-worker-free pure-plan form
-    jvm = S.embed_hashed_ngrams(docs, dim=8, path="jvm")
-    assert "MapInPandas" not in jvm._jdf.queryExecution().executedPlan().toString()
 
 
 def test_hard_negatives_excludes_self_and_near_dups(spark):

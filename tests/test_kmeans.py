@@ -243,7 +243,10 @@ def test_cluster_exemplars_rank_by_centroid_cosine(spark):
     assert 2 not in sims  # k=2 cap dropped the furthest member
 
 
-def test_arrow_stats_bit_parity_with_codegen(spark):
+_CODEGEN, _ARROW = 1 << 62, 0  # KMEANS_ARROW_LITERALS forcing each path
+
+
+def test_arrow_stats_bit_parity_with_codegen(spark, monkeypatch):
     """The Arrow assignment path replays the codegen fold's exact IEEE
     sequence — identical (cid, cnt, q*) cells, including exact-tie
     vectors that must first-min to the lower cid on BOTH paths."""
@@ -253,28 +256,24 @@ def test_arrow_stats_bit_parity_with_codegen(spark):
     mat[33] = mat[0]   # a non-init duplicate, ties mid-corpus
     df = _df(spark, mat)
     cm = [[float(x) for x in mat[i]] for i in range(5)]
-    a = sorted(
-        map(tuple, sim._kmeans_iter_stats(df, cm, "embedding",
-                                          assign_path="codegen").collect())
-    )
-    b = sorted(
-        map(tuple, sim._kmeans_iter_stats(df, cm, "embedding",
-                                          assign_path="arrow").collect())
-    )
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", _CODEGEN)
+    a = sorted(map(tuple, sim._kmeans_iter_stats(df, cm, "embedding").collect()))
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", _ARROW)
+    b = sorted(map(tuple, sim._kmeans_iter_stats(df, cm, "embedding").collect()))
     assert a == b and len(a) >= 3
 
 
-def test_arrow_trainer_equals_codegen_trainer_and_replay(spark):
+def test_arrow_trainer_equals_codegen_trainer_and_replay(spark, monkeypatch):
     """Full training runs bit-identically on either assignment path,
     and the pure-Python oracle replay still matches — the 'km' gate
     rows hold regardless of dispatch."""
     rng = np.random.default_rng(23)
     mat = rng.normal(size=(60, 8)).astype(np.float32)
     df = _df(spark, mat)
-    _c1, cm1 = sim.kmeans_train_distributed(df, k=5, iters=3,
-                                            assign_path="codegen")
-    _c2, cm2 = sim.kmeans_train_distributed(df, k=5, iters=3,
-                                            assign_path="arrow")
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", _CODEGEN)
+    _c1, cm1 = sim.kmeans_train_distributed(df, k=5, iters=3)
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", _ARROW)
+    _c2, cm2 = sim.kmeans_train_distributed(df, k=5, iters=3)
     assert np.array_equal(cm1, cm2)
     vecs = [(i, [float(x) for x in mat[i]]) for i in range(len(mat))]
     cm3, _ = sim.kmeans_lloyd_replay(vecs, k=5, iters=3)
@@ -294,37 +293,45 @@ def test_arrow_assign_blocking_first_min_across_blocks():
     assert got.tolist() == [0, 4, 4]
 
 
-def test_kmeans_assign_df_paths_agree(spark):
+def test_kmeans_assign_df_paths_agree(spark, monkeypatch):
     rng = np.random.default_rng(29)
     mat = rng.normal(size=(40, 6)).astype(np.float32)
     df = _df(spark, mat)
     cm = [[float(x) for x in mat[i]] for i in range(4)]
-    a = sorted(
-        (r.vec_id, r.cid)
-        for r in sim.kmeans_assign_df(df, cm, assign_path="codegen").collect()
-    )
-    b = sorted(
-        (r.vec_id, r.cid)
-        for r in sim.kmeans_assign_df(df, cm, assign_path="arrow").collect()
-    )
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", _CODEGEN)
+    a = sorted((r.vec_id, r.cid) for r in sim.kmeans_assign_df(df, cm).collect())
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", _ARROW)
+    b = sorted((r.vec_id, r.cid) for r in sim.kmeans_assign_df(df, cm).collect())
     assert a == b
 
 
-def test_kmeans_auto_dispatch_threshold(spark):
-    """auto = codegen at small k·d (the oracle-replayable plan the
-    gate pins: no Python eval) and arrow above KMEANS_ARROW_LITERALS
-    (no centroid literals in the plan)."""
+def test_kmeans_auto_dispatch_threshold(spark, monkeypatch):
+    """Codegen at small k·d (the oracle-replayable plan the gate pins:
+    no Python eval) and arrow above KMEANS_ARROW_LITERALS (no centroid
+    literals in the plan) — for every stats pass, including the
+    seeding pass of kmeans_state_from_training."""
     emb_small = _df(spark, np.random.default_rng(5).normal(size=(8, 4)))
     cm_small = [[float(v) for v in r.embedding]
                 for r in emb_small.orderBy("vec_id").limit(2).collect()]
-    small = sim._kmeans_iter_stats(emb_small, cm_small, "embedding",
-                                   assign_path="auto")
+    small = sim._kmeans_iter_stats(emb_small, cm_small, "embedding")
     p = small._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in p and "MapInPandas" not in p
     # force the arrow side: k·d > threshold via a wide synthetic dim
     big_k = sim.KMEANS_ARROW_LITERALS // 4 + 1
     cm_big = [[float(i), 0.0, 0.0, 0.0] for i in range(big_k)]
-    big = sim._kmeans_iter_stats(emb_small, cm_big, "embedding",
-                                 assign_path="auto")
+    big = sim._kmeans_iter_stats(emb_small, cm_big, "embedding")
     pb = big._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in pb
+    # above the threshold, training AND the seeding stats pass both
+    # take the arrow path: iters=2 training passes + 1 seeding pass
+    arrow_passes = []
+    real = sim._kmeans_iter_stats_arrow
+
+    def spy(corpus, cm, vec_col):
+        arrow_passes.append(len(cm))
+        return real(corpus, cm, vec_col)
+
+    monkeypatch.setattr(sim, "_kmeans_iter_stats_arrow", spy)
+    monkeypatch.setattr(sim, "KMEANS_ARROW_LITERALS", 2 * 4 - 1)
+    sim.kmeans_state_from_training(emb_small, k=2, iters=2)
+    assert arrow_passes == [2, 2, 2]

@@ -528,33 +528,6 @@ def test_drift_sink_nan_and_inf_reference(spark, tmp_path):
         pipeline.make_drift_sink(str(tmp_path / "di"), bad, "v")
 
 
-def test_resolve_entities_max_gram_df_passthrough(spark):
-    """resolve_entities exposes fuzzy_join's max_gram_df: None keeps
-    plan building fully lazy on small frames and resolves the same
-    entities as the eager 'auto' default."""
-    from cdc_pipeline_with_kafka_spark.operators.relational import (
-        resolve_entities,
-    )
-
-    rows = [
-        (1, "acme corp"), (2, "acme corp."), (3, "acme korp"),
-        (4, "zenith ltd"), (5, "zenith ltd"),
-    ]
-    df = spark.createDataFrame(rows, "id long, name string")
-    want = {
-        (r["id"], r["entity_id"])
-        for r in resolve_entities(df, "id", "name", max_dist=2).collect()
-    }
-    got = {
-        (r["id"], r["entity_id"])
-        for r in resolve_entities(
-            df, "id", "name", max_dist=2, max_gram_df=None
-        ).collect()
-    }
-    assert got == want
-    assert {e for _, e in got} == {1, 4}
-
-
 def test_soundex_key_canonical_fixtures(spark):
     """American Soundex column chain against the canonical fixture
     set (the NARA coding examples incl. the H/W-transparency Ashcraft

@@ -993,12 +993,13 @@ def test_fuzzy_join_plan_and_guards(spark):
         relational.fuzzy_join(L, R, "name", "rname", q=0)
 
 
-def test_fuzzy_join_hot_gram_cap_is_lossless(spark):
-    """max_gram_df prunes hot postings WITHOUT changing results: on a
-    2-letter alphabet (every gram hot) the capped plans — including
-    cap=1 — return exactly the uncapped/oracle pairs, because the
-    count threshold relaxes by min(h_a, h_b) and kept-short strings
-    reroute to the length-band lane."""
+def test_fuzzy_join_hot_gram_cap_is_lossless(spark, monkeypatch):
+    """The hot-gram cap prunes hot postings WITHOUT changing results:
+    on a 2-letter alphabet (every gram hot) the capped plans —
+    including cap=1, forced by patching the cap rule — return exactly
+    the uncapped/oracle pairs, because the count threshold relaxes by
+    min(h_a, h_b) and kept-short strings reroute to the length-band
+    lane."""
     import random
 
     rng = random.Random(42)
@@ -1021,21 +1022,24 @@ def test_fuzzy_join_hot_gram_cap_is_lossless(spark):
         .collect()
     )
     for cap in (None, 1, 5):
+        monkeypatch.setattr(relational, "_fuzzy_auto_cap",
+                            lambda mx, p99, cap=cap: cap)
         got = sorted(
             (r.lid, r.rid, r.dist)
             for r in relational.fuzzy_join(
-                L, R, "name", "rname", max_dist=2, q=2, max_gram_df=cap
+                L, R, "name", "rname", max_dist=2, q=2
             ).collect()
         )
         assert got == oracle, cap
 
 
-def test_fuzzy_join_auto_gram_cap(spark):
-    """The default 'auto' mode: on a planted stop-gram corpus (one
-    gram shared by every string, hundreds of strings) the decision
-    rule engages the lossless cap, and auto ≡ manual ≡ uncapped rows;
-    on a wholesome vocabulary the probe decides NOT to cap (the rule
-    is pure and pinned directly)."""
+def test_fuzzy_join_auto_gram_cap(spark, monkeypatch):
+    """The cap rule: on a planted stop-gram corpus (one gram shared by
+    every string, hundreds of strings) the decision rule engages the
+    lossless cap, and auto ≡ manual ≡ uncapped rows (the manual and
+    uncapped caps forced by patching the rule); on a wholesome
+    vocabulary the probe decides NOT to cap (the rule is pure and
+    pinned directly)."""
     from cdc_pipeline_with_kafka_spark.operators.relational import (
         _FUZZY_AUTO_MIN_DF,
         _fuzzy_auto_cap,
@@ -1049,29 +1053,41 @@ def test_fuzzy_join_auto_gram_cap(spark):
     assert _fuzzy_auto_cap(2000, 100) == 400            # 4×p99 governs
 
     # planted stop-gram corpus: 'zz' (and the pad gram) in EVERY one
-    # of 300 strings → df=300 > floor while p99 over the ~600 id
-    # grams stays tiny → auto engages; rows identical all three ways
-    names = [f"zz{i:03d}" for i in range(300)]
+    # of 300 strings → df=450 > floor while p99 over the ~500 letter
+    # grams stays tiny → auto engages; rows identical all three ways.
+    # (Digit suffixes would not do: their ~100 grams are too few for
+    # the two hot grams to sit above p99.)
+    abc = "abcdefghijklmnopqrstuvwxyz"
+    names = [
+        "zz" + abc[i % 26] + abc[(i // 26) % 26] + abc[(i * 7) % 26]
+        for i in range(300)
+    ]
     L = spark.createDataFrame(
         [(i, n) for i, n in enumerate(names)], "lid int, name string"
     )
     R = spark.createDataFrame(
         [(i, n) for i, n in enumerate(names[:150])], "rid int, rname string"
     )
-    runs = {}
+    runs, decided = {}, []
+
+    def spy(mx, p99):
+        decided.append(_fuzzy_auto_cap(mx, p99))
+        return decided[-1]
+
     for mode in ("auto", None, _FUZZY_AUTO_MIN_DF):
+        monkeypatch.setattr(
+            relational, "_fuzzy_auto_cap",
+            spy if mode == "auto" else (lambda mx, p99, m=mode: m),
+        )
         runs[str(mode)] = sorted(
             (r.lid, r.rid, r.dist)
             for r in relational.fuzzy_join(
-                L, R, "name", "rname", max_dist=1, q=2, max_gram_df=mode
+                L, R, "name", "rname", max_dist=1, q=2
             ).collect()
         )
+    assert decided == [_FUZZY_AUTO_MIN_DF]  # the probe engaged the cap
     assert runs["auto"] == runs["None"] == runs[str(_FUZZY_AUTO_MIN_DF)]
     assert len(runs["auto"]) >= 150  # every exact pair + 1-edit pairs
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="max_gram_df"):
-        relational.fuzzy_join(L, R, "name", "rname", max_gram_df="always")
 
 
 def test_sorted_neighborhood_pairs_matches_naive(spark):

@@ -258,31 +258,14 @@ def test_bm25f_title_match_outranks_body_match(spark):
 
 
 def test_bm25_hashed_index_equals_string_index(spark):
-    """The hashed-term postings layout (term_hash int64, the DEFAULT —
-    8-byte shuffle/index key) must produce IDENTICAL rankings to the
-    legacy string layout at gate scale: scores key on df/tf, never on
-    the term representation, and query terms hash through the same
-    JVM xxhash64 as the index build."""
+    """The postings layout is hashed-term only (term_hash int64 —
+    8-byte shuffle/index key, no term string) at both term grains;
+    its rankings are pinned against the pure-Python twin by
+    test_bm25_matches_pure_python_twin."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    qs = _queries_df(spark)
     for ngram in (1, 2):
         hashed = R.build_bm25_index(docs, ngram=ngram)
-        legacy = R.build_bm25_index(docs, ngram=ngram, hashed=False)
         assert "term_hash" in hashed.columns and "term" not in hashed.columns
-        assert "term" in legacy.columns and "term_hash" not in legacy.columns
-        a = sorted(
-            map(tuple, R.bm25_topk(None, qs, index=hashed, k=8, ngram=ngram).collect())
-        )
-        b = sorted(
-            map(tuple, R.bm25_topk(None, qs, index=legacy, k=8, ngram=ngram).collect())
-        )
-        assert a == b and a, f"ngram={ngram}"
-    # keep_term: the debug string column rides along, rankings unchanged
-    kept = R.build_bm25_index(docs, keep_term=True)
-    assert {"term", "term_hash"} <= set(kept.columns)
-    c = sorted(map(tuple, R.bm25_topk(None, qs, index=kept, k=8).collect()))
-    base = sorted(map(tuple, R.bm25_topk(docs, qs, k=8).collect()))
-    assert c == base
 
 
 def test_bm25f_builds_index_in_one_corpus_scan(spark):
@@ -309,23 +292,3 @@ def test_bm25_topk_window_group_limit_is_partial(spark):
     df = R.bm25_topk(docs, _queries_df(spark), k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan and "Partial" in plan
-
-
-def test_bm25_sink_layout_is_explicit_per_path(spark, tmp_path):
-    """The sink fixes one layout per index path: hashed (default) and
-    legacy string layouts both round-trip through bm25_topk's
-    detection — but each on its own path (mixing is the documented
-    migration hazard)."""
-    from cdc_pipeline_with_kafka_spark.streaming import pipeline
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    qs = _queries_df(spark)
-    want = sorted(map(tuple, R.bm25_topk(docs, qs, k=6).collect()))
-    for hashed in (True, False):
-        path = str(tmp_path / f"postings_{hashed}")
-        sink = pipeline.make_bm25_index_sink(path, hashed=hashed)
-        sink(docs, 0)
-        idx = spark.read.option("basePath", path).parquet(path).drop("batch_id")
-        assert ("term_hash" in idx.columns) == hashed
-        got = sorted(map(tuple, R.bm25_topk(None, qs, index=idx, k=6).collect()))
-        assert got == want, hashed

@@ -640,12 +640,13 @@ def test_quantile_normalize_broadcast_cut_join(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_quantile_normalize_scalable_rank_identical(spark):
+def test_quantile_normalize_scalable_rank_identical(spark, monkeypatch):
     """r13 (VERDICT r12 #5): the range-partitioned reference rank
     (the 100 TB form) must emit row-for-row what the single-window
     rank emits — ties, NULLs, external reference and all — because
     any rank assignment consistent with the value order maps
-    rank→value identically."""
+    rank→value identically.  Each form is forced by moving the
+    QN_RANGE_RANK_BYTES size pivot."""
     import random
 
     from cdc_pipeline_with_kafka_spark.operators import sketch as K
@@ -656,10 +657,11 @@ def test_quantile_normalize_scalable_rank_identical(spark):
         for _ in range(500)
     ]
     df = spark.createDataFrame(rows, "g string, v double")
-    small = K.quantile_normalize(df, "v", ["g"], n_cuts=100,
-                                 scalable_rank=False)
-    big = K.quantile_normalize(df, "v", ["g"], n_cuts=100,
-                               scalable_rank=True)
+    with monkeypatch.context() as m:
+        m.setattr(K, "QN_RANGE_RANK_BYTES", 1 << 62)
+        small = K.quantile_normalize(df, "v", ["g"], n_cuts=100)
+        m.setattr(K, "QN_RANGE_RANK_BYTES", -1)
+        big = K.quantile_normalize(df, "v", ["g"], n_cuts=100)
     from collections import Counter
 
     assert Counter(map(tuple, small.collect())) == \
