@@ -16,5 +16,11 @@ SF_CORRECT = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
+    spark = get_spark(
+        "tests",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "8",
+        },
+    )
     yield spark

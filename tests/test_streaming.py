@@ -83,6 +83,67 @@ def test_streaming_trending_matches_batch(spark, tmp_path):
     assert len(stream_rows) > 0
 
 
+def test_trending_state_partitions_fixed_in_checkpoint(spark, tmp_path):
+    """The trending query keeps one state store per shuffle partition,
+    the count is frozen in the checkpoint at first start, and a restart
+    under another ``spark.sql.shuffle.partitions`` keeps both the stores
+    and the running counts."""
+    log_dir = _write_event_log(tmp_path)
+    staged = tmp_path / "staged"
+    (tmp_path / "cdc_log" / "part-1.json").rename(staged)
+
+    def run(name, ckpt, partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        raw_stream = spark.readStream.schema(RAW_SCHEMA).json(log_dir)
+        # a day of watermark: no row of the second file arrives late
+        kw = pipeline.keyword_stream(pipeline.article_stream(raw_stream, watermark="24 hours"))
+        q = (
+            pipeline.trending_query(kw, window="30 minutes", min_mentions=1)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        _await(q)
+        stores = sorted(int(p.name) for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit())
+        rows = {(r["window_start"], r["keyword"], r["cnt"]) for r in spark.table(name).collect()}
+        return stores, rows
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        ckpt = tmp_path / "ckpt"
+        stores, _ = run("trending_parts_first", ckpt, 3)
+        assert stores == [0, 1, 2]
+
+        staged.rename(tmp_path / "cdc_log" / "part-1.json")
+        stores, restarted = run("trending_parts_restart", ckpt, 5)
+        assert stores == [0, 1, 2]
+
+        stores, fresh = run("trending_parts_fresh", tmp_path / "ckpt_fresh", 5)
+        assert stores == [0, 1, 2, 3, 4]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+    raw_batch = spark.read.schema(RAW_SCHEMA).json(log_dir)
+    arts_b = cdc.quality_filter(
+        cdc.after_image(
+            cdc.for_table(
+                cdc.upsert_ops(cdc.parse_envelope(raw_batch.selectExpr("CAST(value AS STRING) AS value"))),
+                "articles",
+            )
+        )
+    )
+    full = {
+        (r["window_start"], r["keyword"], r["cnt"])
+        for r in pipeline.trending_query(
+            pipeline.keyword_stream(arts_b), window="30 minutes", min_mentions=1
+        ).collect()
+    }
+    assert restarted == fresh == full
+    assert len(full) > 0
+
+
 def test_streaming_breaking_query_runs(spark, tmp_path):
     log_dir = _write_event_log(tmp_path)
     raw_stream = spark.readStream.schema(RAW_SCHEMA).json(log_dir)
