@@ -489,8 +489,9 @@ def snapshot_diff(
     every compare column (NULL on deletes), making the diff an
     APPLICABLE PATCH: delete the 'delete' keys from old, upsert the
     'insert'/'update' rows, and you reconstruct new exactly — the
-    round-trip property held in tests.  That is the change feed a
-    downstream merge_upsert sink replays."""
+    round-trip property held in tests.  That is the change feed
+    `streaming.sinks.reconcile_snapshot` turns into CDC events and
+    applies with merge_upsert."""
     if not key_cols:
         raise ValueError("need key_cols")
     if compare_cols is None:

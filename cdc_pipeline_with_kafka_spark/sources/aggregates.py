@@ -54,17 +54,12 @@ def read_aggregate_range(
 def expire_partitions(path: str, keep_after_date: str) -> list[str]:
     """Retention: drop partitions older than `keep_after_date`
     (YYYY-MM-DD) — the Redis-TTL analog as O(partitions) metadata ops.
-    Local filesystem only (loud ValueError on remote URIs — silently
-    expiring nothing would defeat the retention contract)."""
-    from urllib.parse import urlparse
+    Local filesystem only: a plain path or a ``file://`` URI (loud
+    ValueError on remote URIs — silently expiring nothing would defeat
+    the retention contract)."""
+    from ..streaming.store import local_path
 
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"expire_partitions deletes via the local filesystem and "
-            f"cannot run against scheme {scheme!r} ({path}); expire "
-            "remote partitions with a storage-side job"
-        )
+    path = local_path(path)
     dropped = []
     if not os.path.isdir(path):
         return dropped

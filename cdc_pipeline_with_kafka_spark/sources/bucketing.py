@@ -174,9 +174,9 @@ def compact_partition(
     partitions as many small files; scans then pay per-file open/footer
     cost.  This job reads ONLY the target directory (no full-table
     scan), repartitions, writes beside it, and swaps directories.  The
-    swap is two renames — the same non-atomic window documented for
-    merge_upsert; on a transactional table format (Delta/Iceberg)
-    OPTIMIZE replaces this.  Returns the row count of the compacted
+    swap is two renames, a non-atomic window like the partition
+    delete-then-rename of merge_upsert's dynamic overwrite; on a
+    transactional table format (Delta/Iceberg) OPTIMIZE replaces this.  Returns the row count of the compacted
     partition (sanity handle for the caller).
     """
     import os

@@ -1,55 +1,51 @@
-"""foreachBatch MERGE sinks (SURVEY.md §2.1 S9-S10, §3.4).
+"""foreachBatch MERGE sink (SURVEY.md §2.1 S9-S10, §2.8 T5, §3.4).
 
-The reference's SyncService replicates CDC into MySQL with
-``INSERT ... ON DUPLICATE KEY UPDATE`` (targetDB1/SyncService.py:87-140)
-and handles deletes as soft-delete on articles / hard delete on media
-(SyncService.py:143-146,255-283).  Delivery is at-least-once made
-effectively-once by idempotent upserts (SURVEY §2.8 T5).
+The reference's SyncService replicates CDC into MySQL row by row:
+``INSERT ... ON DUPLICATE KEY UPDATE`` for c/r/u, ``UPDATE ... SET
+is_deleted=TRUE`` for deletes on articles and ``DELETE`` on media
+(targetDB1/SyncService.py:87-146,255-283).  At-least-once delivery is
+effectively-once because replaying a batch is idempotent.
 
-Spark-first: Structured Streaming ``foreachBatch`` applying a keyed
-MERGE.  Without a Delta/Iceberg runtime in this container, the MERGE is
-implemented as a partition-aware parquet rewrite:  anti-join out
-replaced keys, union the new images, write back.  On a lakehouse table
-format the body of ``merge_upsert`` becomes a single ``MERGE INTO``;
-the calling convention and idempotency contract are identical.
+Spark-first: one `merge_upsert` applies a whole micro-batch as a
+keyed parquet rewrite (no Delta/Iceberg runtime here; on a lakehouse
+table format its body is one ``MERGE INTO`` under the same contract).
 
-Idempotency: replaying a batch yields identical target state because
-(a) the upsert keys on the primary key, (b) within a batch only the
-LAST image per key (by ts, then op-order) is applied, and (c) deletes
-win over earlier upserts of the same key in the same batch.
+Contract: after each batch the target equals the result of applying
+that batch's events one at a time in (``ts``, op rank c/r < u < d)
+order with SyncService's rules: c/r/u upserts the after-image; d with
+``soft_delete`` sets ``is_deleted=true`` on the row as it stands at
+that point of the batch and writes nothing when no row exists; d
+without it removes the row.  The before-image is never written, so a
+key-only before-image (Debezium's default replica identity) deletes
+as well as a full one.  Two events of one key with equal ts and equal
+rank have no defined order.  Replaying a batch on its own result
+changes nothing, which is what makes checkpoint replay safe.
+
+Crash windows.  Whole-table target: the merge is staged in
+``<target>._tmp`` and copied over the target; ``._tmp`` is deleted
+only after that copy, so a complete ``._tmp`` (one with ``_SUCCESS``)
+is the last merge's state and the replay reads it in place of a
+half-written target.  Partitioned target: the write is a dynamic
+partition overwrite, whose job commit deletes each rewritten partition
+and then renames its new files in.  A crash between the two loses that
+partition's rows the batch did not touch; the replay cannot restore
+them.  Readers of the raw path can see either rewrite half done.
 """
 
 from __future__ import annotations
 
-import os
+import functools
+import operator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
-def latest_image_per_key(batch: DataFrame, key: str = "id", ts_col: str = "ts") -> DataFrame:
-    """Collapse a CDC micro-batch to the last event per key — ordering
-    by event time then a stable op priority (d > u > c/r at equal ts,
-    matching 'final state wins' replication).
-
-    The key is taken from the top-level column when present, else
-    derived as coalesce(after.key, before.key) (parse_envelope output
-    keeps images nested)."""
-    op_rank = F.when(F.col("op") == "d", 3).when(F.col("op") == "u", 2).otherwise(1)
-    key_col = (
-        F.col(key)
-        if key in batch.columns
-        else F.coalesce(F.col(f"after.{key}"), F.col(f"before.{key}"))
-    )
-    w = Window.partitionBy(key_col).orderBy(F.col(ts_col).desc(), op_rank.desc())
-    return batch.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def _read_target(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], like.schema)
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem of `path`, Path constructor): existence checks
+    and deletes that work on every URI the reader accepts."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    return jpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def merge_upsert(
@@ -57,175 +53,98 @@ def merge_upsert(
     batch: DataFrame,
     target_path: str,
     key: str = "id",
+    partition_col: str | None = None,
     soft_delete: bool = True,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """S9/S10: apply a CDC micro-batch to the target table.
-
-    - op c/r/u → upsert the after-image (insert or replace by key)
-    - op d     → articles-style soft delete (is_deleted=true, after
-      image from `before`) when soft_delete, else drop the row (media-
-      style hard delete, SyncService.py:277-283)
-
-    Returns the new target DataFrame (also written to target_path).
-    """
-    latest = latest_image_per_key(batch, key, ts_col)
-    upserts = (
-        latest.filter(F.col("op").isin("c", "r", "u"))
-        .select("after.*")
-        .filter(F.col(key).isNotNull())
-    )
-    deletes = latest.filter(F.col("op") == "d").select(
-        F.coalesce(F.col(f"before.{key}"), F.col(f"after.{key}")).alias(key),
-        F.col("before").alias("_before"),
-    ).filter(F.col(key).isNotNull())
-
-    target = _read_target(spark, target_path, upserts)
-    touched = latest.select(
-        F.coalesce(F.col(f"after.{key}"), F.col(f"before.{key}")).alias(key)
-    ).filter(F.col(key).isNotNull()).distinct()
-
-    untouched = target.join(touched, key, "left_anti")
-    new_rows = [untouched, upserts]
-    if soft_delete:
-        soft = deletes.select("_before.*").withColumn("is_deleted", F.lit(True))
-        # keep prior row content if the delete event lacks a before-image
-        prior = target.join(deletes.select(key), key, "left_semi").withColumn(
-            "is_deleted", F.lit(True)
-        )
-        soft_ids = soft.select(key)
-        new_rows.append(soft.filter(F.col(key).isNotNull()))
-        new_rows.append(prior.join(soft_ids, key, "left_anti"))
-    merged = new_rows[0]
-    for piece in new_rows[1:]:
-        merged = merged.unionByName(piece, allowMissingColumns=True)
-
-    # The two-step write exists because `merged` reads from target_path
-    # (can't overwrite a path being scanned).  NOT atomic: a crash
-    # between the two overwrites can leave target_path mid-rewrite —
-    # the checkpointed source batch replays and the idempotent merge
-    # restores it, but a concurrent READER of the raw path can observe
-    # the partial state.  On Delta/Iceberg the same body is an atomic
-    # MERGE INTO and this window disappears; on raw parquet, point
-    # readers at a view/manifest, not the live path.
-    import shutil
-
-    tmp = target_path + "._tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    result = spark.read.parquet(tmp)
-    result.write.mode("overwrite").parquet(target_path)
-    out = spark.read.parquet(target_path)  # reads the final path, not tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    batch: DataFrame,
-    target_path: str,
-    key: str = "id",
-    partition_col: str = "stored_date",
-    soft_delete: bool = True,
-    ts_col: str = "ts",
 ) -> None:
-    """S9/S10 at scale: partition-aware MERGE.
+    """S9/S10: apply a CDC micro-batch (op, before, after, ts) to the
+    parquet table at `target_path` under the module's contract.
 
-    The naive merge rewrites the whole target — O(table) per batch.
-    This variant partitions the target by `partition_col` (the
-    reference's articles carry stored_date yyyyMMdd — natural event-day
-    partitioning) and rewrites ONLY the partitions the batch touches:
+    Without `partition_col` the whole table is rewritten.  With it,
+    only the partitions that can change are: those of the rows the
+    batch writes, plus those where the target holds one of the batch's
+    keys (a key that moves partition, a delete whose before-image has
+    no partition value).  A partition left empty is deleted.  The
+    rewrite then follows the touched partitions, not the table; finding
+    them reads the key and partition columns of the whole table.
 
-      1. collapse the batch to last-image-per-key,
-      2. find touched partition values (a few per batch),
-      3. read just those partitions (partition-pruned scan),
-      4. merge, and write back with dynamic partition overwrite.
+    The target is absent when the Hadoop FileSystem says so (a
+    partitioned one also when it holds no partition dir: every row was
+    deleted, or its first write never committed one); a target that
+    exists but cannot be read raises."""
+    fs, path = _fs(spark, target_path)
+    tmp = f"{target_path}._tmp"
+    src = tmp if partition_col is None and fs.exists(path(f"{tmp}/_SUCCESS")) else target_path
+    # a partitioned target with no partition dir left is an empty table
+    held = fs.exists(path(src)) and (partition_col is None or any(
+        st.getPath().getName().startswith(f"{partition_col}=") for st in fs.listStatus(path(src))
+    ))
+    base = spark.read.parquet(src) if held else None
 
-    Per-batch cost scales with touched-partition size, not table size —
-    the property that makes continuous replication viable at 100 TB.
-    On Delta/Iceberg this whole body is `MERGE INTO`; the contract and
-    idempotency guarantees are identical.
-    """
-    latest = latest_image_per_key(batch, key, ts_col)
-    upserts = (
-        latest.filter(F.col("op").isin("c", "r", "u"))
-        .select("after.*")
-        .filter(F.col(key).isNotNull() & F.col(partition_col).isNotNull())
-    )
-    # deletes stay a DataFrame end-to-end: a bulk-delete CDC batch must
-    # never become a driver-side key list / giant IN expression — the
-    # delete set is applied via broadcast-able joins below.
-    deletes = (
-        latest.filter(F.col("op") == "d")
-        .select(
-            F.col(f"before.{key}").alias(key),
-            F.col(f"before.{partition_col}").alias(partition_col),
+    # the order one key's events apply in: event time, then c/r < u < d
+    order = F.struct("ts", F.when(F.col("op") == "d", 3).when(F.col("op") == "u", 2).otherwise(1))
+    latest = (
+        batch.filter(
+            (F.col("op") == "d") | (F.col("op").isin("c", "r", "u") & F.col("after").isNotNull())
+        )
+        .groupBy(F.coalesce(F.col(f"after.{key}"), F.col(f"before.{key}")).alias(key))
+        .agg(
+            F.max_by("op", order).alias("_op"),  # the key's last event
+            # its last image (max_by skips null orderings: the deletes)
+            F.max_by("after", F.when(F.col("op") != "d", order)).alias("_after"),
         )
         .filter(F.col(key).isNotNull())
     )
-    # The ONLY collect is the touched PARTITION VALUES — bounded by the
-    # number of event-day partitions a batch spans (a handful), never by
-    # row count.
-    touched = {
-        r[0]
-        for r in upserts.select(partition_col)
-        .union(deletes.select(partition_col))
-        .distinct()
-        .collect()
-        if r[0] is not None
-    }
-    if not touched:
-        return
-    import os
-
-    delete_keys = deletes.select(key).distinct()
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path).filter(
-            F.col(partition_col).isin(list(touched))
-        )
-        untouched = target.join(upserts.select(key).distinct(), key, "left_anti")
-        if not soft_delete:
-            # media-style hard delete (SyncService.py:277-283): drop
-            # deleted keys from the carried-over rows
-            untouched = untouched.join(delete_keys, key, "left_anti")
-        merged = untouched.unionByName(upserts, allowMissingColumns=True)
-    else:
-        merged = upserts
-        if not soft_delete:
-            merged = merged.join(delete_keys, key, "left_anti")
-    if soft_delete:
-        # articles-style soft delete: mark via a join, not isin(list)
-        marks = delete_keys.withColumn("_mark_deleted", F.lit(True))
-        merged = (
-            merged.join(marks, key, "left")
-            .withColumn(
-                "is_deleted",
-                F.when(F.col("_mark_deleted"), F.lit(True)).otherwise(
-                    F.coalesce(F.col("is_deleted"), F.lit(False))
-                ),
+    keys = latest.select(key)
+    # a key ending on a delete keeps its last image (soft) or goes (hard)
+    merged = latest.filter(
+        F.col("_after").isNotNull() & (F.lit(soft_delete) | (F.col("_op") != "d"))
+    ).select("_after.*", "_op")
+    if partition_col is not None:
+        part = F.col(partition_col).cast("string")
+        hit = merged.select(part)
+        if base is not None:
+            hit = hit.union(base.join(keys, key, "left_semi").select(part))
+        parts = {r[0] for r in hit.distinct().collect()}
+        if not parts:
+            return
+        if base is not None:
+            base = base.filter(functools.reduce(operator.or_, [part.eqNullSafe(v) for v in parts]))
+    if base is not None:
+        merged = base.join(keys, key, "left_anti").unionByName(merged, allowMissingColumns=True)
+        if soft_delete:  # deleted with no image in the batch: flag the stored row
+            gone = latest.filter((F.col("_op") == "d") & F.col("_after").isNull()).select(key)
+            merged = merged.unionByName(
+                base.join(gone, key, "left_semi").withColumn("_op", F.lit("d")),
+                allowMissingColumns=True,
             )
-            .drop("_mark_deleted")
-        )
-    with _partition_overwrite(spark):
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
+    if soft_delete:
+        deleted = F.when(F.col("_op") == "d", True).otherwise(F.col("is_deleted"))
+        merged = merged.withColumn("is_deleted", deleted)
+    merged = merged.drop("_op")
+
+    if partition_col is None:
+        if src == target_path:  # a job cannot overwrite the path it reads
+            merged.write.mode("overwrite").parquet(tmp)
+            merged = spark.read.parquet(tmp)
+        merged.write.mode("overwrite").parquet(target_path)
+        fs.delete(path(tmp), True)
+        return
+    written = Observation()
+    (
+        merged.observe(written, F.collect_set(F.struct(part)).alias("parts"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
+    names = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for v in parts - {r[0] for r in written.get["parts"]}:
+        fs.delete(path(f"{target_path}/{names.getPartitionPathString(partition_col, v)}"), True)
 
 
-class _partition_overwrite:
-    """Temporarily switch to dynamic partition overwrite so only the
-    partitions present in the written DataFrame are replaced."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
+# the articles replica's layout, one partition per stored_date; the
+# benchmark's MERGE pass (perfbench/streams.py) calls it by this name
+merge_upsert_partitioned = functools.partial(merge_upsert, partition_col="stored_date")
 
 
 def make_merge_sink(target_path: str, key: str = "id", soft_delete: bool = True):
@@ -233,7 +152,7 @@ def make_merge_sink(target_path: str, key: str = "id", soft_delete: bool = True)
     ``stream.writeStream.foreachBatch(make_merge_sink(...))``."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(batch_df.sparkSession, batch_df, target_path, key, soft_delete)
+        merge_upsert(batch_df.sparkSession, batch_df, target_path, key=key, soft_delete=soft_delete)
 
     return sink
 
@@ -244,8 +163,6 @@ def observed_batch(batch: DataFrame, name: str = "batch_metrics"):
 
     Returns (df, observation); read `observation.get` after an action.
     """
-    from pyspark.sql import Observation
-
     obs = Observation(name)
     observed = batch.observe(
         obs,
@@ -295,12 +212,15 @@ def reconcile_snapshot(
     {'insert': n, 'update': n, 'delete': n}.  Fixed point: after one
     application the diff is empty and a second pass applies nothing
     (pinned in tests).  Scale: the diff is one key-partitioned outer
-    join; the apply rewrites the target via merge_upsert — partition
-    both by the key (or use merge_upsert_partitioned's touched-
-    partition rewrite) when the table outgrows a full rewrite."""
+    join; the apply is merge_upsert's whole-table rewrite."""
     from ..operators.relational import snapshot_diff
 
-    replica = _read_target(spark, target_path, source)
+    fs, path = _fs(spark, target_path)
+    replica = (
+        spark.read.parquet(target_path)
+        if fs.exists(path(target_path))
+        else spark.createDataFrame([], source.schema)
+    )
     patch = snapshot_diff(
         replica, source, [key],
         compare_cols=compare_cols, include_values=True,
@@ -319,7 +239,5 @@ def reconcile_snapshot(
         F.struct(F.col(key)).alias("before"),
         F.lit(0).cast("long").alias("ts"),
     )
-    out = merge_upsert(
-        spark, env, target_path, key=key, soft_delete=False, ts_col="ts"
-    )
-    return out, counts
+    merge_upsert(spark, env, target_path, key=key, soft_delete=False)
+    return spark.read.parquet(target_path), counts

@@ -78,17 +78,23 @@ def last_per_key(df: DataFrame, keys: list[str], *tiebreak) -> DataFrame:
     )
 
 
-def _local_ids(path: str, keep) -> tuple[str, list[int]]:
-    """(local path, sorted batch ids under it that `keep`).  Rejects
-    remote URIs: the caller rewrites dirs with rename/delete."""
+def local_path(path: str) -> str:
+    """`path` (a plain path or a ``file://`` URI) as a local path, for
+    callers that rewrite dirs with local rename/delete.  Any other
+    scheme raises: expiring or compacting nothing would be silent."""
     url = urlparse(path)
     if url.scheme not in ("", "file"):
         raise ValueError(
-            f"batch-dir compaction/expiry uses local-filesystem "
-            f"rename/delete and cannot run against scheme {url.scheme!r} "
-            f"({path}); rewrite remote stores with a storage-side job"
+            f"this operation uses local-filesystem rename/delete and "
+            f"cannot run against scheme {url.scheme!r} ({path}); "
+            f"rewrite remote tables with a storage-side job"
         )
-    local = url.path if url.scheme else path
+    return url.path if url.scheme else path
+
+
+def _local_ids(path: str, keep) -> tuple[str, list[int]]:
+    """(local path, sorted batch ids under it that `keep`)."""
+    local = local_path(path)
     try:
         names = os.listdir(local)
     except FileNotFoundError:

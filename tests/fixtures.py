@@ -79,3 +79,30 @@ def make_cdc_events(articles: list[dict], seed: int = 42) -> list[dict]:
              "kafka_ts": ts.isoformat()}
         )
     return events
+
+
+OP_RANK = {"c": 1, "r": 1, "u": 2, "d": 3}
+
+
+def cdc_events_of(batch) -> list[tuple]:
+    """A parsed CDC DataFrame as (op, before, after, ts) tuples."""
+    rows = batch.select("op", "before", "after", "ts").collect()
+    return [(r.op, r.before and r.before.asDict(), r.after and r.after.asDict(), r.ts) for r in rows]
+
+
+def replay_cdc(state: dict, events: list[tuple], soft_delete: bool = True) -> dict:
+    """Sequential-replay reference for the MERGE sink: apply (op,
+    before, after, ts) events one at a time in (ts, op rank) order to
+    `state` ({id: row}) with SyncService's rules — c/r/u stores the
+    after-image; d flags the stored row is_deleted (soft) or removes it
+    (hard), and writes nothing for a key that holds no row."""
+    state = dict(state)
+    for op, before, after, _ in sorted(events, key=lambda e: (e[3], OP_RANK[e[0]])):
+        key = (after or before)["id"]
+        if op != "d":
+            state[key] = after
+        elif not soft_delete:
+            state.pop(key, None)
+        elif key in state:
+            state[key] = dict(state[key], is_deleted=True)
+    return state

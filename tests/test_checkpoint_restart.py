@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from cdc_pipeline_with_kafka_spark.sources import cdc
 from cdc_pipeline_with_kafka_spark.streaming import sinks
 
-from .fixtures import make_articles, make_cdc_events
+from .fixtures import cdc_events_of, make_articles, make_cdc_events, replay_cdc
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -57,15 +57,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     raw_all = spark.createDataFrame(
         [(e["value"],) for e in events], "value string"
     )
-    parsed_all = cdc.parse_envelope(raw_all)
-    expected_keys = {
-        r["id"]
-        for r in sinks.latest_image_per_key(parsed_all)
-        .filter(F.col("op") != "d")
-        .select(F.col("after.id").alias("id"))
-        .collect()
-        if r["id"] is not None
-    }
+    expected_keys = set(replay_cdc({}, cdc_events_of(cdc.parse_envelope(raw_all))))
     got_keys = {r["id"] for r in replica.select("id").collect()}
     assert expected_keys <= got_keys
 

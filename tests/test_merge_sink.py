@@ -1,81 +1,215 @@
-"""Idempotent MERGE sink semantics (SURVEY.md §2.1 S9-S10, §2.8 T5):
-replaying the same CDC batch twice must yield identical target state;
-deletes are soft on articles-style tables (FIXTURES.md §5)."""
+"""The MERGE sink against its contract (SURVEY.md §2.1 S9-S10, §2.8
+T5): after every batch — and after a replay of it — the target equals
+the sequential replay of SyncService's rules (fixtures.replay_cdc), on
+whole-table and partitioned targets given as plain paths and as
+``file://`` URIs, with soft and hard deletes."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import random
+import shutil
+from datetime import timedelta
+
+import pytest
 
 from cdc_pipeline_with_kafka_spark.sources import cdc
 from cdc_pipeline_with_kafka_spark.streaming import sinks
 
-from .fixtures import make_articles, make_cdc_events
+from .fixtures import (
+    BASE_TS,
+    OP_RANK,
+    cdc_events_of,
+    make_articles,
+    make_cdc_events,
+    replay_cdc,
+)
+
+TABLE = "id long, title string, stored_date string, is_deleted boolean"
+ROW = "struct<id:long,title:string,stored_date:string,is_deleted:boolean>"
+SCHEMA = f"op string, before {ROW}, after {ROW}, ts timestamp"
 
 
-def _parsed_batch(spark):
-    arts = make_articles(120)
-    events = make_cdc_events(arts)
+def _target(spark, path):
+    # the schema keeps stored_date a string on partitioned reads, and
+    # reads a partitioned table with every row deleted as empty
+    return {r["id"]: r.asDict() for r in spark.read.schema(TABLE).parquet(path).collect()}
+
+
+def _merge_and_check(spark, path, batches, partition_col, soft_delete):
+    """Merge each batch, replay the last one, and compare the target
+    with the sequential replay after every step."""
+    state = {}
+    for events in batches + batches[-1:]:
+        sinks.merge_upsert(
+            spark, spark.createDataFrame(events, SCHEMA), path,
+            partition_col=partition_col, soft_delete=soft_delete,
+        )
+        state = replay_cdc(state, events, soft_delete)
+        assert _target(spark, path) == state
+
+
+def _row(k, title, day):
+    return {"id": k, "title": title, "stored_date": f"2024030{day}", "is_deleted": False}
+
+
+def _key_only(k):
+    return {"id": k, "title": None, "stored_date": None, "is_deleted": None}
+
+
+def _random_batch(rng, n=30, keys=12):
+    """n events over a small key pool.  Equal ts with equal op rank for
+    one key has no defined order, so such draws are skipped."""
+    out, seen = [], set()
+    while len(out) < n:
+        k, op, sec = rng.randint(1, keys), rng.choice("crud"), rng.randint(0, 5)
+        if (k, sec, OP_RANK[op]) in seen:
+            continue
+        seen.add((k, sec, OP_RANK[op]))
+        row = _row(k, f"t{k}.{rng.randint(0, 999)}", rng.randint(1, 3))
+        before = _key_only(k) if rng.random() < 0.5 else dict(row, title="old")
+        out.append((op, before if op in "ud" else None, None if op == "d" else row,
+                    BASE_TS + timedelta(seconds=sec)))
+    return out
+
+
+def _features(state, events):
+    """The contract cases a batch exercises against the stored state."""
+    by_key = {}
+    for e in sorted(events, key=lambda e: (e[3], OP_RANK[e[0]])):
+        by_key.setdefault((e[2] or e[1])["id"], []).append(e)
+    got = set()
+    for k, evs in by_key.items():
+        ops, ts = "".join(e[0] for e in evs), [e[3] for e in evs]
+        old_day = state[k]["stored_date"] if k in state else None
+        flags = {
+            "multi_event": len(evs) > 1,
+            "upsert_then_delete": ops[-1] == "d" and any(o != "d" for o in ops[:-1]),
+            "delete_unseen": ops[0] == "d" and k not in state,
+            "key_only_delete": any(e[0] == "d" and e[1]["title"] is None for e in evs),
+            "partition_move": any(e[2] and old_day not in (None, e[2]["stored_date"]) for e in evs),
+            "equal_ts_by_rank": len(set(ts)) < len(ts),
+        }
+        got |= {name for name, on in flags.items() if on}
+    return got
+
+
+@pytest.mark.parametrize("soft_delete", [True, False], ids=["soft", "hard"])
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+@pytest.mark.parametrize("partition_col", [None, "stored_date"], ids=["whole", "partitioned"])
+def test_merge_equals_sequential_replay(spark, tmp_path, partition_col, uri, soft_delete):
+    rng = random.Random(f"{partition_col}-{uri}-{soft_delete}")
+    batches = [_random_batch(rng), _random_batch(rng)]
+    first = replay_cdc({}, batches[0], soft_delete)
+    assert _features({}, batches[0]) | _features(first, batches[1]) == {
+        "multi_event", "upsert_then_delete", "delete_unseen", "key_only_delete",
+        "partition_move", "equal_ts_by_rank",
+    }
+    path = tmp_path / "t"
+    _merge_and_check(spark, path.as_uri() if uri else str(path), batches, partition_col, soft_delete)
+
+
+T0, T1 = BASE_TS, BASE_TS + timedelta(seconds=1)
+# (partition_col, file:// URI?, batches); soft deletes unless named hard
+CASES = {
+    "file_uri_keeps_earlier_batches": (None, True, [
+        [("c", None, _row(k, f"t{k}", 1), T0) for k in (1, 2, 3)],
+        [("c", None, _row(k, f"t{k}", 1), T1) for k in (4, 5, 6)],
+    ]),
+    "partition_move_leaves_one_row": ("stored_date", False, [
+        [("c", None, _row(1, "a", 1), T0), ("c", None, _row(2, "b", 2), T0)],
+        [("u", _key_only(1), _row(1, "a2", 2), T1)],
+    ]),
+    "key_only_delete_partitioned": ("stored_date", False, [
+        [("c", None, _row(1, "a", 1), T0)],
+        [("d", _key_only(1), None, T1)],
+    ]),
+    "key_only_soft_delete_keeps_row": (None, False, [
+        [("c", None, _row(1, "a", 1), T0)],
+        [("d", _key_only(1), None, T1)],
+    ]),
+    "delete_of_unheld_key_writes_nothing": (None, False, [
+        [("c", None, _row(1, "a", 1), T0)],
+        [("d", _row(9, "z", 1), None, T1)],
+    ]),
+    "hard_delete_of_every_row_partitioned": ("stored_date", False, [
+        [("c", None, _row(1, "a", 1), T0), ("c", None, _row(2, "b", 2), T0)],
+        [("d", _key_only(1), None, T1), ("d", _key_only(2), None, T1)],
+        [("c", None, _row(3, "c", 3), T1 + timedelta(seconds=1))],
+    ]),
+}
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_merge_contract_cases(spark, tmp_path, case):
+    partition_col, uri, batches = CASES[case]
+    path = tmp_path / "t"
+    soft_delete = not case.startswith("hard_delete")
+    _merge_and_check(spark, path.as_uri() if uri else str(path), batches, partition_col, soft_delete)
+
+
+@pytest.mark.parametrize("crash", ["tmp_write", "final_overwrite"])
+def test_whole_table_merge_replays_after_crash(spark, tmp_path, crash):
+    """Hand-built crash states of the whole-table rewrite: a replay of
+    the interrupted batch must equal the uninterrupted run."""
+    rng = random.Random(7)
+    b1, b2 = (spark.createDataFrame(_random_batch(rng), SCHEMA) for _ in range(2))
+    clean, path = str(tmp_path / "clean"), tmp_path / "t"
+    for b in (b1, b2):
+        sinks.merge_upsert(spark, b, clean)
+    sinks.merge_upsert(spark, b1, str(path))
+    tmp = tmp_path / "t._tmp"
+    if crash == "tmp_write":  # target intact, tmp half written
+        (tmp / "_temporary" / "0").mkdir(parents=True)
+        (tmp / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"PAR1 torn")
+    else:  # tmp complete, target deleted and half rewritten
+        shutil.copytree(clean, tmp)
+        shutil.rmtree(path)
+        (path / "_temporary" / "0").mkdir(parents=True)
+    sinks.merge_upsert(spark, b2, str(path))
+    assert _target(spark, str(path)) == _target(spark, clean)
+    assert not tmp.exists()
+
+
+def test_latest_image_per_key_takes_newest(spark, tmp_path):
+    """Of several images of one key in a batch, the newest by ts is stored."""
+    events = [
+        ("u", _key_only(1), _row(1, "old", 1), BASE_TS),
+        ("u", _key_only(1), _row(1, "new", 1), BASE_TS + timedelta(minutes=5)),
+        ("c", None, _row(2, "only", 1), BASE_TS + timedelta(minutes=1)),
+    ]
+    path = str(tmp_path / "t")
+    sinks.merge_upsert(spark, spark.createDataFrame(events, SCHEMA), path)
+    assert {k: r["title"] for k, r in _target(spark, path).items()} == {1: "new", 2: "only"}
+
+
+def _fixture_batch(spark):
+    """The fixture CDC log: enveloped and bare payloads, full rows."""
     raw = spark.createDataFrame(
-        [(e["key"], e["value"], e["kafka_ts"]) for e in events],
+        [(e["key"], e["value"], e["kafka_ts"]) for e in make_cdc_events(make_articles(120))],
         "key string, value string, kafka_ts string",
     )
     return cdc.parse_envelope(raw)
 
 
-def _state(df):
-    return sorted(
-        (r["id"], r["title"], bool(r["is_deleted"]))
-        for r in df.select("id", "title", "is_deleted").collect()
-    )
-
-
-def test_merge_upsert_idempotent_replay(spark, tmp_path):
-    batch = _parsed_batch(spark)
-    target = str(tmp_path / "articles_target")
-    first = sinks.merge_upsert(spark, batch, target, key="id", soft_delete=True)
-    state1 = _state(first)
-    # replaying the identical batch must not change the target
-    second = sinks.merge_upsert(spark, batch, target, key="id", soft_delete=True)
-    assert _state(second) == state1
+def _rows(spark, path):
+    return {r["id"]: r.asDict() for r in spark.read.parquet(path).collect()}
 
 
 def test_merge_applies_soft_delete(spark, tmp_path):
-    batch = _parsed_batch(spark)
+    batch = _fixture_batch(spark)
     target = str(tmp_path / "t2")
-    merged = sinks.merge_upsert(spark, batch, target, key="id", soft_delete=True)
-    deleted_ids = {
-        r["id"]
-        for r in batch.filter(F.col("op") == "d").select(F.col("before.id").alias("id")).collect()
-        if r["id"] is not None
-    }
-    # any key whose LAST event is a delete must be soft-deleted
-    last = sinks.latest_image_per_key(batch)
-    last_deleted = {
-        r["id"] for r in last.filter(F.col("op") == "d")
-        .select(F.coalesce(F.col("before.id"), F.col("after.id")).alias("id")).collect()
-    }
-    flagged = {r["id"] for r in merged.filter(F.col("is_deleted")).collect()}
-    assert last_deleted <= flagged or not deleted_ids
-    # upserted keys must not be missing
-    upserted = {r["id"] for r in last.filter(F.col("op") != "d").select("after.id").collect()}
-    present = {r["id"] for r in merged.select("id").collect()}
-    assert upserted <= present
+    sinks.merge_upsert(spark, batch, target, key="id", soft_delete=True)
+    assert _rows(spark, target) == replay_cdc({}, cdc_events_of(batch))
 
 
-def test_latest_image_per_key_takes_newest(spark):
-    from datetime import datetime
-
-    rows = [
-        ("u", {"id": 1, "v": "old"}, None, datetime(2024, 3, 1, 0, 0)),
-        ("u", {"id": 1, "v": "new"}, None, datetime(2024, 3, 1, 0, 5)),
-        ("c", {"id": 2, "v": "only"}, None, datetime(2024, 3, 1, 0, 1)),
-    ]
-    df = spark.createDataFrame(
-        rows, "op string, after struct<id:long,v:string>, before struct<id:long,v:string>, ts timestamp"
-    ).withColumn("id", F.col("after.id"))
-    latest = sinks.latest_image_per_key(df, key="id")
-    got = {r["id"]: r["after"]["v"] for r in latest.collect()}
-    assert got == {1: "new", 2: "only"}
+def test_merge_upsert_idempotent_replay(spark, tmp_path):
+    batch = _fixture_batch(spark)
+    target = str(tmp_path / "articles_target")
+    sinks.merge_upsert(spark, batch, target, key="id", soft_delete=True)
+    first = _rows(spark, target)
+    # replaying the identical batch must not change the target
+    sinks.merge_upsert(spark, batch, target, key="id", soft_delete=True)
+    assert _rows(spark, target) == first
 
 
 def test_reconcile_snapshot_audit_and_repair_cycle(spark, tmp_path):

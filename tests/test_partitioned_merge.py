@@ -22,6 +22,10 @@ def _batch(spark, arts):
     return cdc.parse_envelope(raw)
 
 
+def _merge(spark, batch, target, **kw):
+    sinks.merge_upsert(spark, batch, target, partition_col="stored_date", **kw)
+
+
 def _state(spark, path):
     return sorted(
         (r["id"], r["title"], bool(r["is_deleted"]))
@@ -33,12 +37,12 @@ def test_partitioned_merge_idempotent_and_partitioned(spark, tmp_path):
     target = str(tmp_path / "t")
     arts = make_articles(150)
     batch = _batch(spark, arts)
-    sinks.merge_upsert_partitioned(spark, batch, target)
+    _merge(spark, batch, target)
     parts = sorted(p for p in os.listdir(target) if p.startswith("stored_date="))
     assert len(parts) >= 1  # event-day partitions exist
     state1 = _state(spark, target)
     # replay: identical state
-    sinks.merge_upsert_partitioned(spark, batch, target)
+    _merge(spark, batch, target)
     assert _state(spark, target) == state1
     # one row per key
     df = spark.read.parquet(target)
@@ -70,14 +74,14 @@ def _op_batch(spark, arts, op):
 def test_partitioned_merge_hard_delete_removes_rows(spark, tmp_path):
     target = str(tmp_path / "t3")
     arts = make_articles(60)
-    sinks.merge_upsert_partitioned(spark, _op_batch(spark, arts, "c"), target, soft_delete=False)
+    _merge(spark, _op_batch(spark, arts, "c"), target, soft_delete=False)
     assert spark.read.parquet(target).count() == 60
     doomed = arts[:7]
-    sinks.merge_upsert_partitioned(spark, _op_batch(spark, doomed, "d"), target, soft_delete=False)
+    _merge(spark, _op_batch(spark, doomed, "d"), target, soft_delete=False)
     remaining = {r["id"] for r in spark.read.parquet(target).select("id").collect()}
     assert remaining == {a["id"] for a in arts[7:]}
     # replay the delete batch: idempotent
-    sinks.merge_upsert_partitioned(spark, _op_batch(spark, doomed, "d"), target, soft_delete=False)
+    _merge(spark, _op_batch(spark, doomed, "d"), target, soft_delete=False)
     assert {r["id"] for r in spark.read.parquet(target).select("id").collect()} == remaining
 
 
@@ -86,9 +90,9 @@ def test_partitioned_merge_soft_delete_marks_rows(spark, tmp_path):
     arts = make_articles(60)
     for a in arts:
         a["is_deleted"] = False
-    sinks.merge_upsert_partitioned(spark, _op_batch(spark, arts, "c"), target)
+    _merge(spark, _op_batch(spark, arts, "c"), target)
     doomed = arts[:7]
-    sinks.merge_upsert_partitioned(spark, _op_batch(spark, doomed, "d"), target)
+    _merge(spark, _op_batch(spark, doomed, "d"), target)
     df = spark.read.parquet(target)
     assert df.count() == 60  # soft delete keeps the rows
     marked = {r["id"] for r in df.filter(F.col("is_deleted")).select("id").collect()}
@@ -106,7 +110,7 @@ def test_merge_upsert_cleans_tmp_dir(spark, tmp_path):
 def test_partitioned_merge_only_touches_batch_partitions(spark, tmp_path):
     target = str(tmp_path / "t2")
     arts = make_articles(150)
-    sinks.merge_upsert_partitioned(spark, _batch(spark, arts), target)
+    _merge(spark, _batch(spark, arts), target)
     # record mtimes of all partition dirs
     def mtimes():
         return {
@@ -123,7 +127,7 @@ def test_partitioned_merge_only_touches_batch_partitions(spark, tmp_path):
     import time
 
     time.sleep(1.1)  # mtime resolution
-    sinks.merge_upsert_partitioned(spark, _batch(spark, one_day), target)
+    _merge(spark, _batch(spark, one_day), target)
     after = mtimes()
     touched = {p for p in before if after[p] != before[p]}
     assert touched == {f"stored_date={arts[0]['stored_date']}"}

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_pipeline_with_kafka_spark import plans
@@ -68,6 +69,14 @@ def test_salted_join_left_equivalence(spark):
 
 
 def test_aggregate_table_roundtrip_prune_and_expire(spark, tmp_path):
+    _aggregate_roundtrip(spark, tmp_path, uri=False)
+
+
+def test_aggregate_table_roundtrip_prune_and_expire_file_uri(spark, tmp_path):
+    _aggregate_roundtrip(spark, tmp_path, uri=True)
+
+
+def _aggregate_roundtrip(spark, tmp_path, uri):
     base = datetime(2024, 3, 1)
     rows = [
         (base + timedelta(days=d, hours=h), f"kw{h % 3}", 1 + h)
@@ -75,11 +84,12 @@ def test_aggregate_table_roundtrip_prune_and_expire(spark, tmp_path):
         for h in range(4)
     ]
     agg = spark.createDataFrame(rows, "bucket timestamp_ntz, keyword string, cnt long")
-    path = str(tmp_path / "agg")
+    local = tmp_path / "agg"
+    path = local.as_uri() if uri else str(local)
     aggregates.write_aggregate_table(agg, path)
 
     # date partitions exist
-    parts = sorted(p for p in os.listdir(path) if p.startswith("date="))
+    parts = sorted(p for p in os.listdir(local) if p.startswith("date="))
     assert parts == [f"date=2024-03-0{d}" for d in range(1, 6)]
 
     # W9 range read returns exactly the in-range rows, pruning partitions
