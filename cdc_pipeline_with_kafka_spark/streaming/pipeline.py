@@ -45,12 +45,11 @@ def deduped_article_stream(articles: DataFrame, key: str = "link") -> DataFrame:
     return articles.dropDuplicatesWithinWatermark([key])
 
 
-def keyword_stream(articles: DataFrame) -> DataFrame:
-    """Explode per-article keywords: uses the stored comma-joined
-    keywords column when present, else regex noun extraction (F2) on
-    the title-weighted text — the deterministic extraction mode
-    (SURVEY §2.9 U1 fallback)."""
-    kw = F.when(
+def _keywords():
+    """An article's keyword array: the stored comma-joined keywords
+    column when present, else regex noun extraction (F2) on the
+    title-weighted text."""
+    return F.when(
         F.col("keywords").isNotNull() & (F.col("keywords") != ""),
         textfn.split_csv(F.col("keywords")),
     ).otherwise(
@@ -59,7 +58,14 @@ def keyword_stream(articles: DataFrame) -> DataFrame:
             lambda x: textfn.is_valid_keyword(x),
         )
     )
-    return articles.select("id", "category", "source", "ts", F.explode(kw).alias("keyword"))
+
+
+def keyword_stream(articles: DataFrame) -> DataFrame:
+    """Explode per-article keywords: uses the stored comma-joined
+    keywords column when present, else regex noun extraction (F2) on
+    the title-weighted text — the deterministic extraction mode
+    (SURVEY §2.9 U1 fallback)."""
+    return articles.select("id", "category", "source", "ts", F.explode(_keywords()).alias("keyword"))
 
 
 def trending_query(keywords: DataFrame, window: str = "30 minutes", min_mentions: int = 10) -> DataFrame:
@@ -149,15 +155,6 @@ def enriched_keyword_events(articles: DataFrame) -> DataFrame:
     keyword structs, breaking indicators (U4/F7), sentiment stub (U5),
     trend-score stub (U6), content truncated to 500 chars, keyed
     ``article_{id}`` — as Kafka-ready (key, value-JSON) rows."""
-    kw = F.when(
-        F.col("keywords").isNotNull() & (F.col("keywords") != ""),
-        textfn.split_csv(F.col("keywords")),
-    ).otherwise(
-        F.filter(
-            textfn.extract_korean_nouns(textfn.weighted_text(F.col("title"), F.col("content"))),
-            lambda x: textfn.is_valid_keyword(x),
-        )
-    )
     # Generate barrier: the extraction expression is referenced by three
     # downstream columns; explode(array(...)) pins one evaluation
     enriched = articles.select(
@@ -166,7 +163,7 @@ def enriched_keyword_events(articles: DataFrame) -> DataFrame:
         textfn.truncate(F.col("content"), 500).alias("content"),
         F.col("category"),
         F.col("ts"),
-        F.explode(F.array(F.array_distinct(kw))).alias("kw_list"),  # O6 ordered distinct
+        F.explode(F.array(F.array_distinct(_keywords()))).alias("kw_list"),  # O6 ordered distinct
     ).select(
         "*",
         F.transform(
@@ -551,103 +548,72 @@ def make_kmeans_state_sink(
     return sink
 
 
-def make_components_sink(
-    labels_path: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    mode: str = "full",
-    auto_compact: bool = False,
-    auto_compact_min_rows: int = 65_536,
-):
+# Floor of the components sink's compaction trigger (SCALING §16): a
+# young label table would otherwise be compacted every few batches.
+COMPONENTS_COMPACT_MIN_ROWS = 65_536
+
+
+def make_components_sink(labels_path: str, id_a: str = "id_a", id_b: str = "id_b"):
     """foreachBatch sink maintaining a rolling connected-components
-    LABEL TABLE over a near-dup pair stream
-    (operators/dedup.connected_components_incremental — the streaming
-    face of the component tier's incremental member).
+    LABEL TABLE over a near-dup pair stream (operators/dedup, the
+    streaming face of the component tier's incremental member).
 
-    ``mode='full'``: batch N's labels are a FULL VERSIONED SNAPSHOT
-    under ``batch_id=N`` computed from the latest snapshot with
-    batch_id < N — the kmeans-state-sink crash contract (labels are a
-    running aggregate, so a replayed batch recomputes its snapshot
-    from N−1's and overwrites; and because min-label contraction makes
-    re-admitting the same pairs a no-op, even a double-application
-    converges to the same table).  Snapshot size = nodes-seen-so-far
-    rows: O(corpus) WRITE amplification on a long-running stream.
+    Batch N writes ONLY the labels it changes (new nodes + relabeled
+    components — connected_components_delta) under ``batch_id=N``, so
+    the write is O(batch-touched), not O(nodes-seen).  The current
+    table is the last-writer-wins merge of all batch dirs
+    (`read_component_labels`); a replayed batch reconstructs the prior
+    view from dirs < N and overwrites its own dir, so replay is
+    idempotent.  Stores written as full per-batch snapshots read the
+    same way (each node's newest row wins).
 
-    ``mode='delta'``: batch N writes ONLY the labels it changes (new
-    nodes + relabeled components — connected_components_delta), so the
-    write is O(batch-touched), not O(nodes-seen).  The current table
-    is the last-writer-wins merge of all batch dirs
-    (`read_component_labels`); the same batch_id-scoped overwrite
-    keeps crash replay idempotent (a replayed batch reconstructs the
-    prior view from dirs < N and overwrites its own dir).  Run
-    `compact_component_labels` periodically so the reconstruction read
-    stays bounded — see SCALING.md for the cadence; only compact
-    batches the stream has fully committed past.
+    The sink then enforces the SCALING §16 cadence itself: it tracks
+    cumulative delta rows in a small marker file and, once they reach
+    ``max(COMPONENTS_COMPACT_MIN_ROWS, last-compacted table size)``
+    (Σ delta ≈ node count), compacts dirs ≤ N−1 (always committed
+    past, so never racing a replay).  The marker update is
+    batch_id-guarded, so a replayed batch doesn't double-count its
+    rows; losing the marker merely delays the next compaction (cadence
+    state, not correctness state).  Compaction renames local dirs, so
+    `labels_path` must be a local path or ``file://`` URI; any other
+    scheme raises here, before a batch runs.
 
-    ``auto_compact=True`` (delta mode only, r9): the sink enforces
-    the SCALING §16 cadence itself — it tracks cumulative delta rows
-    in a small marker file and, once they reach
-    ``max(auto_compact_min_rows, last-compacted label-table size)``
-    (i.e. Σ delta ≈ node count), compacts dirs ≤ batch−1 (always
-    committed past, so never racing a replay).  The marker update is
-    batch_id-guarded, so a crash-replayed batch doesn't double-count
-    its rows; losing the marker merely delays the next compaction
-    (cadence state, not correctness state).
+    Per-batch compute: components over the CONTRACTED graph (bounded
+    by the batch's edge count) + one broadcast remap — the corpus pair
+    graph is never recomputed.  Cold start: batch 0 is a plain
+    `connected_components` run.  Every batch uses that one components
+    algorithm (min-label rounds, then star contraction if the batch's
+    graph is long), so any pair-graph shape converges."""
+    import os
 
-    Per-batch compute in BOTH modes: components over the CONTRACTED
-    graph (bounded by the batch's edge count) + one broadcast remap —
-    the corpus pair graph is never recomputed.  Cold start: batch 0 is
-    a plain `connected_components` run.  Every batch uses that one
-    components algorithm (min-label rounds, then star contraction if
-    the batch's graph is long), so any pair-graph shape converges."""
     from ..operators import dedup as dedup_ops
 
-    if mode not in ("full", "delta"):
-        raise ValueError(f"unknown mode {mode!r}; use full|delta")
-    if auto_compact and mode != "delta":
-        raise ValueError("auto_compact requires mode='delta'")
+    marker = os.path.join(store.local_path(labels_path), "_compact_state.json")
 
     def sink(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if mode == "full":
-            labels = store.latest(spark, labels_path, batch_id)
-        else:
-            labels = read_component_labels(spark, labels_path, before=batch_id)
+        pairs = batch_df.select(id_a, id_b)
+        labels = read_component_labels(spark, labels_path, before=batch_id)
         if labels is None:
-            out = dedup_ops.connected_components(
-                batch_df.select(id_a, id_b), id_a, id_b
-            )
-        elif mode == "full":
-            out = dedup_ops.connected_components_incremental(
-                batch_df.select(id_a, id_b), labels, id_a=id_a, id_b=id_b
-            )
+            out = dedup_ops.connected_components(pairs, id_a, id_b)
         else:
-            out = dedup_ops.connected_components_delta(
-                batch_df.select(id_a, id_b), labels, id_a=id_a, id_b=id_b
-            )
+            out = dedup_ops.connected_components_delta(pairs, labels, id_a=id_a, id_b=id_b)
         pinned = out.localCheckpoint(eager=True)
         store.write(pinned, labels_path, batch_id)
-        if auto_compact:
-            _auto_compact_components(
-                spark, labels_path, batch_id,
-                int(pinned.count()), auto_compact_min_rows,
-            )
+        _compact_components(spark, labels_path, marker, batch_id, pinned.count())
 
     return sink
 
 
-def _auto_compact_components(
-    spark, labels_path: str, batch_id: int, batch_rows: int, min_rows: int
-) -> None:
-    """SCALING §16 cadence, enforced by the sink: compact when the
-    deltas accumulated since the last compaction reach the label-table
-    size (Σ delta ≈ node count), floored at `min_rows`.  State lives
-    in a marker file; the update is batch_id-guarded so crash replays
+def _compact_components(spark, labels_path: str, marker: str, batch_id: int, batch_rows: int) -> None:
+    """SCALING §16 cadence: compact when the deltas accumulated since
+    the last compaction reach the label-table size (Σ delta ≈ node
+    count), floored at COMPONENTS_COMPACT_MIN_ROWS.  State lives in the
+    `marker` file; the update is batch_id-guarded so crash replays
     don't double-count, and a lost marker only DELAYS compaction."""
     import json
     import os
 
-    marker = os.path.join(labels_path, "_compact_state.json")
     state = {"last_counted_batch": -1, "delta_since": 0, "base_rows": 0}
     try:
         with open(marker) as f:
@@ -658,25 +624,21 @@ def _auto_compact_components(
         state["delta_since"] += batch_rows
         state["last_counted_batch"] = batch_id
     if batch_id >= 1 and state["delta_since"] >= max(
-        min_rows, state["base_rows"]
+        COMPONENTS_COMPACT_MIN_ROWS, state["base_rows"]
     ):
-        state["base_rows"] = compact_component_labels(
-            spark, labels_path, batch_id - 1
-        )
+        state["base_rows"] = compact_component_labels(spark, labels_path, batch_id - 1)
         # only the current batch's dir remains uncompacted
         state["delta_since"] = batch_rows
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
+    with open(marker + ".tmp", "w") as f:
         json.dump(state, f)
-    os.replace(tmp, marker)
+    os.replace(marker + ".tmp", marker)
 
 
 def read_component_labels(spark, labels_path: str, before: int | None = None):
-    """Current (id, cluster_id) view of a delta-mode component table:
+    """Current (id, cluster_id) view of a component label table:
     last-writer-wins per node over the batch_id dirs (optionally only
-    dirs < `before` — the replay-reconstruction read).  Works on
-    full-mode tables too (the latest snapshot rows win per node).
-    Returns None when no dirs qualify (cold start)."""
+    dirs < `before` — the replay-reconstruction read).  Returns None
+    when no dirs qualify (cold start)."""
     df = store.read(spark, labels_path)
     if df is not None and before is not None:
         df = df.filter(F.col("batch_id") < before)
@@ -694,8 +656,8 @@ def compact_component_labels(
 ) -> int:
     """Collapse all component-label dirs with batch_id ≤ `upto_batch`
     into one last-writer-wins dir (under the highest compacted id) and
-    delete the older dirs — bounds the delta-mode reconstruction read
-    (and trims full-mode history).  ONLY compact batches the stream
+    delete the older dirs — bounds the reconstruction read.  The
+    components sink runs this itself; ONLY compact batches the stream
     has committed past (foreachBatch replays at most the newest
     uncommitted batch, so upto_batch ≤ last-committed − 1 is always
     safe).  Local filesystem only (loud ValueError otherwise).
@@ -1189,12 +1151,14 @@ def make_comoment_sink(
 def read_comoments(spark, table_path: str, group_cols: list[str]):
     """Merged co-moment table across every delivered batch (and any
     compacted segment) — exact per-group DECIMAL sums; feed to
-    stats.ols_from_comoments (or read n/Σ directly)."""
+    stats.ols_from_comoments (or read n/Σ directly).  Raises
+    FileNotFoundError on an empty or missing table."""
     from ..operators.stats import merge_comoments
 
-    return merge_comoments(
-        spark.read.parquet(table_path).drop("batch_id"), group_cols
-    )
+    rows = store.read(spark, table_path)
+    if rows is None:
+        raise FileNotFoundError(f"no co-moment batches under {table_path}")
+    return merge_comoments(rows.drop("batch_id"), group_cols)
 
 
 def compact_comoments(spark, table_path: str, group_cols: list[str]) -> int:
@@ -1543,7 +1507,6 @@ def make_pagerank_sink(
     src: str = "src",
     dst: str = "dst",
     iters: int = 100,
-    tol_micro: int = 0,
     damping_ppm: int = 850_000,
     weight_col: str | None = None,
     check_every: int = 1,
@@ -1552,11 +1515,10 @@ def make_pagerank_sink(
     authority sibling, closing the streaming graph family
     (components / ΔK-core / PageRank): each micro-batch appends its
     edges to the persisted store and refreshes the score table via
-    `graph.pagerank(init_scores=<latest snapshot>, tol_micro=...)` —
+    `graph.pagerank(init_scores=<latest snapshot>, tol_micro=0)` —
     WARM-STARTED, so a small edge delta converges in a handful of
-    full-edge iterations instead of the cold budget (at tol_micro=0
-    the snapshot is an exact integer fixed point of the new graph's
-    map).  Same layout and contracts as `make_coreness_sink`:
+    full-edge iterations instead of the cold budget, and the snapshot
+    is an exact integer fixed point of the new graph's map.  Same layout and contracts as `make_coreness_sink`:
     ``edges/batch_id=N`` appends, ``labels/batch_id=N`` full score
     snapshots, replay reconstructs from dirs < N and overwrites
     (byte-identical), `compact_coreness_edges` bounds the store read
@@ -1570,7 +1532,7 @@ def make_pagerank_sink(
     edge would keep BOTH weight rows in the distinct edge list and
     be silently double-counted.
 
-    `check_every` forwards to graph.pagerank (r13): at the default
+    `check_every` forwards to graph.pagerank (r13): at
     ``tol_micro=0`` the snapshot is bit-identical for any value, so
     latency-bound deployments (small graphs, test fixtures) can chunk
     the convergence barrier; keep 1 when an iteration is a full-scale
@@ -1596,7 +1558,7 @@ def make_pagerank_sink(
         scores = graph_ops.pagerank(
             all_edges, iters=iters, damping_ppm=damping_ppm,
             weight_col="w" if weight_col is not None else None,
-            tol_micro=tol_micro, init_scores=prior,
+            tol_micro=0, init_scores=prior,
             check_every=check_every,
         )
         store.write(scores.localCheckpoint(eager=True), f"{out_path}/labels", batch_id)

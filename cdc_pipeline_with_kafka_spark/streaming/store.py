@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _DIR = re.compile(r"batch_id=(-?\d+)")
+# A compaction's tmp dir: ._compact_<highest id it replaces>_<target id>.
+# The leading dot hides it from partition discovery.
+_TMP = re.compile(r"\._compact_(-?\d+)_(-?\d+)")
 # The only read errors that mean "nothing written yet".  The last one
 # is an aborted first batch: the store holds only batch_id=0/_temporary,
 # and replaying that batch must cold-start, not fail forever.
@@ -35,35 +38,46 @@ def write(df: DataFrame, path: str, batch_id: int) -> None:
 
 def read(spark, path: str) -> DataFrame | None:
     """Every batch dir under `path`, with its ``batch_id`` column, or
-    None on a cold start.  Any other read error (storage blip, corrupt
-    footer, permissions) raises, so the batch fails and the checkpoint
-    retries it.  Callers apply their own replay filter on batch_id."""
+    None on a cold start.  A finished compaction tmp that `compact` has
+    not renamed yet stands in for the dirs it replaces.  Any other read
+    error (storage blip, corrupt footer, permissions) raises, so the
+    batch fails and the checkpoint retries it.  Callers apply their own
+    replay filter on batch_id."""
+    fs, jpath, names = _dirs(spark, path)
     try:
-        return spark.read.option("basePath", path).parquet(path)
+        df = spark.read.option("basePath", path).parquet(path)
     except AnalysisException as exc:
-        if any(m in str(exc) for m in _COLD_START):
-            return None
-        raise
+        if not any(m in str(exc) for m in _COLD_START):
+            raise
+        df = None
+    for name in names:
+        m = _TMP.fullmatch(name)
+        if m and fs.exists(jpath(f"{path}/{name}/_SUCCESS")):
+            merged = spark.read.parquet(f"{path}/{name}").withColumn("batch_id", F.lit(int(m.group(2))))
+            return merged if df is None else df.filter(F.col("batch_id") > int(m.group(1))).unionByName(merged)
+    return df
 
 
 def latest(spark, path: str, before: int | None) -> DataFrame | None:
     """The newest snapshot dir with batch_id < `before` (None: no
     bound), or None on a cold start.  "Newest" comes from listing the
-    dirs through the Hadoop FileSystem API, not from row values: an
-    EMPTY newest snapshot (a quiet batch) is the current state, where
-    a row-value max would fall back to a stale non-empty one.  A
-    missing path is a cold start; every other listing failure raises."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    ids = [
-        int(m.group(1))
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and (m := _DIR.fullmatch(st.getPath().getName()))
-    ]
+    dirs, not from row values: an EMPTY newest snapshot (a quiet batch)
+    is the current state, where a row-value max would fall back to a
+    stale non-empty one."""
+    ids = [int(m.group(1)) for d in _dirs(spark, path)[2] if (m := _DIR.fullmatch(d))]
     ids = [k for k in ids if before is None or k < before]
     return spark.read.parquet(f"{path}/batch_id={max(ids)}") if ids else None
+
+
+def _dirs(spark, path: str):
+    """(Hadoop FileSystem, Path constructor, names of the dirs directly
+    under `path`), listed through the FileSystem API so any URI works.
+    A missing path has no dirs; every other listing failure raises."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath(path)):
+        return fs, jpath, []
+    return fs, jpath, [st.getPath().getName() for st in fs.listStatus(jpath(path)) if st.isDirectory()]
 
 
 def last_per_key(df: DataFrame, keys: list[str], *tiebreak) -> DataFrame:
@@ -92,46 +106,65 @@ def local_path(path: str) -> str:
     return url.path if url.scheme else path
 
 
-def _local_ids(path: str, keep) -> tuple[str, list[int]]:
-    """(local path, sorted batch ids under it that `keep`)."""
-    local = local_path(path)
+def _names(local: str) -> list[str]:
     try:
-        names = os.listdir(local)
+        return os.listdir(local)
     except FileNotFoundError:
-        return local, []
-    ids = (int(m.group(1)) for d in names if (m := _DIR.fullmatch(d)))
-    return local, sorted(k for k in ids if keep(k))
+        return []
+
+
+def _local_ids(local: str, keep) -> list[int]:
+    """Sorted batch ids under the local dir `local` that `keep`."""
+    ids = (int(m.group(1)) for d in _names(local) if (m := _DIR.fullmatch(d)))
+    return sorted(k for k in ids if keep(k))
 
 
 def compact(spark, path: str, upto: int | None, merge, into: int | None = None) -> int:
     """Fold the dirs with batch_id ≤ `upto` (None: all) into one.
     `merge(rows)` gets their rows with batch_id and returns the merged
-    frame.  Order: write the merge to a hidden tmp dir, then delete
-    the old dirs, then rename tmp to ``batch_id=<into>`` (default: the
-    highest compacted id, so a replay of any later batch reads the
-    same state).  A failed merge write leaves the store untouched.
-    Only compact batches the stream has committed past.  Local
-    filesystem only.  Returns the compacted row count."""
-    path, ids = _local_ids(path, lambda k: upto is None or k <= upto)
+    frame.  Order: write the merge to the hidden tmp dir
+    ``._compact_<hi>_<into>`` (hi: the highest compacted id), then
+    delete the old dirs, then rename tmp to ``batch_id=<into>``
+    (default: hi, so a replay of any later batch reads the same state).
+    Crash rule: once tmp holds ``_SUCCESS`` it is the state of every
+    dir ≤ hi, so `read` uses it in their place and the next `compact`
+    first finishes the deletes and the rename; an unfinished tmp is
+    dropped (no old dir was deleted yet).  Only compact batches the
+    stream has committed past.  Local filesystem only.  Returns the
+    compacted row count."""
+    path = local_path(path)
+    _finish(path)
+    ids = _local_ids(path, lambda k: upto is None or k <= upto)
     if not ids:
         return 0
     rows = spark.read.option("basePath", path).parquet(
         *[f"{path}/batch_id={k}" for k in ids]
     )
-    tmp = f"{path}/._compact_tmp"
+    tmp = f"{path}/._compact_{ids[-1]}_{ids[-1] if into is None else into}"
     merge(rows).drop("batch_id").write.mode("overwrite").parquet(tmp)
     n = spark.read.parquet(tmp).count()
-    for k in ids:
-        shutil.rmtree(f"{path}/batch_id={k}")
-    os.rename(tmp, f"{path}/batch_id={ids[-1] if into is None else into}")
+    _finish(path)
     return n
+
+
+def _finish(path: str) -> None:
+    """Complete or drop the compaction tmp dirs under the local `path`."""
+    for name in _names(path):
+        if m := _TMP.fullmatch(name):
+            if os.path.exists(f"{path}/{name}/_SUCCESS"):
+                for k in _local_ids(path, lambda k: k <= int(m.group(1))):
+                    shutil.rmtree(f"{path}/batch_id={k}")
+                os.rename(f"{path}/{name}", f"{path}/batch_id={m.group(2)}")
+            else:
+                shutil.rmtree(f"{path}/{name}")
 
 
 def expire(path: str, before: int) -> int:
     """Delete the whole snapshot dirs with batch_id < `before` —
     retention for stores versioned whole, where nothing needs merging.
     Local filesystem only.  Returns the number of dirs deleted."""
-    path, ids = _local_ids(path, lambda k: k < before)
+    path = local_path(path)
+    ids = _local_ids(path, lambda k: k < before)
     for k in ids:
         shutil.rmtree(f"{path}/batch_id={k}")
     return len(ids)

@@ -237,45 +237,6 @@ def test_connected_components_incremental_equals_full(spark):
         assert inc == full, cut
 
 
-def test_components_sink_batches_and_replay(spark, tmp_path):
-    """Rolling label maintenance: three micro-batches of pairs must
-    yield the SAME label table as one full components run (incl.
-    batches that merge earlier clusters), and replaying a batch (same
-    batch_id) recomputes its snapshot from the prior one —
-    byte-identical labels."""
-    import numpy as np
-
-    from cdc_pipeline_with_kafka_spark.operators import dedup
-    from cdc_pipeline_with_kafka_spark.streaming import pipeline
-
-    rng = np.random.default_rng(31)
-    pairs = sorted({(int(a), int(b)) for a, b in rng.integers(0, 30, (40, 2)) if a != b})
-    thirds = [pairs[0::3], pairs[1::3], pairs[2::3]]
-    path = str(tmp_path / "labels")
-    sink = pipeline.make_components_sink(path)
-    for i, chunk in enumerate(thirds):
-        sink(spark.createDataFrame(chunk, "id_a long, id_b long"), i)
-
-    def latest():
-        df = spark.read.option("basePath", path).parquet(path)
-        last = df.agg(F.max("batch_id")).first()[0]
-        return {
-            r["id"]: r["cluster_id"]
-            for r in df.filter(F.col("batch_id") == last).collect()
-        }
-
-    full = {
-        r["id"]: r["cluster_id"]
-        for r in dedup.connected_components(
-            spark.createDataFrame(pairs, "id_a long, id_b long")
-        ).collect()
-    }
-    assert latest() == full
-    # crash replay of the final batch: snapshot recomputed, unchanged
-    sink(spark.createDataFrame(thirds[2], "id_a long, id_b long"), 2)
-    assert latest() == full
-
-
 def test_components_sink_delta_mode_bounded_writes(spark, tmp_path):
     """Delta mode: the LWW merge of the batch dirs equals the full
     recompute (incl. cluster merges and crash replay), and batch N's
@@ -291,7 +252,7 @@ def test_components_sink_delta_mode_bounded_writes(spark, tmp_path):
     pairs = sorted({(int(a), int(b)) for a, b in rng.integers(0, 60, (80, 2)) if a != b})
     thirds = [pairs[0::3], pairs[1::3], pairs[2::3]]
     path = str(tmp_path / "labels")
-    sink = pipeline.make_components_sink(path, mode="delta")
+    sink = pipeline.make_components_sink(path)
     for i, chunk in enumerate(thirds):
         sink(spark.createDataFrame(chunk, "id_a long, id_b long"), i)
 
@@ -328,6 +289,27 @@ def test_components_sink_delta_mode_bounded_writes(spark, tmp_path):
     assert merged() == {
         n: (min(a_lbl, b_lbl) if l == loser else l) for n, l in before.items()
     }
+
+
+def test_components_sink_continues_full_snapshot_store(spark, tmp_path):
+    """A store of full per-batch label snapshots (the layout the sink
+    once wrote) needs no migration: the last-writer-wins view returns
+    each node's newest snapshot row, and the next delta batch extends
+    it to the labels of all pairs."""
+    from cdc_pipeline_with_kafka_spark.streaming import pipeline, store
+
+    path = str(tmp_path / "labels")
+    # snapshots after pairs (1,2),(3,4) and then (2,3),(5,6)
+    snapshots = [
+        [(1, 1), (2, 1), (3, 3), (4, 3)],
+        [(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5)],
+    ]
+    for b, rows in enumerate(snapshots):
+        store.write(spark.createDataFrame(rows, "id long, cluster_id long"), path, b)
+    sink = pipeline.make_components_sink(path)
+    sink(spark.createDataFrame([(6, 7), (8, 9)], "id_a long, id_b long"), 2)
+    got = {r["id"]: r["cluster_id"] for r in pipeline.read_component_labels(spark, path).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 8, 9: 8}
 
 
 def test_components_delta_equals_incremental_under_lww(spark):
@@ -368,7 +350,7 @@ def test_compact_component_labels_bounds_history(spark, tmp_path):
     from cdc_pipeline_with_kafka_spark.streaming import pipeline
 
     path = str(tmp_path / "labels")
-    sink = pipeline.make_components_sink(path, mode="delta")
+    sink = pipeline.make_components_sink(path)
     sink(spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long"), 0)
     sink(spark.createDataFrame([(2, 3)], "id_a long, id_b long"), 1)
     sink(spark.createDataFrame([(10, 11)], "id_a long, id_b long"), 2)
@@ -423,21 +405,20 @@ def test_triangle_census_triangle_free_and_empty(spark):
     assert graph.triangle_census(empty).count() == 0
 
 
-def test_components_sink_auto_compact_bounds_history(spark, tmp_path):
-    """r9 judge closure: auto_compact=True makes the delta-mode sink
-    enforce the SCALING cadence itself — on a long stream the number
-    of batch dirs stays bounded WITHOUT caller intervention, the
-    marker update is replay-safe, and the final merged view still
-    equals a one-shot connected-components run over all pairs."""
+def test_components_sink_self_compaction_bounds_history(spark, tmp_path, monkeypatch):
+    """The sink enforces the SCALING cadence itself — on a long stream
+    the number of batch dirs stays bounded WITHOUT caller
+    intervention, the marker update is replay-safe, and the final
+    merged view still equals a one-shot connected-components run over
+    all pairs."""
     import os
 
     from cdc_pipeline_with_kafka_spark.operators import dedup as D
     from cdc_pipeline_with_kafka_spark.streaming import pipeline as P
 
+    monkeypatch.setattr(P, "COMPONENTS_COMPACT_MIN_ROWS", 8)
     path = str(tmp_path / "labels")
-    sink = P.make_components_sink(
-        path, mode="delta", auto_compact=True, auto_compact_min_rows=8
-    )
+    sink = P.make_components_sink(path)
     all_pairs = []
     max_dirs = 0
     for b in range(24):
@@ -471,9 +452,37 @@ def test_components_sink_auto_compact_bounds_history(spark, tmp_path):
     }
     assert got == want
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="delta"):
-        P.make_components_sink(path, mode="full", auto_compact=True)
+
+def test_components_sink_compacts_file_uri_store(spark, tmp_path, monkeypatch):
+    """A ``file://`` labels path: the sink's compaction marker and its
+    compactions resolve the URI to the local dir, so batches that
+    compact succeed, and the merged view equals one
+    connected-components run over all pairs."""
+    import os
+
+    from cdc_pipeline_with_kafka_spark.operators import dedup as D
+    from cdc_pipeline_with_kafka_spark.streaming import pipeline as P
+
+    monkeypatch.setattr(P, "COMPONENTS_COMPACT_MIN_ROWS", 2)
+    path = tmp_path / "labels"
+    sink = P.make_components_sink(path.as_uri())
+    batches = [[(1, 2)], [(3, 4)], [(2, 3), (5, 6)], [(6, 7)]]
+    for b, pairs in enumerate(batches):
+        sink(spark.createDataFrame(pairs, "id_a long, id_b long"), b)
+    # compactions ran: fewer dirs than batches
+    assert len([d for d in os.listdir(path) if d.startswith("batch_id=")]) < len(batches)
+    got = {
+        (r["id"], r["cluster_id"])
+        for r in P.read_component_labels(spark, path.as_uri()).collect()
+    }
+    want = {
+        (r["id"], r["cluster_id"])
+        for r in D.connected_components(
+            spark.createDataFrame([p for b in batches for p in b], "id_a long, id_b long"),
+            "id_a", "id_b",
+        ).collect()
+    }
+    assert got == want
 
 
 def test_bfs_levels_min_hop_semantics(spark):

@@ -1461,6 +1461,10 @@ def test_graph_sink_store_reads_cluster_safe(spark, tmp_path):
         pipeline.compact_coreness_edges(spark, "hdfs://nn/store", 1)
     with pytest.raises(ValueError, match="local-filesystem"):
         pipeline.compact_component_labels(spark, "s3a://bucket/labels", 1)
+    # the components sink compacts itself, so a remote path fails when
+    # the sink is built, before any batch depends on the store
+    with pytest.raises(ValueError, match="local-filesystem"):
+        pipeline.make_components_sink("s3a://bucket/labels")
     with pytest.raises(FileNotFoundError):
         pipeline.read_coreness_labels(spark, missing)
 
@@ -1487,7 +1491,7 @@ def _replay_kmeans(spark, tmp_path, path):
 
 
 def _replay_components(spark, tmp_path, path):
-    sink = pipeline.make_components_sink(path, mode="delta")
+    sink = pipeline.make_components_sink(path)
     sink(spark.createDataFrame([(1, 2)], "id_a long, id_b long"), 0)
 
 
@@ -1558,6 +1562,89 @@ def test_compact_comoments_failed_write_keeps_state(spark, tmp_path, monkeypatch
         pipeline.compact_comoments(spark, tp, ["g"])
     monkeypatch.undo()
     assert sums() == before
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_next_compaction(monkeypatch, state):
+    """Make the next store compaction stop at `state`: before any old
+    batch dir is deleted ("tmp_incomplete"; the caller then strips the
+    tmp's _SUCCESS), after one is deleted ("some_deleted"), or after
+    all are deleted but before the merged dir is renamed in
+    ("all_deleted")."""
+    import os
+    import shutil
+
+    rmtree, rename = shutil.rmtree, os.rename
+    limit = {"tmp_incomplete": 0, "some_deleted": 1, "all_deleted": None}[state]
+    deleted = []
+
+    def crashing_rmtree(p, *args, **kwargs):
+        if "batch_id=" in str(p):
+            if len(deleted) == limit:
+                raise _Crash(p)
+            deleted.append(p)
+        rmtree(p, *args, **kwargs)
+
+    def crashing_rename(src, dst):
+        if "batch_id=" in str(dst):
+            raise _Crash(dst)
+        rename(src, dst)
+
+    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
+    monkeypatch.setattr(os, "rename", crashing_rename)
+
+
+def _components_store(spark, path):
+    schema = "id long, cluster_id long"
+    for b, rows in enumerate([[(1, 1), (2, 1)], [(3, 3), (4, 3)], [(3, 1), (4, 1), (5, 5)]]):
+        store.write(spark.createDataFrame(rows, schema), path, b)
+
+    def view():
+        return sorted(map(tuple, pipeline.read_component_labels(spark, path).collect()))
+
+    return view, lambda: pipeline.compact_component_labels(spark, path, 1), ["batch_id=1", "batch_id=2"]
+
+
+def _comoment_store(spark, path):
+    schema = "g string, x double, y double"
+    sink = pipeline.make_comoment_sink(path, "x", "y", ["g"])
+    for b in range(3):
+        sink(spark.createDataFrame([("g1", float(b), 2.0 * b + 1.0), ("g2", 1.0, float(b))], schema), b)
+
+    def view():
+        return sorted(map(tuple, pipeline.read_comoments(spark, path, ["g"]).collect()))
+
+    return view, lambda: pipeline.compact_comoments(spark, path, ["g"]), ["batch_id=-1"]
+
+
+@pytest.mark.parametrize("state", ["tmp_incomplete", "some_deleted", "all_deleted"])
+@pytest.mark.parametrize("build", [_components_store, _comoment_store], ids=["components", "comoments"])
+def test_compaction_crash_states_keep_state(spark, tmp_path, monkeypatch, build, state):
+    """A compaction that crashes between writing its merged tmp and
+    renaming it in loses nothing: every read equals the uninterrupted
+    view, and the next compaction leaves one dir for the compacted
+    range and no tmp."""
+    import os
+
+    path = str(tmp_path / "store")
+    view, compact, dirs_after = build(spark, path)
+    want = view()
+    _crash_next_compaction(monkeypatch, state)
+    with pytest.raises(_Crash):
+        compact()
+    monkeypatch.undo()
+    if state == "tmp_incomplete":
+        for d in os.listdir(path):
+            if d.startswith("._compact"):
+                os.remove(os.path.join(path, d, "_SUCCESS"))
+                os.mkdir(os.path.join(path, d, "_temporary"))
+    assert view() == want
+    compact()
+    assert sorted(d for d in os.listdir(path) if not d.startswith("_")) == dirs_after
+    assert view() == want
 
 
 def test_anonymized_release_sink_parity_unpark_and_replay(spark, tmp_path):
