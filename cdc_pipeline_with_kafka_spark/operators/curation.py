@@ -621,7 +621,7 @@ def admit_shard(
       1. quality gate (optional),
       2. in-shard exact dedup (lowest id survives),
       3. corpus exact dedup: content_hash anti-join vs `index_hashes`,
-      4. corpus near-dup: `minhash_lsh_pairs_incremental` vs
+      4. corpus near-dup: `minhash_lsh_pairs` of the shard against
          `index_sigs` — any shard doc banding with an INDEXED doc is
          rejected,
       5. in-shard near-dup: remaining new↔new pairs → connected
@@ -691,17 +691,11 @@ def admit_shard(
         hashed = hashed.join(idx_h, "_ch", "left_anti")
     alive = hashed
 
-    if index_sigs is not None:
-        pairs = dedup_ops.minhash_lsh_pairs_incremental(
-            alive.drop("_ch"), index_sigs, threshold=threshold,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            text_col=text_col, id_col=id_col,
-        )
-    else:
-        pairs = dedup_ops.minhash_lsh_pairs(
-            alive.drop("_ch"), threshold=threshold, num_hashes=num_hashes,
-            bands=bands, shingle_n=shingle_n, text_col=text_col, id_col=id_col,
-        )
+    pairs = dedup_ops.minhash_lsh_pairs(
+        alive.drop("_ch"), threshold=threshold, num_hashes=num_hashes,
+        bands=bands, shingle_n=shingle_n, text_col=text_col, id_col=id_col,
+        index_sigs=index_sigs,
+    )
     # eager localCheckpoint, not persist(): the pair graph is consumed
     # three times below, and in the streaming sink the index paths this
     # plan reads get appended right after — a persisted plan would be

@@ -18,6 +18,8 @@ append-only corpus to be idempotent).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -370,6 +372,86 @@ def minhash_signatures(
     return base.groupBy("id").agg(F.expr(f"array({mins})").alias("sig"))
 
 
+def _blocked_pairs(
+    new: DataFrame,
+    index: DataFrame | None,
+    keys: list[str],
+    block_eq: Callable[[int], str],
+    score: str,
+    keep: Column,
+    group_cols: Sequence[str] = (),
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Blocked near-dup pair search, the engine behind
+    `minhash_lsh_pairs`, `simhash_pairs` and `multimodal.phash_pairs`.
+
+    ``new`` holds one row per item: ``id``, the sketch column(s) the
+    SQL strings read, and ``group_cols`` (which join the bucket key, so
+    items pair only within their group).  Item x lands in bucket
+    (i, ``keys[i]``(x)) for every block i; ``block_eq(i)`` is the SQL
+    predicate over the pair structs ``m1``/``m2`` that holds iff both
+    share block i's key.  ``score`` ("<expr> AS <name>") is computed
+    per candidate pair and ``keep`` filters on it.  Returns
+    (id_a = least id, id_b = greatest id, <name>).
+
+    ``index`` (same columns) is persisted corpus state: with it, only
+    pairs touching at least one ``new`` row come back — new↔index and
+    new↔new — the full-corpus pairs restricted to the new rows.  None
+    (cold start) pairs ``new`` with itself.
+
+    Pairs via groupBy(bucket) + in-bucket expansion, NOT a self-join:
+    a self-join would recompute the sketch pipeline for each side
+    (Spark does not share subplans), doubling the dominant cost.  This
+    shuffles block entries once (the same exchange the join would
+    need).  A pair agreeing on k blocks appears in k buckets; instead
+    of a dropDuplicates exchange it is kept only in its FIRST matching
+    block — computable locally because both sketches are in the row.
+    Hot buckets are inherently quadratic in either formulation;
+    ``max_bucket`` drops buckets larger than the cap from pairing."""
+    grp = list(group_cols)
+    payload = [c for c in new.columns if c not in grp]
+    fit = F.size("ms") > 1
+    if index is not None:
+        new = index.withColumn("is_new", F.lit(False)).unionByName(
+            new.withColumn("is_new", F.lit(True))
+        )
+        payload.append("is_new")
+        fit = fit & F.expr("exists(ms, m -> m.is_new)")
+    if max_bucket is not None:
+        fit = fit & (F.size("ms") <= max_bucket)
+    structs = ", ".join(
+        f"named_struct('blk', {i}, 'key', {k})" for i, k in enumerate(keys)
+    )
+    cols = new.columns
+    buckets = (
+        new.select(*cols, F.expr(f"explode(array({structs}))").alias("e"))
+        .select(*cols, "e.blk", "e.key")
+        .groupBy("blk", "key", *grp)
+        .agg(F.collect_list(F.struct(*payload)).alias("ms"))
+        .filter(fit)
+    )
+    # upper-triangle expansion (posexplode + slice): each unordered pair
+    # once, half the rows, no < filter
+    pairs = (
+        buckets.select("blk", "ms", F.posexplode("ms").alias("p", "m1"))
+        .select("blk", "m1",
+                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
+    )
+    if index is not None:
+        pairs = pairs.filter(F.expr("m1.is_new OR m2.is_new"))
+    last = len(keys) - 1
+    first_block_sql = (
+        "CASE "
+        + " ".join(f"WHEN {block_eq(i)} THEN {i}" for i in range(last))
+        + f" ELSE {last} END"
+    )
+    return (
+        pairs.filter(F.expr(f"blk = ({first_block_sql})"))
+        .selectExpr("least(m1.id, m2.id) AS id_a", "greatest(m1.id, m2.id) AS id_b", score)
+        .filter(keep)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -378,167 +460,52 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
+    index_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup candidate pairs, verified by estimated
     Jaccard (signature agreement rate) ≥ threshold.
 
     Banding: split the signature into `bands` bands of r rows; docs
     agreeing on ALL rows of any band land in the same bucket →
-    candidates come from a groupBy on (band, band-hash), linear scale.
+    candidates come from a groupBy on (band, band key), linear scale.
+
+    ``index_sigs`` is a persisted corpus signature index (id_col, sig),
+    a prior `minhash_signatures` output.  With it, `df` is a NEW shard
+    (the daily-ingest pattern — at 100 TB you never re-sketch the
+    corpus to admit a day's data): signatures are computed only for
+    `df`, and the pairs returned are the full-corpus pairs that touch
+    at least one shard doc (asserted in tests).  The index side
+    contributes only a band-explode of its constant-size signatures —
+    no text scan, no gram hashing.  None (cold start) pairs `df` with
+    itself.
     """
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
+    r = num_hashes // bands
     sigs = minhash_signatures(df, num_hashes, shingle_n, text_col, id_col)
-    # bucket key = struct of the band's signature values — exact
-    # equality (no hash-collision false pairs), no md5 or key-string
-    # materialization.  Built as one SQL string (see minhash_signatures
-    # on py4j construction cost).
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bucket', named_struct({ks}))".format(
-            b=b,
-            ks=", ".join(
-                f"'k{r}', sig[{b * rows_per_band + r}]" for r in range(rows_per_band)
-            ),
-        )
+    index = None if index_sigs is None else index_sigs.selectExpr(f"{id_col} AS id", "sig")
+    # band key = struct of the band's signature values — exact equality
+    # (no hash-collision false pairs), no md5 or key-string
+    # materialization.  Built as SQL strings (see minhash_signatures on
+    # py4j construction cost).
+    keys = [
+        "named_struct({})".format(", ".join(f"'k{j}', sig[{b * r + j}]" for j in range(r)))
         for b in range(bands)
-    )
-    band_entries = sigs.select(
-        "id", "sig", F.expr(f"explode(array({band_structs}))").alias("bb")
-    ).select("id", "sig", "bb.band", "bb.bucket")
-    # Pairs via groupBy(bucket) + in-bucket expansion, NOT a self-join:
-    # a self-join would recompute the whole scan→gram→sig pipeline for
-    # each side (Spark does not share subplans), doubling the dominant
-    # cost.  This shuffles band entries once (the same exchange the
-    # join would need) and computes signatures once.  Hot buckets are
-    # inherently quadratic in either formulation.
-    buckets = (
-        band_entries.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct("id", "sig")).alias("ms"))
-        .filter(F.size("ms") > 1)
-    )
-    # upper-triangle expansion (posexplode + slice): each unordered pair
-    # once, half the rows, no < filter
-    expanded = (
-        buckets.select("band", "ms", F.posexplode("ms").alias("p", "m1"))
-        .select("band", "m1",
-                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
-    )
+    ]
+
+    def band_eq(b: int) -> str:
+        return " AND ".join(f"m1.sig[{b * r + j}] = m2.sig[{b * r + j}]" for j in range(r))
+
     # flat positional sum instead of a zip_with/aggregate fold: HOF
     # lambdas are interpreted per element; 16 unrolled comparisons stay
     # in codegen
-    matches_sql = " + ".join(
+    matches = " + ".join(
         f"(CASE WHEN m1.sig[{i}] = m2.sig[{i}] THEN 1 ELSE 0 END)"
         for i in range(num_hashes)
     )
-
-    # A pair colliding in k bands appears in k buckets; instead of a
-    # dropDuplicates exchange, keep the pair only in its FIRST matching
-    # band — computable locally because both signatures are in the row.
-    # One less shuffle on the critical path.
-    def band_match(bnd: int) -> str:
-        return " AND ".join(
-            f"m1.sig[{bnd * rows_per_band + r}] = m2.sig[{bnd * rows_per_band + r}]"
-            for r in range(rows_per_band)
-        )
-
-    first_band_sql = (
-        "CASE "
-        + " ".join(f"WHEN {band_match(b)} THEN {b}" for b in range(bands - 1))
-        + f" ELSE {bands - 1} END"
-    )
-    return (
-        expanded.filter(F.expr(f"band = ({first_band_sql})"))
-        .selectExpr(
-            "least(m1.id, m2.id) AS id_a",
-            "greatest(m1.id, m2.id) AS id_b",
-            f"round(({matches_sql}) / {float(num_hashes)}D, 6) AS est_jaccard",
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-
-
-def minhash_lsh_pairs_incremental(
-    new_df: DataFrame,
-    index_sigs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Incremental near-dup: check a NEW shard against a persisted
-    corpus signature index (the daily-ingest pattern — at 100 TB you
-    never re-sketch the corpus to admit a day's data).
-
-    ``index_sigs`` is a prior `minhash_signatures` output (id, sig),
-    read from storage; signatures are computed only for ``new_df``.
-    Returns candidate pairs (est_jaccard ≥ threshold) that involve at
-    least one new document — both new↔index and new↔new — with the
-    same banding/verification semantics as `minhash_lsh_pairs`, so
-    incremental(new) ≡ full-corpus pairs restricted to pairs touching
-    the new shard (asserted in tests).
-
-    Scale shape: the index side contributes only a band-explode of its
-    (constant-size) signatures — no text scan, no gram hashing.  Persist
-    the band entries as a table bucketed by (band, bucket) and even the
-    index-side shuffle disappears; the new side is a day's shard, orders
-    of magnitude smaller than the corpus.
-    """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    new_sigs = minhash_signatures(new_df, num_hashes, shingle_n, text_col, id_col)
-    sigs = (
-        index_sigs.selectExpr(f"{id_col} AS id", "sig", "false AS is_new")
-        .unionByName(new_sigs.selectExpr("id", "sig", "true AS is_new"))
-    )
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bucket', named_struct({ks}))".format(
-            b=b,
-            ks=", ".join(
-                f"'k{r}', sig[{b * rows_per_band + r}]" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    band_entries = sigs.select(
-        "id", "sig", "is_new", F.expr(f"explode(array({band_structs}))").alias("bb")
-    ).select("id", "sig", "is_new", "bb.band", "bb.bucket")
-    buckets = (
-        band_entries.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct("id", "sig", "is_new")).alias("ms"))
-        .filter((F.size("ms") > 1) & F.expr("exists(ms, m -> m.is_new)"))
-    )
-    expanded = (
-        buckets.select("band", "ms", F.posexplode("ms").alias("p", "m1"))
-        .select("band", "m1",
-                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
-        .filter(F.expr("m1.is_new OR m2.is_new"))
-    )
-    matches_sql = " + ".join(
-        f"(CASE WHEN m1.sig[{i}] = m2.sig[{i}] THEN 1 ELSE 0 END)"
-        for i in range(num_hashes)
-    )
-
-    def band_match(bnd: int) -> str:
-        return " AND ".join(
-            f"m1.sig[{bnd * rows_per_band + r}] = m2.sig[{bnd * rows_per_band + r}]"
-            for r in range(rows_per_band)
-        )
-
-    first_band_sql = (
-        "CASE "
-        + " ".join(f"WHEN {band_match(b)} THEN {b}" for b in range(bands - 1))
-        + f" ELSE {bands - 1} END"
-    )
-    return (
-        expanded.filter(F.expr(f"band = ({first_band_sql})"))
-        .selectExpr(
-            "least(m1.id, m2.id) AS id_a",
-            "greatest(m1.id, m2.id) AS id_b",
-            f"round(({matches_sql}) / {float(num_hashes)}D, 6) AS est_jaccard",
-        )
-        .filter(F.col("est_jaccard") >= threshold)
+    return _blocked_pairs(
+        sigs, index, keys, band_eq,
+        f"round(({matches}) / {float(num_hashes)}D, 6) AS est_jaccard",
+        F.col("est_jaccard") >= threshold,
     )
 
 
@@ -585,8 +552,38 @@ def simhash_from_hashes(hashes: Column | str) -> Column:
 def simhash64(col: Column, salt: str = "sh:") -> Column:
     """64-bit SimHash as a single column expression (convenience form —
     for bulk scans prefer token_hashes + an explode barrier +
-    simhash_from_hashes, as simhash_pairs does)."""
+    simhash_from_hashes, as simhash_fingerprints does)."""
     return simhash_from_hashes(token_hashes(col, salt))
+
+
+def _hamming_pairs(
+    new: DataFrame,
+    index: DataFrame | None,
+    bits: int,
+    blocks: int,
+    max_hamming: int,
+    group_cols: Sequence[str] = (),
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Pairs of `bits`-bit integer sketches (``id``, ``fp``) within
+    Hamming distance ≤ max_hamming, by pigeonhole blocking: split the
+    sketch into `blocks` disjoint slices of bits // blocks bits; a pair
+    within distance < blocks agrees on at least one slice (guaranteed
+    recall there, LSH-grade recall above), then exact popcount
+    verification.  `index`, `group_cols` and `max_bucket` as in
+    `_blocked_pairs`."""
+    width = bits // blocks
+    mask = (1 << width) - 1
+
+    def key(i: int, fp: str = "fp") -> str:
+        return f"shiftright({fp}, {i * width}) & {mask}"
+
+    return _blocked_pairs(
+        new, index, [key(i) for i in range(blocks)],
+        lambda i: f"({key(i, 'm1.fp')}) = ({key(i, 'm2.fp')})",
+        "bit_count(m1.fp ^ m2.fp) AS hamming", F.col("hamming") <= max_hamming,
+        group_cols, max_bucket,
+    )
 
 
 def simhash_pairs(
@@ -595,144 +592,31 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     blocks: int = 4,
+    index_fps: DataFrame | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs with Hamming distance ≤ max_hamming.
+    """SimHash near-dup pairs with Hamming distance ≤ max_hamming,
+    pigeonhole-blocked over `blocks` 60 // blocks-bit slices of the
+    fingerprint (`_hamming_pairs`).  Linear candidate generation.
 
-    Pigeonhole blocking: split the 60-bit fingerprint into `blocks`
-    15-bit blocks; any pair within distance < blocks must agree on at
-    least one block → candidates via equi-join per block (union), then
-    exact popcount verification.  Linear candidate generation."""
-    # Generate barrier: hash each token once, then fold 60 bit-votes
-    # over the materialized array (see simhash_from_hashes)
-    hashed = spread(df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(token_hashes(F.col(text_col)))).alias("_hashes"),
-    )
-    fps = hashed.select("id", simhash_from_hashes("_hashes").alias("fp"))
-    block_bits = 60 // blocks
-    mask_i = (1 << block_bits) - 1
-    block_structs = ", ".join(
-        f"named_struct('blk', {i}, 'key', shiftright(fp, {i * block_bits}) & {mask_i})"
-        for i in range(blocks)
-    )
-    entries = fps.select(
-        "id", "fp", F.expr(f"explode(array({block_structs}))").alias("e")
-    ).select("id", "fp", "e.blk", "e.key")
-    # groupBy(bucket) + in-bucket expansion instead of a self-join: the
-    # fingerprint pipeline (60 bit-votes per doc) is the dominant cost
-    # and a self-join would compute it once per side.  A pair agreeing
-    # on k blocks appears in k buckets; keeping it only in its FIRST
-    # matching block (computable locally — both fingerprints are in the
-    # row) replaces the dropDuplicates exchange with a filter.
-    buckets = (
-        entries.groupBy("blk", "key")
-        .agg(F.collect_list(F.struct("id", "fp")).alias("ms"))
-        .filter(F.size("ms") > 1)
-    )
-    # upper-triangle expansion (posexplode + slice): each unordered pair
-    # once, half the rows, no < filter
-    pairs = (
-        buckets.select("blk", "ms", F.posexplode("ms").alias("p", "m1"))
-        .select("blk", "m1",
-                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
-    )
-
-    def block_match(i: int) -> str:
-        return (
-            f"(shiftright(m1.fp, {i * block_bits}) & {mask_i})"
-            f" = (shiftright(m2.fp, {i * block_bits}) & {mask_i})"
-        )
-
-    first_block_sql = (
-        "CASE "
-        + " ".join(f"WHEN {block_match(i)} THEN {i}" for i in range(blocks - 1))
-        + f" ELSE {blocks - 1} END"
-    )
-    return (
-        pairs.filter(F.expr(f"blk = ({first_block_sql})"))
-        .selectExpr(
-            "least(m1.id, m2.id) AS id_a",
-            "greatest(m1.id, m2.id) AS id_b",
-            "bit_count(m1.fp ^ m2.fp) AS hamming",
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_pairs_incremental(
-    new_df: DataFrame,
-    index_fps: DataFrame,
-    max_hamming: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    blocks: int = 4,
-) -> DataFrame:
-    """Incremental SimHash near-dup: check a NEW shard against a
-    persisted fingerprint index (id, fp) — the SimHash counterpart of
-    `minhash_lsh_pairs_incremental`.  Fingerprints are computed only
-    for the new shard; the index side contributes one 8-byte value per
-    doc.  Returns pairs (hamming ≤ max_hamming) touching ≥1 new doc,
-    identical to full-corpus `simhash_pairs` restricted to the shard
-    (asserted in tests)."""
-    hashed = spread(new_df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(token_hashes(F.col(text_col)))).alias("_hashes"),
-    )
-    new_fps = hashed.select(
-        "id", simhash_from_hashes("_hashes").alias("fp"), F.lit(True).alias("is_new")
-    )
-    fps = (
-        index_fps.selectExpr(f"{id_col} AS id", "fp", "false AS is_new")
-        .unionByName(new_fps)
-    )
-    block_bits = 60 // blocks
-    mask_i = (1 << block_bits) - 1
-    block_structs = ", ".join(
-        f"named_struct('blk', {i}, 'key', shiftright(fp, {i * block_bits}) & {mask_i})"
-        for i in range(blocks)
-    )
-    entries = fps.select(
-        "id", "fp", "is_new", F.expr(f"explode(array({block_structs}))").alias("e")
-    ).select("id", "fp", "is_new", "e.blk", "e.key")
-    buckets = (
-        entries.groupBy("blk", "key")
-        .agg(F.collect_list(F.struct("id", "fp", "is_new")).alias("ms"))
-        .filter((F.size("ms") > 1) & F.expr("exists(ms, m -> m.is_new)"))
-    )
-    pairs = (
-        buckets.select("blk", "ms", F.posexplode("ms").alias("p", "m1"))
-        .select("blk", "m1",
-                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
-        .filter(F.expr("m1.is_new OR m2.is_new"))
-    )
-
-    def block_match(i: int) -> str:
-        return (
-            f"(shiftright(m1.fp, {i * block_bits}) & {mask_i})"
-            f" = (shiftright(m2.fp, {i * block_bits}) & {mask_i})"
-        )
-
-    first_block_sql = (
-        "CASE "
-        + " ".join(f"WHEN {block_match(i)} THEN {i}" for i in range(blocks - 1))
-        + f" ELSE {blocks - 1} END"
-    )
-    return (
-        pairs.filter(F.expr(f"blk = ({first_block_sql})"))
-        .selectExpr(
-            "least(m1.id, m2.id) AS id_a",
-            "greatest(m1.id, m2.id) AS id_b",
-            "bit_count(m1.fp ^ m2.fp) AS hamming",
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    ``index_fps`` is a persisted fingerprint index (id_col, fp), a
+    prior `simhash_fingerprints` output (8 bytes per doc).  With it,
+    `df` is a NEW shard: fingerprints are computed only for `df`, and
+    the pairs returned are the full-corpus pairs that touch at least
+    one shard doc (asserted in tests).  None (cold start) pairs `df`
+    with itself."""
+    fps = simhash_fingerprints(df, text_col, id_col).selectExpr(f"{id_col} AS id", "fp")
+    index = None if index_fps is None else index_fps.selectExpr(f"{id_col} AS id", "fp")
+    return _hamming_pairs(fps, index, 60, blocks, max_hamming)
 
 
 def simhash_fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, fp) fingerprint table for persistence — the index side of
-    `simhash_pairs_incremental` (8 bytes per doc on disk)."""
+    """(id_col, fp) SimHash fingerprint table — what `simhash_pairs`
+    blocks on, and the ``index_fps`` it takes when persisted (8 bytes
+    per doc on disk).  Generate barrier: hash each token once, then
+    fold 60 bit-votes over the materialized array (see
+    simhash_from_hashes)."""
     hashed = spread(df, id_col).select(
         F.col(id_col),
         F.explode(F.array(token_hashes(F.col(text_col)))).alias("_hashes"),

@@ -1681,15 +1681,17 @@ def phash_pairs(
     blocks: int = 4,
     type_col: str | None = None,
     max_bucket: int | None = 100_000,
+    index_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """Image near-dup pairs: Hamming distance ≤ max_hamming over 64-bit
     perceptual hashes, pigeonhole-blocked exactly like the text tier
     (dedup.simhash_pairs): split the hash into `blocks` 16-bit blocks;
     candidates share ≥1 block (guaranteed recall for hamming < blocks,
-    LSH-grade recall above), groupBy(bucket) + upper-triangle in-bucket
-    expansion, first-matching-block filter instead of a dropDuplicates
-    exchange, exact popcount verification.  Linear candidate
-    generation at corpus scale — never an all-pairs join.
+    LSH-grade recall above), groupBy(bucket) + upper-triangle
+    in-bucket expansion, first-matching-block filter instead of a
+    dropDuplicates exchange, exact popcount verification.  Linear
+    candidate generation at corpus scale — never an all-pairs join.
+    NULL hashes (undecodable assets) never pair.
 
     `type_col` (e.g. media_type for mixed phash/ahash/vhash corpora)
     joins the bucket key so hashes only pair within their own type —
@@ -1700,128 +1702,26 @@ def phash_pairs(
     pairing — the recall/cost escape hatch every blocked pair operator
     here carries (ngram max_gram_df, semdedup max_cluster_size); the
     in-bucket expansion is quadratic, so one degenerate bucket would
-    otherwise dominate the stage.  None disables the cap."""
-    block_bits = 64 // blocks
-    mask_i = (1 << block_bits) - 1
+    otherwise dominate the stage.  None disables the cap.
+
+    `index_hashes` (same columns) is a persisted hash index, for
+    rolling shard admission: `hashes` is then a NEW shard, and the
+    pairs returned are the full-corpus pairs that touch at least one
+    shard asset (asserted in tests and by the multimodal_pipeline
+    gate's 'phinc' rows) — new assets hash once (8 bytes/asset of index
+    growth), the corpus is never re-hashed.  None (cold start) pairs
+    `hashes` with itself."""
+    from .dedup import _hamming_pairs
+
     tcols = [type_col] if type_col else []
-    fps = hashes.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("fp"), *tcols
-    )
-    block_structs = ", ".join(
-        f"named_struct('blk', {i}, 'key', shiftright(fp, {i * block_bits}) & {mask_i})"
-        for i in range(blocks)
-    )
-    entries = fps.select(
-        "id", "fp", *tcols, F.expr(f"explode(array({block_structs}))").alias("e")
-    ).select("id", "fp", *tcols, "e.blk", "e.key")
-    buckets = (
-        entries.groupBy("blk", "key", *tcols)
-        .agg(F.collect_list(F.struct("id", "fp")).alias("ms"))
-        .filter(F.size("ms") > 1)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ms") <= max_bucket)
-    pairs = (
-        buckets.select("blk", "ms", F.posexplode("ms").alias("p", "m1"))
-        .select("blk", "m1",
-                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
-    )
 
-    def block_match(i: int) -> str:
-        return (
-            f"(shiftright(m1.fp, {i * block_bits}) & {mask_i})"
-            f" = (shiftright(m2.fp, {i * block_bits}) & {mask_i})"
+    def fps(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(hash_col).isNotNull()).select(
+            F.col(id_col).alias("id"), F.col(hash_col).alias("fp"), *tcols
         )
 
-    first_block_sql = (
-        "CASE "
-        + " ".join(f"WHEN {block_match(i)} THEN {i}" for i in range(blocks - 1))
-        + f" ELSE {blocks - 1} END"
-    )
-    return (
-        pairs.filter(F.expr(f"blk = ({first_block_sql})"))
-        .selectExpr(
-            "least(m1.id, m2.id) AS id_a",
-            "greatest(m1.id, m2.id) AS id_b",
-            "bit_count(m1.fp ^ m2.fp) AS hamming",
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def phash_pairs_incremental(
-    new_hashes: DataFrame,
-    index_hashes: DataFrame,
-    max_hamming: int = 10,
-    id_col: str = "asset_id",
-    hash_col: str = "phash",
-    blocks: int = 4,
-    type_col: str | None = None,
-    max_bucket: int | None = 100_000,
-) -> DataFrame:
-    """Incremental image near-dup: a NEW shard of perceptual hashes
-    against a persisted (asset_id, phash) index — the image counterpart
-    of dedup.simhash_pairs_incremental, for rolling shard admission:
-    new assets hash once (8 bytes/asset of index growth), the corpus
-    is never re-hashed.  Returns pairs touching ≥1 new asset, identical
-    to full-corpus `phash_pairs` restricted to the shard (asserted in
-    tests and at driver level by the gate's 'phinc' rows)."""
-    block_bits = 64 // blocks
-    mask_i = (1 << block_bits) - 1
-    tcols = [type_col] if type_col else []
-    fps = (
-        index_hashes.filter(F.col(hash_col).isNotNull())
-        .select(F.col(id_col).alias("id"), F.col(hash_col).alias("fp"), *tcols,
-                F.lit(False).alias("is_new"))
-        .unionByName(
-            new_hashes.filter(F.col(hash_col).isNotNull()).select(
-                F.col(id_col).alias("id"), F.col(hash_col).alias("fp"), *tcols,
-                F.lit(True).alias("is_new"),
-            )
-        )
-    )
-    block_structs = ", ".join(
-        f"named_struct('blk', {i}, 'key', shiftright(fp, {i * block_bits}) & {mask_i})"
-        for i in range(blocks)
-    )
-    entries = fps.select(
-        "id", "fp", "is_new", *tcols,
-        F.expr(f"explode(array({block_structs}))").alias("e"),
-    ).select("id", "fp", "is_new", *tcols, "e.blk", "e.key")
-    buckets = (
-        entries.groupBy("blk", "key", *tcols)
-        .agg(F.collect_list(F.struct("id", "fp", "is_new")).alias("ms"))
-        .filter((F.size("ms") > 1) & F.expr("exists(ms, m -> m.is_new)"))
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ms") <= max_bucket)
-    pairs = (
-        buckets.select("blk", "ms", F.posexplode("ms").alias("p", "m1"))
-        .select("blk", "m1",
-                F.explode(F.slice("ms", F.col("p") + 2, F.size("ms"))).alias("m2"))
-        .filter(F.expr("m1.is_new OR m2.is_new"))
-    )
-
-    def block_match(i: int) -> str:
-        return (
-            f"(shiftright(m1.fp, {i * block_bits}) & {mask_i})"
-            f" = (shiftright(m2.fp, {i * block_bits}) & {mask_i})"
-        )
-
-    first_block_sql = (
-        "CASE "
-        + " ".join(f"WHEN {block_match(i)} THEN {i}" for i in range(blocks - 1))
-        + f" ELSE {blocks - 1} END"
-    )
-    return (
-        pairs.filter(F.expr(f"blk = ({first_block_sql})"))
-        .selectExpr(
-            "least(m1.id, m2.id) AS id_a",
-            "greatest(m1.id, m2.id) AS id_b",
-            "bit_count(m1.fp ^ m2.fp) AS hamming",
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    index = None if index_hashes is None else fps(index_hashes)
+    return _hamming_pairs(fps(hashes), index, 64, blocks, max_hamming, tcols, max_bucket)
 
 
 def dedup_assets_perceptual(
@@ -1851,7 +1751,8 @@ def dedup_assets_perceptual(
 # Robust to volume scaling (both features are level-relative) and to
 # resampling (windows divide the CLIP, zero-crossings normalize per
 # second); discriminative across unrelated clips.  Pairs reuse
-# phash_pairs / phash_pairs_incremental verbatim (hash_col="ahash").
+# phash_pairs verbatim (hash_col="ahash"; with index_hashes for
+# rolling admission).
 
 AHASH_WINDOWS = 32  # 32 windows × 2 features = 64 bits
 
@@ -1909,7 +1810,7 @@ def ahash_assets(
     """Fingerprint every audio asset via mapInPandas → (asset_id,
     ahash, ahash_error) — same quarantine convention as phash_assets;
     feed the result to phash_pairs(hash_col='ahash') for near-dup
-    pairs or phash_pairs_incremental for rolling admission."""
+    pairs, with index_hashes for rolling admission."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1997,8 +1898,8 @@ def vhash_assets(
 ) -> DataFrame:
     """Fingerprint every video asset via mapInPandas → (asset_id,
     vhash, vhash_error); quarantine convention and pair machinery as
-    the image/audio tiers (phash_pairs / phash_pairs_incremental with
-    hash_col='vhash')."""
+    the image/audio tiers (phash_pairs with hash_col='vhash', and
+    index_hashes for rolling admission)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -2135,13 +2036,9 @@ def admit_assets(
         shard, id_col=id_col, type_col=type_col, payload_col=payload_col
     ).localCheckpoint(eager=True)
     good = fps.filter(F.col("fp").isNotNull())
-    if index_fps is None:
-        index = good.filter(F.lit(False)).select("asset_id", "media_type", "fp")
-    else:
-        index = index_fps.select("asset_id", "media_type", "fp")
-    pairs = phash_pairs_incremental(
-        good, index, max_hamming=max_hamming,
-        id_col="asset_id", hash_col="fp", type_col="media_type",
+    pairs = phash_pairs(
+        good, max_hamming=max_hamming, id_col="asset_id", hash_col="fp",
+        type_col="media_type", index_hashes=index_fps,
     )
     new_ids = good.select(F.col("asset_id").alias("nid"))
     marked = (

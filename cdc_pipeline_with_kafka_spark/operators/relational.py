@@ -789,7 +789,7 @@ def record_linkage_score(
 
     Blocking is deliberately the caller's job: the engine already
     ships the blockers (prefix_jaccard_pairs, minhash_lsh_pairs,
-    phash/simhash band matches, plain key joins) — this operator
+    simhash_pairs, phash_pairs, plain key joins) — this operator
     never sees the n² space, only the candidate pairs.
 
     Input: one row per candidate pair with `<field>_a` / `<field>_b`

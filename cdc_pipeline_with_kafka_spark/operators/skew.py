@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import data_files
+
 
 def salted_count(
     df: DataFrame, key_cols: list[str], salt_buckets: int = 16, count_col: str = "cnt"
@@ -142,23 +144,7 @@ def small_files_report(
     when more than half the files are under half the target,
     'healthy' otherwise, with the suggested coalesce factor.
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    root = fs.makeQualified(jpath).toString().rstrip("/") + "/"
-    it = fs.listFiles(jpath, True)  # recursive; metadata only
-    listed = []
-    while it.hasNext():
-        st = it.next()
-        full = st.getPath().toString()
-        # hidden check on EVERY component under the root, not just the
-        # leaf: Spark ignores _temporary/... and .tmp dirs when reading,
-        # so counting their part files (e.g. from an aborted write)
-        # would skew the audit against what a scan actually sees
-        rel = full[len(root):] if full.startswith(root) else full
-        if any(c.startswith(("_", ".")) for c in rel.split("/") if c):
-            continue  # _SUCCESS, checksums, _temporary/.tmp contents
-        listed.append((full, int(st.getLen())))
+    sizes = sorted(size for _, _, size in data_files(spark, path))
     row_counts = {}
     if include_row_counts:
         counted = (
@@ -169,7 +155,6 @@ def small_files_report(
             .collect()
         )
         row_counts = {r["fp"]: int(r["n_rows"]) for r in counted}
-    sizes = sorted(sz for _, sz in listed)
     n = len(sizes)
     total = sum(sizes)
     small = sum(1 for s in sizes if s < target_bytes // 2)

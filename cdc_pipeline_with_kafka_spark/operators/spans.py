@@ -722,7 +722,7 @@ def remove_corpus_spans(
     stream against the index (hash-distributed equi-join; the shard
     side is the small one), then the standard islands merge + in-row
     rewrite.  Corpus text is never touched — the index rows are the
-    whole corpus footprint, mirroring minhash_lsh_pairs_incremental's
+    whole corpus footprint, mirroring minhash_lsh_pairs' index_sigs
     contract.  Output: shard columns + (cleaned_text,
     n_removed_tokens, n_spans)."""
     occ = _window_occurrences(shard, k, text_col, id_col)

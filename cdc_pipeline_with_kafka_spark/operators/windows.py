@@ -25,11 +25,11 @@ from pyspark.sql.window import Window
 def windowed_count(
     df: DataFrame, ts_col: str, key_col: str, duration: str, slide: str | None = None
 ) -> DataFrame:
-    """A1/A4: tumbling (or sliding) window count per key
-    (AlertTopology.java:86-91).  Output: window_start, window_end, key, cnt."""
-    win = F.window(F.col(ts_col), duration, slide) if slide else F.window(F.col(ts_col), duration)
+    """A1/A4/T2: tumbling (or, with `slide`, sliding) window count per
+    key (AlertTopology.java:86-91).  Works in batch and streaming.
+    Output: window_start, window_end, key, cnt."""
     return (
-        df.groupBy(win.alias("w"), F.col(key_col))
+        df.groupBy(F.window(F.col(ts_col), duration, slide).alias("w"), F.col(key_col))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.col("w.start").alias("window_start"),

@@ -2925,10 +2925,8 @@ FROM events GROUP BY 1, 2, 3
 def a4_sliding_window(spark, sf_dir):
     """A4/T2: sliding-window counts (30-min window, 10-min slide) —
     each event contributes to 3 overlapping windows."""
-    from .streaming.decay import sliding_window_counts
-
     ev = _t(spark, sf_dir, "events")
-    return sliding_window_counts(ev, "ts", "event_type", size="30 minutes", slide="10 minutes").select(
+    return windows.windowed_count(ev, "ts", "event_type", "30 minutes", "10 minutes").select(
         "window_start", "event_type", "cnt"
     )
 
@@ -6380,7 +6378,7 @@ def dedup_simhash(spark, sf_dir):
     index = dedup.simhash_fingerprints(docs.filter(F.col("doc_id") < cutoff))
     shard = docs.filter(F.col("doc_id") >= cutoff)
     inc = _suite_rows(
-        dedup.simhash_pairs_incremental(shard, index, max_hamming=12), "inc",
+        dedup.simhash_pairs(shard, max_hamming=12, index_fps=index), "inc",
         pair_key, v_num=F.col("hamming"),
     )
     return full.unionByName(inc)
@@ -6907,10 +6905,9 @@ def multimodal_pipeline(spark, sf_dir):
     # touching the shard — the rolling-admission contract, held at
     # driver level like the text tier's simhash/minhash 'inc' rows
     cutoff = _table_count(spark, sf_dir, "documents")
-    phinc = multimodal.phash_pairs_incremental(
-        hashes.filter(F.col("asset_id") >= cutoff),
-        hashes.filter(F.col("asset_id") < cutoff),
-        max_hamming=6,
+    phinc = multimodal.phash_pairs(
+        hashes.filter(F.col("asset_id") >= cutoff), max_hamming=6,
+        index_hashes=hashes.filter(F.col("asset_id") < cutoff),
     ).select(
         F.lit("phinc").alias("suite_case"),
         F.col("id_a").cast("long").alias("asset_id"),
@@ -8628,9 +8625,9 @@ def dedup_minhash_suite(spark, sf_dir):
         "id AS doc_id", "sig"
     )
     inc = _suite_rows(
-        dedup.minhash_lsh_pairs_incremental(
-            docs.filter(F.col("doc_id") >= cutoff), index,
-            threshold=0.5, num_hashes=16, bands=8, shingle_n=3,
+        dedup.minhash_lsh_pairs(
+            docs.filter(F.col("doc_id") >= cutoff),
+            threshold=0.5, num_hashes=16, bands=8, shingle_n=3, index_sigs=index,
         ),
         "inc",
         F.concat_ws("|", F.col("id_a").cast("string"), F.col("id_b").cast("string")),

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import data_files
+
 
 def write_bucketed(
     df: DataFrame,
@@ -173,24 +175,39 @@ def compact_partition(
     Streaming ingestion (micro-batches, maxRecordsPerFile caps) leaves
     partitions as many small files; scans then pay per-file open/footer
     cost.  This job reads ONLY the target directory (no full-table
-    scan), repartitions, writes beside it, and swaps directories.  The
-    swap is two renames, a non-atomic window like the partition
-    delete-then-rename of merge_upsert's dynamic overwrite; on a
-    transactional table format (Delta/Iceberg) OPTIMIZE replaces this.  Returns the row count of the compacted
-    partition (sanity handle for the caller).
+    scan), repartitions, writes the hidden tmp ``.<col>=<value>._compact``
+    beside it (partition discovery skips it, so no read ever sees a
+    staging dir as a partition value), deletes the old directory and
+    renames the tmp in — `streaming.store.compact`'s order and crash
+    rule: a tmp holding ``_SUCCESS`` is the partition's complete
+    rewrite, so the next call first finishes its swap; an unfinished
+    tmp is dropped (the old directory was not touched yet).  Between
+    the delete and the rename the partition reads empty, like the
+    partition delete-then-rename of merge_upsert's dynamic overwrite;
+    on a transactional table format (Delta/Iceberg) OPTIMIZE replaces
+    this.  Local filesystem only.  Returns the row count of the
+    compacted partition (sanity handle for the caller).
     """
     import os
     import shutil
 
-    part_dir = os.path.join(path, f"{partition_col}={partition_value}")
-    tmp_dir = part_dir + "._compact_tmp"
+    name = f"{partition_col}={partition_value}"
+    part_dir = os.path.join(path, name)
+    tmp_dir = os.path.join(path, f".{name}._compact")
+
+    def finish() -> None:
+        if os.path.exists(os.path.join(tmp_dir, "_SUCCESS")):
+            if os.path.exists(part_dir):
+                shutil.rmtree(part_dir)
+            os.rename(tmp_dir, part_dir)
+        elif os.path.exists(tmp_dir):
+            shutil.rmtree(tmp_dir)
+
+    finish()
     df = spark.read.parquet(part_dir)
     n = df.count()
     df.repartition(target_files).write.mode("overwrite").parquet(tmp_dir)
-    old_dir = part_dir + "._compact_old"
-    os.rename(part_dir, old_dir)
-    os.rename(tmp_dir, part_dir)
-    shutil.rmtree(old_dir)
+    finish()
     return n
 
 
@@ -202,47 +219,32 @@ def lake_report(
 ) -> DataFrame:
     """Small-file / skew report over a lake table directory — the
     trigger signal `compact_partition` acts on: one row per top-level
-    partition directory with (partition, n_files, total_bytes,
-    median_file_bytes, max_file_bytes, needs_compaction).
+    partition directory holding data files, with (partition, n_files,
+    total_bytes, median_file_bytes, max_file_bytes, needs_compaction).
 
     needs_compaction flags a partition whose file count exceeds
     `max_files` OR whose median data file is under `small_file_mb` —
     the two shapes streaming ingestion leaves behind (per-micro-batch
-    files; maxRecordsPerFile splits).  Uses the Hadoop FileSystem API
-    (works on any scheme Spark can read); the listing is driver-side
-    and proportional to FILE COUNT, not data size — at extreme file
-    counts (the problem being diagnosed!) run it per partition or use
-    the store's inventory listing.  Loose files at the table root
-    report under partition '.'."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    files; maxRecordsPerFile splits).  Files are listed by
+    `util.data_files` (Hadoop FileSystem API, any scheme; hidden
+    components at any depth — an aborted write's _temporary/ attempts,
+    staging dirs — are skipped, as a scan skips them); the listing is
+    driver-side and proportional to FILE COUNT, not data size — at
+    extreme file counts (the problem being diagnosed!) run it per
+    partition or use the store's inventory listing.  Loose files at
+    the table root report under partition '.'."""
     groups: dict[str, list[int]] = {}
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isFile():
-            if not name.startswith(("_", ".")):
-                groups.setdefault(".", []).append(st.getLen())
-            continue
-        sizes: list[int] = []
-        it = fs.listFiles(st.getPath(), True)
-        while it.hasNext():
-            f = it.next()
-            base = f.getPath().getName()
-            if not base.startswith(("_", ".")):
-                sizes.append(f.getLen())
-        groups[name] = sizes
+    for _, rel, size in data_files(spark, path):
+        top, sub, _ = rel.partition("/")
+        groups.setdefault(top if sub else ".", []).append(size)
     rows = []
     for part in sorted(groups):
         sizes = sorted(groups[part])
-        n = len(sizes)
-        total = sum(sizes)
-        med = sizes[n // 2] if n else 0
-        mx = sizes[-1] if n else 0
+        n, med = len(sizes), sizes[len(sizes) // 2]
         rows.append(
             (
-                part, n, total, med, mx,
-                bool(n and (n > max_files or med < small_file_mb * 1024 * 1024)),
+                part, n, sum(sizes), med, sizes[-1],
+                n > max_files or med < small_file_mb * 1024 * 1024,
             )
         )
     return spark.createDataFrame(

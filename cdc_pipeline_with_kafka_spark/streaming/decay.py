@@ -8,13 +8,12 @@ decrements the rest (realtime_keyword_aggregator.py:94-161).  The
 reference's own comment (:99-102) admits this decay is an
 approximation of a true sliding window.
 
-We provide BOTH:
-- the honest Spark formulation — a true sliding window
-  (`sliding_window_counts`), the documented-deviation default; and
-- exact decay parity via ``applyInPandasWithState``
-  (`decayed_counts`): keyed per-keyword state holding (count,
-  last_update), halving on the same age schedule.  This is the
-  template for any custom stateful operator Spark lacks.
+This module provides exact decay parity via ``applyInPandasWithState``
+(`decayed_counts`): keyed per-keyword state holding (count,
+last_update), halving on the same age schedule.  This is the template
+for any custom stateful operator Spark lacks.  The honest Spark
+formulation — a true sliding window, the documented-deviation
+default — is `operators.windows.windowed_count` with a `slide`.
 """
 
 from __future__ import annotations
@@ -36,23 +35,6 @@ from pyspark.sql.types import (
 
 DECAY_FACTOR = 0.5  # halve (realtime_keyword_aggregator.py:107)
 DECAY_FLOOR = 1  # counts ≤1 are dropped after decay (:109-112)
-
-
-def sliding_window_counts(
-    df: DataFrame, ts_col: str, key_col: str, size: str = "30 minutes", slide: str = "5 minutes"
-) -> DataFrame:
-    """True sliding-window counts — the recency semantics the decay
-    hack approximates (T2).  Works in batch and streaming."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), size, slide).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            F.col(key_col),
-            F.col("cnt"),
-        )
-    )
 
 
 _STATE_SCHEMA = StructType(

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as textfn
+from ..operators import alerts, windows
 from ..sources import cdc
 from . import store
 
@@ -71,14 +72,8 @@ def keyword_stream(articles: DataFrame) -> DataFrame:
 def trending_query(keywords: DataFrame, window: str = "30 minutes", min_mentions: int = 10) -> DataFrame:
     """A1 + W11: tumbling-window keyword counts ≥ threshold — the
     trending-alert stream (AlertTopology branch 2)."""
-    counts = keywords.groupBy(
-        F.window("ts", window).alias("w"), F.col("keyword")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    return counts.filter(F.col("cnt") >= min_mentions).select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        "keyword",
-        "cnt",
+    return alerts.trending_alerts(
+        windows.windowed_count(keywords, "ts", "keyword", window), min_mentions
     )
 
 
@@ -93,8 +88,6 @@ def breaking_query(articles: DataFrame, window: str = "5 minutes") -> DataFrame:
     re-windows via window_time and merges sketches with hll_union_agg —
     distinct-source counting survives the two-level rollup without a
     stream-stream join."""
-    from ..operators import alerts, windows
-
     if not articles.isStreaming:
         stats = windows.breaking_word_stats(articles, "ts", "category", "title", "source", window)
         return alerts.breaking_alerts(stats)
@@ -197,17 +190,10 @@ def wordcloud_query(keywords: DataFrame, window: str = "30 minutes", top_k: int 
     for a 60-second-trigger sink (main.py:437-474).  In streaming the
     top-k cut runs downstream of the sink (ranking isn't stateful-
     streaming-safe); in batch it applies directly."""
-    counts = keywords.groupBy(
-        F.window("ts", window).alias("w"), F.col("keyword")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    flat = counts.select(
-        F.col("w.start").alias("window_start"), "keyword", "cnt"
-    )
+    flat = windows.windowed_count(keywords, "ts", "keyword", window).drop("window_end")
     if keywords.isStreaming:
         return flat
-    from ..operators import windows as win_ops
-
-    return win_ops.topk_per_window(flat, top_k, ["window_start"]).drop("rnk")
+    return windows.topk_per_window(flat, top_k, ["window_start"]).drop("rnk")
 
 
 def stream_stream_join(
@@ -1353,8 +1339,6 @@ def make_attribution_sink(
     concatenated stream is pytest-pinned (conversions are
     batch-local, so the union of per-batch rows IS the one-shot
     output)."""
-    from ..operators.windows import multi_touch_attribution
-
     keys = list(key_cols)
     lb_us = int(lookback_minutes) * 60_000_000
 
@@ -1367,7 +1351,7 @@ def make_attribution_sink(
             batch_slim if prior is None
             else prior.select(*cols).unionByName(batch_slim)
         )
-        attributed = multi_touch_attribution(
+        attributed = windows.multi_touch_attribution(
             full, keys, ts_col, id_col, type_col,
             conversion_type, list(touch_types), lookback_minutes, model,
         )

@@ -66,6 +66,29 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target)
 
 
+def data_files(spark, path: str) -> list[tuple[str, str, int]]:
+    """(full path, path relative to `path`, bytes) of every data file
+    under the table directory `path` — a recursive Hadoop FileSystem
+    listing (metadata only, any scheme Spark can read).  A file with a
+    hidden component (leading ``_`` or ``.``) at ANY depth below the
+    root is skipped, not just a hidden leaf: Spark ignores _SUCCESS,
+    checksums and the contents of _temporary/ and .tmp dirs when
+    reading, so counting the part files of an aborted write would skew
+    a file audit against what a scan actually sees."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = fs.makeQualified(jpath).toString().rstrip("/") + "/"
+    it = fs.listFiles(jpath, True)
+    out = []
+    while it.hasNext():
+        st = it.next()
+        full = st.getPath().toString()
+        rel = full[len(root):] if full.startswith(root) else full
+        if not any(c.startswith(("_", ".")) for c in rel.split("/") if c):
+            out.append((full, rel, int(st.getLen())))
+    return out
+
+
 def plan_facts(df: DataFrame) -> dict:
     """Mechanical facts about a DataFrame's EXECUTED physical plan —
     the engine's plan-pinning discipline (PLANS.md) as a reusable

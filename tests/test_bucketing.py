@@ -187,6 +187,17 @@ def test_lake_report_flags_small_file_partitions(spark, tmp_path):
     )
     df.filter("p = 0").repartition(20).write.parquet(f"{path}/p=0")
     df.filter("p = 1").coalesce(1).write.parquet(f"{path}/p=1")
+    # an aborted write's attempt files, inside a partition and at the
+    # root: a scan ignores them, so the report must too
+    import glob
+    import os
+    import shutil
+
+    part = glob.glob(f"{path}/p=1/part-*")[0]
+    for attempt in (f"{path}/p=1/_temporary/0/_temporary/attempt_0",
+                    f"{path}/_temporary/0/_temporary/attempt_0"):
+        os.makedirs(attempt)
+        shutil.copy(part, attempt)
     rep = {
         r["partition"]: r
         for r in bucketing.lake_report(
@@ -195,6 +206,7 @@ def test_lake_report_flags_small_file_partitions(spark, tmp_path):
     }
     assert rep["p=0"]["n_files"] == 20 and rep["p=0"]["needs_compaction"]
     assert rep["p=1"]["n_files"] == 1
+    assert sorted(rep) == ["p=0", "p=1"]
     assert rep["p=0"]["total_bytes"] > 0
     n = bucketing.compact_partition(spark, path, "p", 0, target_files=1)
     assert n == 1000
@@ -205,3 +217,51 @@ def test_lake_report_flags_small_file_partitions(spark, tmp_path):
         ).collect()
     }
     assert rep2["p=0"]["n_files"] == 1 and not rep2["p=0"]["needs_compaction"]
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("state", ["tmp_incomplete", "tmp_complete", "old_deleted"])
+def test_compact_partition_crash_restores_partition(spark, tmp_path, monkeypatch, state):
+    """A compact_partition that crashes mid-swap never shows its staging
+    dirs as partition values, and the next call restores the
+    partition's rows: a crash before the old dir is deleted, with the
+    rewrite unfinished ("tmp_incomplete") or complete ("tmp_complete"),
+    or after the delete, before the rename ("old_deleted")."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "lake")
+    spark.range(40).select(F.col("id"), (F.col("id") % 2).alias("p")).repartition(
+        4
+    ).write.partitionBy("p").parquet(path)
+
+    def rows():
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    want = rows()
+
+    def crash(*args, **kwargs):
+        raise _Crash(args)
+
+    if state == "old_deleted":
+        monkeypatch.setattr(os, "rename", crash)
+    else:
+        monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(_Crash):
+        bucketing.compact_partition(spark, path, "p", 0)
+    monkeypatch.undo()
+    if state == "tmp_incomplete":
+        for d in os.listdir(path):
+            if "_compact" in d and os.path.exists(os.path.join(path, d, "_SUCCESS")):
+                os.remove(os.path.join(path, d, "_SUCCESS"))
+                os.mkdir(os.path.join(path, d, "_temporary"))
+    values = {r["p"] for r in spark.read.parquet(path).select("p").distinct().collect()}
+    assert not [v for v in values if "_compact" in str(v)]
+    assert rows() == [r for r in want if state != "old_deleted" or r[1] != 0]
+    assert bucketing.compact_partition(spark, path, "p", 0) == 20
+    assert rows() == want
+    assert len([f for f in os.listdir(f"{path}/p=0") if f.startswith("part-")]) == 1
+    assert not [d for d in os.listdir(path) if "_compact" in d]

@@ -8,6 +8,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from cdc_pipeline_with_kafka_spark.operators import windows
 from cdc_pipeline_with_kafka_spark.streaming import decay
 
 
@@ -15,7 +16,7 @@ def test_sliding_window_counts_batch(spark):
     base = datetime(2024, 3, 1)
     rows = [("kw", base + timedelta(minutes=m)) for m in range(0, 60, 5)]
     df = spark.createDataFrame(rows, "keyword string, ts timestamp_ntz")
-    out = decay.sliding_window_counts(df, "ts", "keyword", size="30 minutes", slide="10 minutes")
+    out = windows.windowed_count(df, "ts", "keyword", "30 minutes", "10 minutes")
     got = {
         (r["window_start"].isoformat(), r["cnt"]) for r in out.collect()
     }

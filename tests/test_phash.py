@@ -169,10 +169,9 @@ def test_phash_incremental_equals_full_at_boundary_cutoffs(spark, cut_frac):
     cutoff = cut_frac  # asset ids are 0..29
     inc = {
         (r.id_a, r.id_b, r.hamming)
-        for r in mm.phash_pairs_incremental(
-            hashes.filter(F.col("asset_id") >= cutoff),
-            hashes.filter(F.col("asset_id") < cutoff),
-            max_hamming=6,
+        for r in mm.phash_pairs(
+            hashes.filter(F.col("asset_id") >= cutoff), max_hamming=6,
+            index_hashes=hashes.filter(F.col("asset_id") < cutoff),
         ).collect()
     }
     want = {(a, b, h) for (a, b, h) in full if b >= cutoff}

@@ -4,10 +4,12 @@ broadcast dims, partial aggregation, top-k pushdowns."""
 
 from __future__ import annotations
 
+import pytest
+
 from cdc_pipeline_with_kafka_spark import plans
 from cdc_pipeline_with_kafka_spark import queries as q
 
-from .conftest import SF_CORRECT
+from .conftest import SF_CORRECT, SF_SMOKE
 
 
 def test_scan_pushdown_and_pruning(spark):
@@ -198,23 +200,43 @@ def test_tfidf_window_form_exchange_budget(spark):
     assert p.count("Scan parquet") <= 2
 
 
-def test_phash_pairs_no_join_linear_candidates(spark):
-    """Image near-dup candidates come from groupBy(bucket) + in-bucket
-    expansion — NEVER a self-join or cartesian: the linear-candidate
-    contract that survives a 100 TB image corpus."""
+@pytest.mark.parametrize("indexed", [False, True], ids=["full", "index"])
+@pytest.mark.parametrize("family", ["minhash", "simhash", "phash"])
+def test_pair_search_no_join_linear_candidates(spark, family, indexed):
+    """Near-dup candidates of every blocked pair family, cold start or
+    against a persisted index, come from groupBy(bucket) + in-bucket
+    expansion with a map-side partial aggregate — NEVER a join or a
+    cartesian product: the linear-candidate contract that survives a
+    100 TB corpus."""
     import hashlib
 
+    from pyspark.sql import functions as F
+
+    from cdc_pipeline_with_kafka_spark.operators import dedup
     from cdc_pipeline_with_kafka_spark.operators import multimodal as mm
 
-    rows = [
-        (i, b"P6\n4 4\n255\n" + hashlib.sha256(str(i).encode()).digest()[:48])
-        for i in range(8)
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    out = mm.phash_pairs(mm.phash_assets(df), max_hamming=6)
+    if family == "phash":
+        rows = [
+            (i, b"P6\n4 4\n255\n" + hashlib.sha256(str(i).encode()).digest()[:48])
+            for i in range(8)
+        ]
+        hashes = mm.phash_assets(spark.createDataFrame(rows, "asset_id long, payload binary"))
+        new = hashes.filter(F.col("asset_id") >= 4) if indexed else hashes
+        index = hashes.filter(F.col("asset_id") < 4) if indexed else None
+        out = mm.phash_pairs(new, max_hamming=6, index_hashes=index)
+    else:
+        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
+        new = docs.filter(F.col("doc_id") % 2 == 1) if indexed else docs
+        old = docs.filter(F.col("doc_id") % 2 == 0)
+        if family == "minhash":
+            index = dedup.minhash_signatures(old).selectExpr("id AS doc_id", "sig")
+            out = dedup.minhash_lsh_pairs(new, index_sigs=index if indexed else None)
+        else:
+            index = dedup.simhash_fingerprints(old)
+            out = dedup.simhash_pairs(new, index_fps=index if indexed else None)
     p = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in p and "SortMergeJoin" not in p
-    assert "BroadcastNestedLoopJoin" not in p
+    assert "Join" not in p and "CartesianProduct" not in p
+    assert "partial_collect_list" in p
     assert plans.has_partial_aggregation(out)
 
 

@@ -173,7 +173,7 @@ def test_minhash_incremental_equals_full_restricted(spark, tmp_path):
     dedup.minhash_signatures(old).selectExpr("id AS doc_id", "sig").write.parquet(idx_path)
     index = spark.read.parquet(idx_path)
 
-    inc = dedup.minhash_lsh_pairs_incremental(new, index, threshold=0.5)
+    inc = dedup.minhash_lsh_pairs(new, threshold=0.5, index_sigs=index)
     full = dedup.minhash_lsh_pairs(docs, threshold=0.5)
     full_touching_new = [
         (r["id_a"], r["id_b"], r["est_jaccard"])
@@ -380,7 +380,7 @@ def test_simhash_incremental_equals_full_restricted(spark, tmp_path):
     dedup.simhash_fingerprints(old).write.parquet(idx_path)
     index = spark.read.parquet(idx_path)
 
-    inc = dedup.simhash_pairs_incremental(new, index, max_hamming=12)
+    inc = dedup.simhash_pairs(new, max_hamming=12, index_fps=index)
     full = dedup.simhash_pairs(docs, max_hamming=12)
     want = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
@@ -504,7 +504,7 @@ def test_incremental_equivalence_boundary_shards(spark, cut_frac):
     new_ids = set(range(cut, n))
 
     mh_index = dedup.minhash_signatures(old).selectExpr("id AS doc_id", "sig")
-    inc = dedup.minhash_lsh_pairs_incremental(new, mh_index, threshold=0.5)
+    inc = dedup.minhash_lsh_pairs(new, threshold=0.5, index_sigs=mh_index)
     full = dedup.minhash_lsh_pairs(docs, threshold=0.5)
     want = sorted(
         (r["id_a"], r["id_b"], r["est_jaccard"]) for r in full.collect()
@@ -516,7 +516,7 @@ def test_incremental_equivalence_boundary_shards(spark, cut_frac):
         assert len(got) > 0  # non-vacuous where the shard holds dups
 
     sh_index = dedup.simhash_fingerprints(old)
-    inc_s = dedup.simhash_pairs_incremental(new, sh_index, max_hamming=12)
+    inc_s = dedup.simhash_pairs(new, max_hamming=12, index_fps=sh_index)
     full_s = dedup.simhash_pairs(docs, max_hamming=12)
     want_s = sorted(
         (r["id_a"], r["id_b"], r["hamming"]) for r in full_s.collect()

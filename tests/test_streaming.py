@@ -1828,3 +1828,21 @@ def test_anonymized_release_sink_random_splits_parity(spark, tmp_path):
             for r in pipeline.read_released_rows(spark, path).collect()
         )
         assert got == want, f"seed {seed}"
+
+
+def test_pipeline_import_loads_only_the_operators_it_uses():
+    """Importing the streaming pipeline loads `operators.windows` and
+    `operators.alerts` but not the rest of the operator library, so the
+    streaming driver does not carry pandas and pyarrow (the pandas-UDF
+    operators' imports) when no pandas UDF runs."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, cdc_pipeline_with_kafka_spark.streaming.pipeline\n"
+        "print(sorted(m.rsplit('.', 1)[1] for m in sys.modules"
+        " if m.startswith('cdc_pipeline_with_kafka_spark.operators.')))\n"
+        "print('pandas' in sys.modules, 'pyarrow' in sys.modules)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True).stdout
+    assert out.split("\n")[:2] == ["['alerts', 'windows']", "False False"]
